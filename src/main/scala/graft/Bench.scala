@@ -1,23 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // bench contract: local[32], shuffle.partitions=32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    System.setProperty("derby.system.home", "/tmp/graft_derby")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the default FileContext-based checkpoint manager forks a
-      // readlink/chmod subprocess per metadata op on the local scheme
-      // (no libhadoop.so); the FileSystem-based one stays in the JVM
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // untimed warmup: JIT + codegen infra + parquet footers/schemas, so
     // the first timed query isn't charged session startup costs
     Tables.names.foreach { n =>
@@ -62,13 +47,15 @@ object Bench {
       val times = (1 to reps).map { _ =>
         graft.operators.FixtureClock.reset()
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-        (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0,
-          graft.operators.FixtureClock.seconds)
+        val err = try { fn(spark, sfDir).count(); None }
+          catch { case e: Throwable => Some(e) }
+        (if (err.isEmpty) (System.nanoTime() - t0) / 1e9 else -1.0,
+          graft.operators.FixtureClock.seconds, err)
       }
       val best = times.minBy(_._1)
-      (name, if (times.exists(_._1 == -1.0)) -1.0 else best._1, loadAt,
-        if (times.exists(_._1 == -1.0)) 0.0 else best._2)
+      val err = times.flatMap(_._3).headOption
+      (name, if (err.isDefined) -1.0 else best._1, loadAt,
+        if (err.isDefined) 0.0 else best._2, err)
     }
     // 3-decimal rounding keeps the whole line inside the driver's stdout
     // tail window (full-precision doubles tripled its size and truncated
@@ -76,17 +63,22 @@ object Bench {
     // map but are EXCLUDED from the total and named explicitly instead
     def fmt(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + fmt(v) }
+    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     // per-query loadavg rides in the FULL artifact only (the compact
     // stdout line must stay inside the driver's tail window)
-    val loads = results.map { case (k, _, l, _) => s"\"" + k + "\":" + fmt(l) }
+    val loads = results.map { case (k, _, l, _, _) => s"\"" + k + "\":" + fmt(l) }
       .mkString("{", ",", "}")
     // self-reported fixture-build seconds (only gates that report one):
     // the engine side of those gates is wall - fixture
-    val fixtures = results.collect { case (k, _, _, f) if f > 0 =>
+    val fixtures = results.collect { case (k, _, _, f, _) if f > 0 =>
       s"\"" + k + "\":" + fmt(f) }.mkString("{", ",", "}")
-    val errors = results.collect { case (k, v, _, _) if v < 0 => s"\"" + k + "\"" }
+    val errors = results.collect { case (k, v, _, _, _) if v < 0 => s"\"" + k + "\"" }
+    // why each errored gate failed (full artifact only, like the loads)
+    val errorDetail = results.collect { case (k, _, _, _, Some(e)) =>
+      Harness.json(k) + ":" +
+        Harness.json(s"${e.getClass.getName}: ${e.getMessage}".take(200))
+    }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // 1-min system load at end of run: round-over-round totals on a
     // shared box swing 2-3x with co-tenant load — trend tooling should
@@ -94,7 +86,7 @@ object Bench {
     val load = fmt(java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage)
     val skipped = skip.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","errors":${errors.mkString("[", ",", "]")},"loadavg1m":$load,"queries":$qs,"query_loadavg":$loads,"fixture_s":$fixtures,"skipped":$skipped,"sf":"$sfDir","runs":$reps,"timing":"min_of_$reps"}"""
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","errors":${errors.mkString("[", ",", "]")},"loadavg1m":$load,"queries":$qs,"query_loadavg":$loads,"fixture_s":$fixtures,"error_detail":$errorDetail,"skipped":$skipped,"sf":"$sfDir","runs":$reps,"timing":"min_of_$reps"}"""
     println(line)
     // the driver keeps only the LAST 2000 chars of stdout and parses the
     // JSON line it finds there — the full 130-query line is ~3.5 KB and
@@ -108,7 +100,7 @@ object Bench {
     catch { case _: Throwable => }
     def fmt2(v: Double): String = BigDecimal(v)
       .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    val shortQs = results.map { case (k, v, _, _) =>
+    val shortQs = results.map { case (k, v, _, _, _) =>
       s"\"" + k.takeWhile(_ != '_') + "\":" + fmt2(v)
     }.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${fmt2(total)},"unit":"sec","errors":${errors.mkString("[", ",", "]")},"loadavg1m":$load,"queries":$shortQs,"sf":"$sfDir","runs":$reps,"timing":"min_of_$reps","names":"qNN prefixes of BENCH_FULL.json"}""")

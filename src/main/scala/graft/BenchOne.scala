@@ -10,16 +10,7 @@ import org.apache.spark.sql.SparkSession
   * run1 carries ~8-10 s of session warmup — adjudicate on run2/3. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    System.setProperty("derby.system.home", "/tmp/graft_derby")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val names = args(0).split(',').toSeq
     if (args.length > 2 && args(2) == "explain")
       names.foreach(n => SparkEntry.queries(n)(spark, args(1)).explain("formatted"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the physical plans of representative gate queries so plan
   * regressions (lost broadcasts, surprise cartesians, missing pushdown)
   * are visible at a glance. Usage: runMain graft.PlanAudit [sfDir] [q...] */
@@ -11,11 +9,7 @@ object PlanAudit {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q3_join_agg_topk", "q37_ngram_jaccard", "q42_knn_join",
         "q46_lsh_recall", "q81_graft_filter", "q89_agg_pushdown")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try println(SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan.toString)

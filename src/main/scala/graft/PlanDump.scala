@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -10,7 +10,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * ANALYZE, maintenance) run their expensive work as INNER actions and
   * return only a summary frame, so a dump of the returned DataFrame
   * alone would show a LocalTableScan; a QueryExecutionListener therefore
-  * captures every inner executed plan too, in execution order. Usage:
+  * captures every inner executed plan too, in execution order, with its
+  * duration on the header line. Usage:
   *   runMain graft.PlanDump <sfDir> <outDir> <suffix> q28 q37b ...
   * writes <outDir>/<gateName><suffix>.txt per gate.
   */
@@ -20,21 +21,13 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val wanted = args.drop(3).toSeq
-    System.setProperty("derby.system.home", "/tmp/graft_derby")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
 
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, String)]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        captured.add((funcName, qe.explainString(FormattedMode)))
+        captured.add((funcName, durationNs, qe.explainString(FormattedMode)))
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
@@ -48,30 +41,19 @@ object PlanDump {
             captured.clear()
             val df = SparkEntry.queries(name)(spark, sfDir)
             val finalPlan = df.queryExecution.explainString(FormattedMode)
-            // the listener bus delivers asynchronously. A fixed sleep
-            // silently dropped late inner executions on a loaded box —
-            // poll until the captured count has been stable for a quiet
-            // period instead (bounded, so a wedged bus can't hang the dump)
-            val deadline = System.currentTimeMillis() + 15000
-            var stableSince = System.currentTimeMillis()
-            var lastN = captured.size()
-            while (System.currentTimeMillis() < deadline &&
-                System.currentTimeMillis() - stableSince < 2000) {
-              Thread.sleep(100)
-              val n = captured.size()
-              if (n != lastN) { lastN = n; stableSince = System.currentTimeMillis() }
-            }
-            if (System.currentTimeMillis() >= deadline)
-              System.err.println(s"[plandump] $name: listener bus still active at " +
-                s"deadline; captured $lastN inner executions (may be incomplete)")
+            // the listener bus delivers asynchronously: every inner
+            // execution has posted its end event by now, so draining the
+            // bus hands all of them to the listener
+            ListenerBusDrain(spark.sparkContext)
             val sb = new StringBuilder
             sb.append(s"==== $name$suffix: inner executions (listener-captured, " +
               s"in order) then the returned DataFrame's plan ====\n")
             var i = 0
-            captured.forEach { kv =>
+            captured.forEach { case (action, durationNs, plan) =>
               i += 1
-              sb.append(s"\n---- inner execution #$i (action: ${kv._1}) ----\n")
-              sb.append(kv._2).append("\n")
+              sb.append(f"\n---- inner execution #$i (action: $action, " +
+                f"${durationNs / 1e9}%.3f s) ----\n")
+              sb.append(plan).append("\n")
             }
             sb.append(s"\n---- returned DataFrame ----\n").append(finalPlan).append("\n")
             java.nio.file.Files.write(java.nio.file.Paths.get(out),

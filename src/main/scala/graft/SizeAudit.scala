@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 
 import graft.format._
 import graft.format.Meta._
@@ -40,10 +38,7 @@ object SizeAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val table = if (args.length > 1) args(1) else "lineitem"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val dir = s"/tmp/graft_sizeaudit/$table"
     Tables.load(spark, sfDir, table).coalesce(1)
       .write.format("graft").mode("overwrite").save(dir)

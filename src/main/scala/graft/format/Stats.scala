@@ -1,6 +1,5 @@
 package graft.format
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -384,6 +383,14 @@ object Stats {
   sealed trait Prune extends Serializable
   final case class FilterPrune(f: Filter) extends Prune
 
+  /** graft's own removed-key summaries over ONE key column, named by
+    * `attribute`. A reader whose file spells that column differently
+    * (a pre-RENAME file) re-targets the summary with [[withAttribute]]. */
+  sealed trait KeyPrune extends Prune {
+    def attribute: String
+    def withAttribute(name: String): KeyPrune
+  }
+
   /** Prune-only predicate: "column ∈ <removed-key set>" for file-granular
     * DML, summarized UNBOUNDED as a fixed-resolution bucket bitmap over
     * the keys' value range (2^16 buckets, 8 KiB) — built by a
@@ -397,7 +404,8 @@ object Stats {
     * the chunk), never correctness. */
   final case class InKeyRange(attribute: String, base: Long, maxKey: Long,
       bucketWidth: Long, bits: Array[Long], empty: Boolean,
-      decimalScale: Int = -1) extends Prune {
+      decimalScale: Int = -1) extends KeyPrune {
+    def withAttribute(name: String): InKeyRange = copy(attribute = name)
     private def bucketOf(v: Long): Int =
       java.lang.Long.divideUnsigned(v - base, bucketWidth).toInt
     def mightIntersect(mn: Long, mx: Long): Boolean = {
@@ -427,7 +435,9 @@ object Stats {
     * no holes), but range disjointness is the common win on clustered
     * layouts. */
   final case class KeyBytesRange(attribute: String, lo: Array[Byte],
-      hi: Array[Byte], empty: Boolean) extends Prune
+      hi: Array[Byte], empty: Boolean) extends KeyPrune {
+    def withAttribute(name: String): KeyBytesRange = copy(attribute = name)
+  }
 
   object KeyBytesRange {
     /** Summarize a single-column STRING DataFrame of removed keys; None
@@ -465,7 +475,9 @@ object Stats {
     * unscaled values at different scales are incomparable, so a scale
     * mismatch means "no prune from this column", never a wrong skip. */
   final case class KeyDecimalRange(attribute: String, lo: Array[Byte],
-      hi: Array[Byte], scale: Int, empty: Boolean) extends Prune
+      hi: Array[Byte], scale: Int, empty: Boolean) extends KeyPrune {
+    def withAttribute(name: String): KeyDecimalRange = copy(attribute = name)
+  }
 
   object KeyDecimalRange {
     /** Summarize a single-column DECIMAL(p>18) DataFrame of removed

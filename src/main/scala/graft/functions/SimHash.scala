@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash over a token array (document fingerprint for near-dup
   * detection). Classic Charikar construction: each token is hashed to 64

@@ -193,7 +193,6 @@ object FormatOps {
   // format's aggregate must equal the parquet oracle — the "Spark
   // built-ins for interop" row of SURVEY §2.B.
   private val q86: Q = (s, d) => {
-    import s.implicits._
     val base = graftDir(d, "interop")
     val o = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -1234,8 +1233,7 @@ object FormatOps {
     // all-null-key inserts) pays the exact isEmpty probe.
     val krs = keys.map(k =>
       graft.format.Stats.keyPruneFull(eff0.select(col(k))))
-    if (krs.forall(_.rows == 0) &&
-        graft.sources.Prof.time("cdc.emptyCheck") { eff0.isEmpty }) return
+    if (krs.forall(_.rows == 0) && eff0.isEmpty) return
     val prune = {
       val fs = krs.flatMap(_.prune)
       Some(fs).filter(_.nonEmpty)
@@ -1884,7 +1882,10 @@ object FormatOps {
         case None => removed += rel
         case Some((_, bSize)) =>
           if (aSize != bSize) throw new IllegalStateException(s"$rel size drifted")
-          (aDvs.get(rel), bDvs.get(rel)) match {
+          // @unchecked: the checker can't see through guards, but the
+          // first case's x == y catches (None, None), so every input
+          // has a case
+          ((aDvs.get(rel), bDvs.get(rel)): @unchecked) match {
             case (x, y) if x == y => skipped += 1 // same blob (or none): unchanged
             case (a, Some(b)) => dvCompare += ((rel, a, b))
             case (Some(_), None) =>

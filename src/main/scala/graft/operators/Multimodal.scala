@@ -225,10 +225,6 @@ object Multimodal {
       ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
         ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
     }
-    private def u16(b: Array[Byte], off: Int): Int = {
-      if (off < 0 || off + 2 > b.length) fail(s"read past end at $off")
-      ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-    }
     private def u64(b: Array[Byte], off: Int): Long = {
       val hi = u32(b, off); val lo = u32(b, off + 4)
       if (hi > Int.MaxValue) fail("64-bit size beyond sane bounds")

@@ -379,8 +379,7 @@ object Generations {
     // double it (the exactly-once contract for at-least-once drivers)
     if (idempotencyKey.isDefined &&
         liveRewriteTag(conf, dir) == idempotencyKey) return
-    val nextGen = Prof.time("rw.prepareRewrite") {
-      prepareRewrite(s, dir, graceMs) } // entry sweep + allocation
+    val nextGen = prepareRewrite(s, dir, graceMs) // entry sweep + allocation
     // pin the source view for the publish's late-append fold
     val srcDir = GraftDataSource.resolveDataDir(conf, dir)
     // ONE listing serves both the partition-column probe and the table
@@ -391,11 +390,10 @@ object Generations {
     // SKIPPING a vanished file could silently drop a whole table from
     // the rewrite, so vanish is never ignored, only re-resolved.
     var attempt = 0
-    var listed = Prof.time("rw.list") {
-      GraftDataSource.listPartitionedFiles(conf, dir) }
+    var listed = GraftDataSource.listPartitionedFiles(conf, dir)
     var tableNames: Seq[String] = Seq.empty
     var probed = false
-    while (!probed) Prof.time("rw.tableProbe") {
+    while (!probed) {
       try {
         tableNames = GraftDataSource.inParallel(listed.map(_._1)) { f =>
           val r = graft.format.GraftFileReader.open(f.getFileSystem(conf), f)
@@ -416,7 +414,7 @@ object Generations {
     // stage under a unique tmp name; the publish below is one rename
     val staging = new Path(root, s"$nextGen.tmp-${java.util.UUID.randomUUID()}")
     claimStaging(conf, staging)
-    tableNames.foreach { t => Prof.time("rw.sparkWrite") {
+    tableNames.foreach { t =>
       // PIN the data read to the same listing the late-append fold
       // compares against: the lazy data-plane read otherwise lists at
       // job-run time and can absorb a file that lands between — which
@@ -426,20 +424,19 @@ object Generations {
       val layout = GraftDataSource.readBucketMarker(conf, dir, t)
       shapedWriter(df0, layout, targetFiles, t, writeOptions, partCols)
         .save(staging.toString)
-    } }
+    }
     // metadata a caller wants published ATOMICALLY with the generation
     // (e.g. the clustering record) is written into the staging dir here,
     // so it rides the publish rename — it can never land in a
     // generation some concurrent rewrite published in between
     beforePublish.foreach(_(conf, staging))
-    Prof.time("rw.publish") {
-      publishStaging(fs, conf, root, staging, nextGen, idempotencyKey, dir,
-        sourceView = Some((srcDir, listed.map(_._1.toUri.getPath).toSet))) }
+    publishStaging(fs, conf, root, staging, nextGen, idempotencyKey, dir,
+      sourceView = Some((srcDir, listed.map(_._1.toUri.getPath).toSet)))
     // stats lifecycle: a full rewrite either churned every row (DML —
     // the whole listing counts against each table's ANALYZE snapshot)
     // or preserved them all (compaction/clustering — re-anchor the byte
     // extrapolation so a 2× compaction doesn't halve row estimates)
-    if (rowChurning) Prof.time("rw.churn") {
+    if (rowChurning) {
       val total = GraftDataSource.inParallel(listed.map(_._1)) { p =>
         try p.getFileSystem(conf).getFileStatus(p).getLen catch {
           case _: Exception => 0L
@@ -472,8 +469,7 @@ object Generations {
         fs.getFileStatus(new Path(root, GraftDataSource.GenPointerName)).getModificationTime
       age >= grace
     }
-    val maxSurvivingIdx = Prof.time("prep.sweep") {
-      sweepDeadData(fs, root, liveIdx, lastSwapOld, grace) }
+    val maxSurvivingIdx = sweepDeadData(fs, root, liveIdx, lastSwapOld, grace)
     // A fresh PUBLISHED generation above the pointer is a concurrent
     // rewrite in its rename→swap window. Allocating past it while
     // reading the pointer view would derive gen N+1 from gen N−k and
@@ -718,7 +714,7 @@ object Generations {
     if (org.apache.spark.sql.SparkSession.getActiveSession.forall { ss =>
       try ss.conf.get("spark.graft.rewrite.statsManifest", "true").toBoolean
       catch { case _: IllegalArgumentException => true }
-    }) Prof.time("pub.statsManifest") {
+    }) {
       def walkOut(p: Path): Seq[(Path, Long)] =
         fs.listStatus(p).toSeq.flatMap { st =>
           if (st.isFile && st.getPath.getName.endsWith(".graft"))
@@ -837,8 +833,7 @@ object Generations {
     // work is complete but unreferencable, and going on to swap the
     // pointer would bless the WINNER's data as its own.
     val genPath = new Path(root, nextGen)
-    try Prof.time("pub.rename") {
-      AtomicPublish.renameNoClobber(conf, staging, genPath) }
+    try AtomicPublish.renameNoClobber(conf, staging, genPath)
     catch {
       case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException |
                 _: org.apache.hadoop.fs.PathExistsException) =>
@@ -860,7 +855,7 @@ object Generations {
     // is an offline operation by contract, and the loop is bounded.
     val ptr = new Path(root, GraftDataSource.GenPointerName)
     val myIdx = GraftDataSource.genIndex(nextGen).getOrElse(Int.MaxValue)
-    Prof.time("pub.pointerSwap") { casStoreFor(conf, dir) match {
+    casStoreFor(conf, dir) match {
       case Some(store) =>
         // rename-less stores: the forward-only convergence runs as a
         // true CAS loop — advance only from the observed value, stop
@@ -888,7 +883,7 @@ object Generations {
           if (cur >= myIdx) spins = -1 // converged: ours, or a newer superset
           else { AtomicPublish.text(conf, ptr, nextGen); spins += 1; Thread.sleep(1) }
         }
-    } }
+    }
     // Late-append fold: a plain append targets the LIVE view it resolved
     // BEFORE this swap, so anything that landed in the source view after
     // the rewrite's own listing would fall invisible the moment the
@@ -902,7 +897,7 @@ object Generations {
     // re-list; one visible after it sees the new pointer. Manifest-add
     // is monotone (only ever adds visibility), so the overwrite is safe
     // under concurrent readers.
-    sourceView.foreach { case (srcDir, known) => Prof.time("pub.lateAppendFold") {
+    sourceView.foreach { case (srcDir, known) =>
       try {
         // RAW physical walk, not the guarded listing: the pointer-
         // appeared / marker guards exist to protect READERS from
@@ -936,7 +931,7 @@ object Generations {
             GraftDataSource.writeCarryManifest(fs, genPath2, existing ++ add)
         }
       } catch { case _: java.io.IOException => } // best-effort: the appender's guard closes the gap
-    } }
+    }
     // deliberately NO deletion here: the superseded data (legacy loose
     // files or the previous gen dir) is invisible behind the pointer but
     // intact, so queries planned against it finish cleanly; a later
@@ -988,14 +983,13 @@ object Generations {
         liveRewriteTag(conf, dir) == idempotencyKey) return true
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
-    val nextGen = Prof.time("dml.prepareRewrite") {
-      prepareRewrite(s, dir, graceMs) } // entry sweep + allocation
+    val nextGen = prepareRewrite(s, dir, graceMs) // entry sweep + allocation
     // pin the source view for the publish's late-append fold
     var srcDir = GraftDataSource.resolveDataDir(conf, dir)
     // classification footer probes can race a concurrent append's
     // visibility re-home (file moved into the live gen dir between the
     // listing and the open): re-list and re-classify, bounded
-    var (listed, files) = Prof.time("dml.list+classify") {
+    var (listed, files) = {
       var attempt = 0
       var out: Option[(Seq[(Path, Long, Map[String, String])], Seq[DmlFile])] = None
       while (out.isEmpty) {
@@ -1039,31 +1033,24 @@ object Generations {
     // the full rewrite): route the rewritten rows through the bucketed
     // writer so carried and new files keep one provable layout
     val layout = GraftDataSource.readBucketMarker(conf, dir, table)
-    Prof.time("dml.sparkWrite") {
-      shapedWriter(out, layout, None, table, writeOptions, partCols)
-        .save(staging.toString)
-    }
+    shapedWriter(out, layout, None, table, writeOptions, partCols)
+      .save(staging.toString)
     // sibling tables' bucket markers live in the data dir — carry them
     // (the write above re-created at most this table's own)
-    Prof.time("dml.carryBucketMarkers") {
-      GraftDataSource.carryBucketMarkers(fs, conf, dir, staging) }
+    GraftDataSource.carryBucketMarkers(fs, conf, dir, staging)
     // everything untouched is carried by root-relative reference;
     // re-carried files keep their ORIGINAL location (flattened chains)
     // and their zone-map stats ride along, so the NEXT DML prunes them
     // with zero per-file I/O
-    Prof.time("dml.writeCarryManifest") {
-      GraftDataSource.writeCarryManifest(fs, staging,
-        carried.map(f =>
-          (GraftDataSource.relativePath(root, f.path), f.size, Some(f.statsJson))))
-    }
+    GraftDataSource.writeCarryManifest(fs, staging,
+      carried.map(f =>
+        (GraftDataSource.relativePath(root, f.path), f.size, Some(f.statsJson))))
     // carried files keep their delete vectors (the candidate read above
     // already applied DVs, so REWRITTEN files shed theirs — the
     // replacement holds live rows only); sibling tables' entries carry
-    Prof.time("dml.writeDvManifest") {
-      GraftDataSource.writeDvManifest(fs, staging,
-        GraftDataSource.carryDvEntries(fs, conf, dir,
-          candidates.map(f => GraftDataSource.relativePath(root, f.path)).toSet))
-    }
+    GraftDataSource.writeDvManifest(fs, staging,
+      GraftDataSource.carryDvEntries(fs, conf, dir,
+        candidates.map(f => GraftDataSource.relativePath(root, f.path)).toSet))
     // Optimistic-concurrency publish: losing the `gen-NNNNN` rename to a
     // concurrent rewrite is NOT fatal for a file-granular DML — the
     // staged output only depends on the candidate files' rows, so if the
@@ -1079,15 +1066,12 @@ object Generations {
     var attempts = 0
     while (true) {
       try {
-        Prof.time("dml.publish") {
-          publishStaging(fs, conf, root, staging, gen, idempotencyKey, dir,
-            keepStagingOnConflict = true,
-            sourceView = Some((srcDir, srcKnown)))
-        }
+        publishStaging(fs, conf, root, staging, gen, idempotencyKey, dir,
+          keepStagingOnConflict = true,
+          sourceView = Some((srcDir, srcKnown)))
         // stats lifecycle: the candidate files' rows were rewritten —
         // their bytes count against the ANALYZE snapshot's churn budget
-        Prof.time("dml.recordChurn") {
-          GraftDataSource.recordChurn(s, dir, table, candidates.map(_.size).sum) }
+        GraftDataSource.recordChurn(s, dir, table, candidates.map(_.size).sum)
         return true
       } catch {
         case e: GenerationConflictException =>
@@ -1225,11 +1209,11 @@ object Generations {
           val abs = abs0 -- partCols - GraftDataSource.FileColName
           Stats.canSkipAbsent(tfs.head, abs) ||
             Stats.canSkipChunkPrune(Stats.FilterPrune(tfs.head), t)
-        case kr: Stats.InKeyRange =>
+        case kr: Stats.KeyPrune =>
           Evolution.fileAttrName(dec, t.schema, kr.attribute) match {
             case Some(n) =>
               Stats.canSkipChunkPrune(
-                if (n == kr.attribute) kr else kr.copy(attribute = n), t)
+                if (n == kr.attribute) kr else kr.withAttribute(n), t)
             case None =>
               // declared leaf the file predates (and not a path-valued
               // column): its keys read all-null there, and null is never

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-
 import ConditionalPut.{Committed, Etag, ObjectStore, PutOutcome, Rejected, Unknown}
 
 /** Native-precondition object-store clients: the production half of the

@@ -1,6 +1,6 @@
 package graft.format
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path

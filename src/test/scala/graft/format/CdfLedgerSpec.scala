@@ -84,7 +84,6 @@ class CdfLedgerSpec extends SparkSpec {
     // an OVER-CAP batch (distinct keys > 1000, so the sketch can't see
     // the dup) with one duplicated key must still refuse through the
     // full groupBy fallback
-    import org.apache.spark.sql.functions.{col, lit}
     intercept[IllegalArgumentException] {
       FormatOps.upsert(spark, dir, "data",
         spark.range(0, 2000).selectExpr("id + 100 AS id", "'z' AS v")

@@ -26,7 +26,6 @@ class RoundTripSpec extends SparkSpec {
   }
 
   test("primitives + strings round-trip with nulls") {
-    import spark.implicits._
     val df = spark.range(0, 1000).select(
       col("id"),
       (col("id") % 128).cast("tinyint").as("b"),

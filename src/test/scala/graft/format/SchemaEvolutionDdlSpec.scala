@@ -3,7 +3,6 @@ package graft.format
 import java.nio.file.Files
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** RENAME / DROP COLUMN and widening ALTER COLUMN TYPE — metadata-only
   * DDL over the declared-schema marker ([[Evolution]]): files written

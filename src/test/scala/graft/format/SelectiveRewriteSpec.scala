@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
 import graft.operators.FormatOps
-import graft.sources.{Generations, GraftDataSource}
+import graft.sources.GraftDataSource
 
 /** File-granular copy-on-write DML: a small upsert/delete rewrites only
   * the files that can hold touched rows and carries the rest by
@@ -252,7 +252,6 @@ class SelectiveRewriteSpec extends SparkSpec {
       .write.format("graft").mode("overwrite").save(dir)
     val before = fileState(dir)
     assert(before.size == 16)
-    import spark.implicits._
     // 5000 distinct keys scattered over [0, 5000): five files' ranges,
     // none of the other eleven
     val batch = spark.range(0, 5000)

@@ -80,7 +80,7 @@ class SqlRowLevelSpec extends SparkSpec {
   }
 
   test("_file metadata column: constant per file, group-by audits layout") {
-    val root = mkCatalog("rl_file")
+    mkCatalog("rl_file")
     spark.range(0, 4000).selectExpr("id AS k", "id % 3 AS v")
       .repartitionByRange(4, col("id"))
       .createOrReplaceTempView("rl_file_src")

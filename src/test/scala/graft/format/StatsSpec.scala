@@ -111,7 +111,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("chunk skipping actually skips: one batch decoded for a tail range") {
-    import graft.sources.{GraftInputPartition, GraftPartitionReader}
+    import graft.sources.GraftPartitionReader
     val dir = writeSorted(1000) // 10 chunks of disjoint id ranges
     val file = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".graft")).head
     val hp = new Path(file.toString)

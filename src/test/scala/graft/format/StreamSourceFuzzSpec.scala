@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import scala.util.Random
 
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.FormatOps

@@ -4,7 +4,6 @@ import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -12,8 +11,6 @@ import graft.SparkSpec
   * since the last publish was a scheduled task for every filtered scan
   * until the next DML/compaction). */
 class AppendStatsSpec extends SparkSpec {
-  private val conf = new Configuration()
-
   private def scheduledFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>

@@ -26,13 +26,16 @@ class DmlRenamePruneSpec extends SparkSpec {
       new Path(dir).getFileSystem(conf), new Path(dir, gen)).size
   }
 
-  private def seed(cat: String, ranged: Int = 4): String = {
+  /** Table `t` of 40,000 rows (id BIGINT, v vType), range-clustered on
+    * v = vOf(id) into `ranged` files. */
+  private def seed(cat: String, ranged: Int = 4, vType: String = "BIGINT",
+      vOf: String = "id"): String = {
     val root = Files.createTempDirectory(s"graft-dmlren-$cat").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, v BIGINT) USING graft")
-    spark.range(0, 40000).selectExpr("id", "id AS v")
+    spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, v $vType) USING graft")
+    spark.range(0, 40000).selectExpr("id", s"$vOf AS v")
       .repartitionByRange(ranged, col("v")).sortWithinPartitions("v")
       .writeTo(s"$cat.db.t").append()
     root
@@ -115,5 +118,32 @@ class DmlRenamePruneSpec extends SparkSpec {
       .isin(5000L, 15000L, 35000L)).count() == 0L)
     assert(t.agg(sum("k3")).head().getLong(0) ==
       (0L until 40000L).sum - 5000L - 15000L - 35000L)
+  }
+
+  // Past the 1000-key IN-list cap a STRING key summarizes to a
+  // KeyBytesRange and a DECIMAL(p>18) key to a KeyDecimalRange. On a
+  // marker-carrying table both must resolve through the rename chain
+  // exactly like InKeyRange; classification once had no case for them
+  // and threw a MatchError.
+  for ((kind, vType, vOf) <- Seq(
+      ("STRING", "STRING", "format_string('k%08d', id)"),
+      ("DECIMAL(38)", "DECIMAL(38,0)", "CAST(CAST(id AS DECIMAL(18,0)) * " +
+        "CAST('100000000000000000000' AS DECIMAL(21,0)) AS DECIMAL(38,0))"));
+      renamed <- Seq(false, true)) {
+    val where = if (renamed) "after a key rename" else "on a catalog table"
+    test(s"a 5000-key $kind upsert $where carries untouched files") {
+      val cat = s"graft_drk_${vType.take(3).toLowerCase}_$renamed"
+      val root = seed(cat, ranged = 16, vType = vType, vOf = vOf)
+      val key = if (renamed) "val" else "v"
+      if (renamed) spark.sql(s"ALTER TABLE $cat.db.t RENAME COLUMN v TO val")
+      graft.operators.FormatOps.upsert(spark, s"$root/db", "t",
+        spark.range(0, 5000).selectExpr("-1L AS id", s"$vOf AS $key"), Seq(key))
+      val t = spark.table(s"$cat.db.t")
+      assert(t.count() == 40000L)
+      assert(t.filter(col("id") === -1L).count() == 5000L)
+      // keys [0, 5000) live in the first 2-3 of 16 range-clustered files
+      assert(carryCount(s"$root/db") >= 12,
+        s"a $kind fold must carry the files its key range misses")
+    }
   }
 }

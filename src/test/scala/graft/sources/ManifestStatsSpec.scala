@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{In, LessThan}
+import org.apache.spark.sql.sources.In
 
 import graft.SparkSpec
 import graft.operators.FormatOps

@@ -4,7 +4,6 @@ import java.util.concurrent.{CyclicBarrier, TimeUnit}
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Optimistic concurrency for file-granular DML commits: two racing
   * rewrites on DISJOINT footprints must BOTH commit (the loser rebases

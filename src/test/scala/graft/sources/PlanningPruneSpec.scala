@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
@@ -15,8 +14,6 @@ import graft.SparkSpec
   * when every kept file is manifest-covered. */
 class PlanningPruneSpec extends SparkSpec {
   import spark.implicits._
-
-  private def conf = new Configuration()
 
   /** Range-clustered multi-file table + one DML so a stats-carrying
     * manifest exists for the carried files. */

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.format.OliveFormatException
-import org.apache.hadoop.fs.Path
 
 /** The requireTargets guard in [[Generations.rewriteFiles]] exists for
   * callers that selected their target set from metadata read BEFORE the
