@@ -105,10 +105,13 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     * index put to work (page coverage tracked by cumulative rawSize,
     * which the footer parser already validated to sum exactly).
     * Returns (bytes, byteOffsetOfFirstDecodedPage): the caller rebases
-    * its element arithmetic by the second component. */
+    * its element arithmetic by the second component. A range spanning
+    * the whole buffer is [[readBuffer]]: every page, the empty page of a
+    * zero-byte buffer included, so a whole-chunk decode verifies it. */
   def readBufferRange(bm: BufferMeta, byte0: Long, byte1: Long): (Array[Byte], Long) = {
     if (byte0 < 0 || byte1 < byte0 || byte1 > bm.rawSize)
       throw new OliveFormatException(s"buffer range [$byte0,$byte1) outside ${bm.rawSize}")
+    if (byte0 == 0 && byte1 == bm.rawSize) return (readBuffer(bm), 0L)
     var cum = 0L
     var firstStart = -1L
     var need = 0L
@@ -122,7 +125,7 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
       }
       cum = end
     }
-    if (firstStart < 0) firstStart = 0 // empty range
+    if (firstStart < 0) firstStart = byte0 // empty range
     if (need > (1L << 30))
       throw new OliveFormatException(s"buffer range too large: $need")
     val out = new Array[Byte](need.toInt)
@@ -141,9 +144,6 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     (out, firstStart)
   }
 
-  /** Decode one table of one chunk into a ColumnarBatch holding exactly
-    * the `required` columns (column pruning: unneeded column subtrees are
-    * never read from disk — their pages are simply skipped). */
   /** Claimed element count implied by a column's own buffer metadata, or
     * -1 if the type stores no per-element evidence. Checked BEFORE any
     * vector allocation so a lying footer can't force a huge reserve. */
@@ -212,7 +212,7 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     case _ => -1L
   }
 
-  private def checkCount(meta: ColMeta, dt: DataType, n: Int, what: String): Unit = (meta, dt) match {
+  private def checkCount(meta: ColMeta, dt: DataType, n: Long, what: String): Unit = (meta, dt) match {
     // struct children each hold exactly n slots (null structs keep
     // children aligned): check every child directly so offset-bearing
     // children get the i64-dialect escape below — a min-over-children
@@ -231,21 +231,38 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
         s"$what claims $n elements but buffers imply $implied")
   }
 
-  def decodeTable(chunk: ChunkMeta, table: TableMeta, required: StructType): ColumnarBatch = {
-    val n = table.numRows
-    if (n < 0 || n > (1 << 28))
-      throw new OliveFormatException(s"chunk row count $n out of range")
-    lazy val dict20 = readBuffer(chunk.dict20.data)
-    lazy val dict32 = readBuffer(chunk.dict32.data)
+  /** Decode one table of one chunk into a ColumnarBatch holding exactly
+    * the `required` columns (column pruning: unneeded column subtrees are
+    * never read from disk — their pages are simply skipped). The whole
+    * chunk is the row range [0, numRows) of [[decodeTableRange]]. */
+  def decodeTable(chunk: ChunkMeta, table: TableMeta, required: StructType): ColumnarBatch =
+    decodeTableRange(chunk, table, required, 0, table.numRows)
+
+  /** Decode rows [row0, row1) of a table, touching only the pages that
+    * overlap the range — the sub-chunk read the reference's per-page
+    * `row_index_ends` was designed for but never used. Drives pushed
+    * LIMITs (prefix ranges) and selective point/tail lookups: a 128Ki-row
+    * chunk with 1 MiB pages serves a tail read from its last page(s),
+    * not a full-chunk decode. */
+  def decodeTableRange(chunk: ChunkMeta, table: TableMeta, required: StructType,
+      row0: Int, row1: Int): ColumnarBatch = {
+    val total = table.numRows
+    if (total < 0 || total > (1 << 28))
+      throw new OliveFormatException(s"chunk row count $total out of range")
+    if (row0 < 0 || row1 < row0 || row1 > total)
+      throw new OliveFormatException(s"row range [$row0,$row1) outside $total")
+    val n = row1 - row0
     // validate the claimed row count against every required column's own
     // buffer evidence BEFORE any vector allocation: a lying numRows must
     // raise OliveFormatException, not OOM the executor on reserve()
     required.fields.foreach { f =>
       val cidx = Evolution.fileFieldIndex(table.schema, f)
       if (cidx >= 0)
-        checkCount(table.columns(cidx), table.schema.fields(cidx).dataType, n,
+        checkCount(table.columns(cidx), table.schema.fields(cidx).dataType, total,
           s"column ${f.name}")
     }
+    lazy val dict20 = readBuffer(chunk.dict20.data)
+    lazy val dict32 = readBuffer(chunk.dict32.data)
     val vectors: Array[ColumnVector] = required.fields.map { f =>
       val vec = new OnHeapColumnVector(math.max(n, 1), f.dataType)
       // resolve through the rename chain: a file written before an
@@ -258,20 +275,18 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
           // physical width, then promote into the requested vector
           val tmp = new OnHeapColumnVector(math.max(n, 1), fileDt)
           try {
-            decodeCol(tmp, table.columns(idx), fileDt, fileDt, n,
-              chunk, dict20 _, dict32 _)
+            decodeColRange(tmp, table.columns(idx), fileDt, fileDt,
+              row0, row1, total.toLong, chunk, dict20 _, dict32 _)
             widenCopy(tmp, vec, fileDt, f.dataType, n)
           } finally tmp.close()
-        } else decodeCol(vec, table.columns(idx), fileDt, f.dataType, n,
-          chunk, dict20 _, dict32 _)
+        } else decodeColRange(vec, table.columns(idx), fileDt, f.dataType,
+          row0, row1, total.toLong, chunk, dict20 _, dict32 _)
       } else if (f.nullable) {
         // schema drift: an older file predates this column — read nulls,
         // the same contract parquet gives evolving datasets
         vec.putNulls(0, n)
-      } else {
-        throw new OliveFormatException(
-          s"non-nullable column ${f.name} missing from file table ${table.name}")
-      }
+      } else throw new OliveFormatException(
+        s"non-nullable column ${f.name} missing from file table ${table.name}")
       vec
     }.toArray
     new ColumnarBatch(vectors, n)
@@ -306,18 +321,6 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     }
   }
 
-  private def applyValidity(vec: WritableColumnVector, v: Option[BufferMeta], n: Int): Unit =
-    v.foreach { bm =>
-      val bits = readBuffer(bm)
-      if (bits.length < (n + 7) / 8)
-        throw new OliveFormatException(s"validity bitmap too short: ${bits.length} for $n rows")
-      var i = 0
-      while (i < n) {
-        if ((bits(i >> 3) & (1 << (i & 7))) == 0) vec.putNull(i)
-        i += 1
-      }
-    }
-
   /** Offsets entry width for a buffer holding `n`+1 entries: 4 (i32,
     * the default) or 8 (the `graft.largeOffsets` i64 dialect — olive's
     * large_binary/large_list, ref `src/read.zig:719-754`, which the
@@ -328,247 +331,12 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     else throw new OliveFormatException(
       s"offsets buffer $rawSize matches neither i32 nor i64 for ${n + 1} entries")
 
-  private def readOffsets(bm: BufferMeta, n: Int, maxEnd: Long): Array[Int] = {
-    val w = offsetsWidth(bm.rawSize, n)
-    val bytes = readBuffer(bm)
-    val bb = Bytes.le(bytes)
-    val out = new Array[Int](n + 1)
-    var i = 0
-    var prev = 0L
-    while (i <= n) {
-      val o = if (w == 4) bb.getInt(i * 4).toLong else bb.getLong(i * 8)
-      if (o < prev) throw new OliveFormatException(s"offsets not monotonic at $i")
-      // i64 entries above the JVM single-array cap can't materialize in
-      // a column vector: reject cleanly, never wrap into a negative Int
-      if (o > Int.MaxValue) throw new OliveFormatException(
-        s"offset $o exceeds the JVM 2 GiB buffer cap")
-      out(i) = o.toInt
-      prev = o
-      i += 1
-    }
-    if (out(0) != 0) throw new OliveFormatException("offsets not rebased to 0")
-    if (out(n) > maxEnd) throw new OliveFormatException(s"offsets end ${out(n)} > data $maxEnd")
-    out
-  }
-
-  /** `fileDt` is the type the FILE stores (drives layout/width); `dt` is
-    * what the scan requests. They differ only under nested schema
-    * pruning, where a requested struct holds a SUBSET of the file
-    * struct's fields — matched by name below. */
-  private def decodeCol(vec: WritableColumnVector, meta: ColMeta, fileDt: DataType,
-      dt: DataType, n: Int,
-      chunk: ChunkMeta, dict20: () => Array[Byte], dict32: () => Array[Byte]): Unit = {
-    checkCount(meta, fileDt, n, s"column of $fileDt") // before any allocation
-    vec.reserve(math.max(n, 1))
-    applyValidity(vec, meta.validity, n)
-    (meta, dt) match {
-      case (PrimitiveMeta(_, values), _) =>
-        fillPrimitive(vec, readBuffer(values), dt, n)
-      case (ForMeta(_, base, width, values), _) =>
-        // expand unsigned narrow deltas back to the logical width, then
-        // take the same bulk little-endian fill path as plain primitives
-        val elemSize = dt match {
-          case IntegerType | DateType | _: YearMonthIntervalType => 4
-          case LongType | TimestampType | TimestampNTZType | _: DayTimeIntervalType => 8
-          case d: DecimalType if d.precision <= 18 => 8 // unscaled i64
-          case other => throw new OliveFormatException(s"FOR encoding on non-integral $other")
-        }
-        fillPrimitive(vec, expandFor(base, width, readBuffer(values), n, elemSize), dt, n)
-      case (BitPackMeta(_, base, bits, values), _) =>
-        val elemSize = dt match {
-          case IntegerType | DateType | _: YearMonthIntervalType => 4
-          case LongType | TimestampType | TimestampNTZType | _: DayTimeIntervalType => 8
-          case d: DecimalType if d.precision <= 18 => 8 // unscaled i64
-          case other => throw new OliveFormatException(s"bit-pack encoding on non-integral $other")
-        }
-        fillPrimitive(vec, expandBitPack(base, bits, values, 0L, n.toLong, elemSize), dt, n)
-      case (ReeMeta(_, endsBuf, valsBuf), _) =>
-        fillPrimitive(vec, expandRee(endsBuf, valsBuf, dt, 0L, n.toLong), dt, n)
-      case (PrimDictMeta(_, numEntries, idxW, entriesBuf, idxBuf), _) =>
-        fillPrimitive(vec,
-          expandPrimDict(numEntries, idxW, readBuffer(entriesBuf), readBuffer(idxBuf), dt, n),
-          dt, n)
-      case (DeltaMeta(_, first, width, deltasBuf, _), _) =>
-        fillPrimitive(vec, expandDelta(first, width, readBuffer(deltasBuf), dt, 0L, n.toLong), dt, n)
-      case (ScaledMeta(_, exponent, BitPackMeta(None, base, bits, values)), DoubleType) =>
-        // fused fast path: ALP-scaled decimals over bit-packed ints are
-        // the hottest decode in a lineitem scan (stack-sampled); unpack
-        // and divide in ONE loop, no intermediate 8n-byte buffer
-        fillScaledBitPack(vec, exponent, base, bits, values, n, toFloat = false)
-      case (ScaledMeta(_, exponent, BitPackMeta(None, base, bits, values)), FloatType) =>
-        fillScaledBitPack(vec, exponent, base, bits, values, n, toFloat = true)
-      case (ScaledMeta(_, exponent, inner), _) =>
-        fillScaled(vec, dt, exponent, scaledLongs(inner, 0L, n.toLong), n)
-      case (UnsignedPackedMeta(_, logical, inner), _) =>
-        if (dt != Logical.sparkType(logical))
-          throw new OliveFormatException(
-            s"${Logical.name(logical)} column requires ${Logical.sparkType(logical)}, scan asked $dt")
-        fillUnsignedWide(vec, logical, scaledLongs(inner, 0L, n.toLong), n)
-      case (UnsignedMeta(_, logical, values), _) =>
-        // narrow unsigned/half storage → widened Spark type (Logical)
-        if (dt != Logical.sparkType(logical))
-          throw new OliveFormatException(
-            s"${Logical.name(logical)} column requires ${Logical.sparkType(logical)}, scan asked $dt")
-        val elemSize = Logical.elemSize(logical)
-        val bytes = readBuffer(values)
-        if (bytes.length < n.toLong * elemSize)
-          throw new OliveFormatException(s"unsigned buffer ${bytes.length} < ${n.toLong * elemSize}")
-        val bb = Bytes.le(bytes)
-        var i = 0
-        logical match {
-          case Logical.U8 =>
-            while (i < n) { vec.putShort(i, (bb.get(i) & 0xff).toShort); i += 1 }
-          case Logical.U16 =>
-            while (i < n) { vec.putInt(i, bb.getShort(i * 2) & 0xffff); i += 1 }
-          case Logical.U32 =>
-            while (i < n) { vec.putLong(i, bb.getInt(i * 4) & 0xffffffffL); i += 1 }
-          case Logical.U64 =>
-            while (i < n) {
-              if (!vec.isNullAt(i)) putU64Decimal(vec, i, bb.getLong(i * 8))
-              i += 1
-            }
-          case Logical.F16 =>
-            while (i < n) { vec.putFloat(i, Half.toFloat(bb.getShort(i * 2))); i += 1 }
-          case other => throw new OliveFormatException(s"bad logical code $other")
-        }
-      case (DictIdxMeta(_, w, idxBuf), BinaryType) =>
-        val dictMeta = if (w == 20) chunk.dict20 else chunk.dict32
-        val dict = if (w == 20) dict20() else dict32()
-        val idxBytes = readBuffer(idxBuf)
-        if (idxBytes.length != n * 4L)
-          throw new OliveFormatException(s"dict index buffer ${idxBytes.length} != ${n * 4L}")
-        val bb = Bytes.le(idxBytes)
-        // dictionary-backed decode: the child data is the dict itself
-        // (ONE copy of the dict per chunk), each row just records
-        // (idx*w, w) — no per-row value copying, 4x+ cheaper than
-        // expanding 20/32-byte values per row.
-        val child = vec.arrayData()
-        child.reserve(dict.length)
-        child.putBytes(0, dict.length, dict, 0)
-        var i = 0
-        while (i < n) {
-          if (!vec.isNullAt(i)) {
-            val idx = bb.getInt(i * 4)
-            // unsigned bounds check, like the reference (`src/read.zig:756-788`)
-            if (idx < 0 || idx >= dictMeta.numEntries)
-              throw new OliveFormatException(s"dict index $idx out of ${dictMeta.numEntries}")
-            vec.putArray(i, idx * w, w)
-          } else vec.putArray(i, 0, 0)
-          i += 1
-        }
-      case (BinDictMeta(_, numEntries, idxW, dOffBuf, dDataBuf, idxBuf), StringType | BinaryType) =>
-        val dictData = readBuffer(dDataBuf)
-        val dictOffs = readOffsets(dOffBuf, numEntries, dictData.length)
-        val idxBytes = readBuffer(idxBuf)
-        if (idxBytes.length != n.toLong * idxW)
-          throw new OliveFormatException(s"dict index buffer ${idxBytes.length} != ${n.toLong * idxW}")
-        val bb = Bytes.le(idxBytes)
-        // dictionary-backed: child data is the dict, rows are (offset, len)
-        val child = vec.arrayData()
-        child.reserve(dictData.length)
-        child.putBytes(0, dictData.length, dictData, 0)
-        var i = 0
-        while (i < n) {
-          if (!vec.isNullAt(i)) {
-            val idx = dictIdxAt(bb, i, idxW)
-            if (idx < 0 || idx >= numEntries)
-              throw new OliveFormatException(s"string dict index $idx out of $numEntries")
-            vec.putArray(i, dictOffs(idx), dictOffs(idx + 1) - dictOffs(idx))
-          } else vec.putArray(i, 0, 0)
-          i += 1
-        }
-      case (BinaryMeta(_, offBuf, dataBuf), StringType | BinaryType) =>
-        val data = readBuffer(dataBuf)
-        val offs = readOffsets(offBuf, n, data.length)
-        // bulk path: one memcpy of the whole data buffer into the child,
-        // then per-row (offset, length) bookkeeping — offsets are already
-        // rebased to 0, so they index the child directly.
-        val child = vec.arrayData()
-        child.reserve(data.length)
-        child.putBytes(0, data.length, data, 0)
-        var i = 0
-        while (i < n) {
-          if (!vec.isNullAt(i)) vec.putArray(i, offs(i), offs(i + 1) - offs(i))
-          else vec.putArray(i, offs(i), 0)
-          i += 1
-        }
-      case (ListMeta(_, offBuf, childMeta), ArrayType(et, _)) =>
-        val fileEt = fileDt match {
-          case ArrayType(fe, _) => fe
-          case other => throw new OliveFormatException(s"file type $other for requested array")
-        }
-        // the claimed end offset sizes the child's allocation: bound it by
-        // the child's own buffer evidence (or the hard cap) first
-        val childEv = impliedCount(childMeta, fileEt)
-        val offs = readOffsets(offBuf, n, if (childEv >= 0) childEv else MaxElems)
-        val childCount = offs(n)
-        val child = vec.getChild(0)
-        decodeCol(child, childMeta, fileEt, et, childCount, chunk, dict20, dict32)
-        var i = 0
-        while (i < n) { vec.putArray(i, offs(i), offs(i + 1) - offs(i)); i += 1 }
-      case (StructMeta(_, children), st: StructType) =>
-        val fileSt = fileDt match {
-          case fs: StructType => fs
-          case other => throw new OliveFormatException(s"file type $other for requested struct")
-        }
-        if (children.size != fileSt.size)
-          throw new OliveFormatException("struct children mismatch")
-        // nested schema pruning requests a SUBSET of the file's fields;
-        // nested DDL resolves through rename chains and widens leaves,
-        // same contract as top-level decodeTable
-        var c = 0
-        while (c < st.size) {
-          val f = st.fields(c)
-          val idx = Evolution.fileFieldIndex(fileSt, f)
-          if (idx >= 0) {
-            val fdt = fileSt.fields(idx).dataType
-            if (fdt != f.dataType && Evolution.widens(fdt, f.dataType)) {
-              val tmp = new OnHeapColumnVector(math.max(n, 1), fdt)
-              try {
-                decodeCol(tmp, children(idx), fdt, fdt, n, chunk, dict20, dict32)
-                widenCopy(tmp, vec.getChild(c), fdt, f.dataType, n)
-              } finally tmp.close()
-            } else decodeCol(vec.getChild(c), children(idx), fdt,
-              f.dataType, n, chunk, dict20, dict32)
-          } else if (f.nullable) {
-            vec.getChild(c).reserve(math.max(n, 1))
-            vec.getChild(c).putNulls(0, n)
-          } else throw new OliveFormatException(
-            s"non-nullable struct field ${f.name} missing from file")
-          c += 1
-        }
-      case (MapMeta(_, offBuf, keyMeta, valMeta), MapType(kt, vt, _)) =>
-        val (fileKt, fileVt) = fileDt match {
-          case MapType(fk, fv, _) => (fk, fv)
-          case other => throw new OliveFormatException(s"file type $other for requested map")
-        }
-        val kEv = impliedCount(keyMeta, fileKt)
-        val vEv = impliedCount(valMeta, fileVt)
-        val ev = Seq(kEv, vEv).filter(_ >= 0).minOption.getOrElse(MaxElems)
-        val offs = readOffsets(offBuf, n, ev)
-        val entries = offs(n)
-        decodeCol(vec.getChild(0), keyMeta, fileKt, kt, entries, chunk, dict20, dict32)
-        decodeCol(vec.getChild(1), valMeta, fileVt, vt, entries, chunk, dict20, dict32)
-        var i = 0
-        while (i < n) { vec.putArray(i, offs(i), offs(i + 1) - offs(i)); i += 1 }
-      case (m, t) =>
-        throw new OliveFormatException(s"column meta ${m.getClass.getSimpleName} does not match type $t")
-    }
-  }
-
   private def fillPrimitive(vec: WritableColumnVector, bytes: Array[Byte],
       dt: DataType, n: Int): Unit = {
     def needLen(want: Long): Unit =
       if (bytes.length < want)
         throw new OliveFormatException(s"values buffer ${bytes.length} < $want")
     dt match {
-      case BooleanType =>
-        needLen((n + 7) / 8)
-        var i = 0
-        while (i < n) {
-          vec.putBoolean(i, (bytes(i >> 3) & (1 << (i & 7))) != 0)
-          i += 1
-        }
       case ByteType => needLen(n); vec.putBytes(0, n, bytes, 0)
       case ShortType => needLen(n * 2L); vec.putShorts(0, n, bytes, 0)
       case IntegerType | DateType | _: YearMonthIntervalType =>
@@ -615,64 +383,9 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
           micros.putLong(i, bb.getLong(i * 16 + 8))
           i += 1
         }
-      case BinaryType => // fixed-width, non-dict
-        if (n > 0) {
-          if (bytes.length % n != 0)
-            throw new OliveFormatException(s"fixed binary buffer ${bytes.length} % $n != 0")
-          val w = bytes.length / n
-          var i = 0
-          while (i < n) { vec.putByteArray(i, bytes, i * w, w); i += 1 }
-        }
       case other =>
         throw new OliveFormatException(s"primitive meta does not match type $other")
     }
-  }
-
-  // ---- row-range decode (page-level skipping) -----------------------------
-
-  /** Decode rows [row0, row1) of a table, touching only the pages that
-    * overlap the range — the sub-chunk read the reference's per-page
-    * `row_index_ends` was designed for but never used. Drives pushed
-    * LIMITs (prefix ranges) and selective point/tail lookups: a 128Ki-row
-    * chunk with 1 MiB pages serves a tail read from its last page(s),
-    * not a full-chunk decode. */
-  def decodeTableRange(chunk: ChunkMeta, table: TableMeta, required: StructType,
-      row0: Int, row1: Int): ColumnarBatch = {
-    val total = table.numRows
-    if (row0 < 0 || row1 < row0 || row1 > total)
-      throw new OliveFormatException(s"row range [$row0,$row1) outside $total")
-    if (total < 0 || total > (1 << 28))
-      throw new OliveFormatException(s"chunk row count $total out of range")
-    val n = row1 - row0
-    required.fields.foreach { f =>
-      val cidx = Evolution.fileFieldIndex(table.schema, f)
-      if (cidx >= 0)
-        checkCount(table.columns(cidx), table.schema.fields(cidx).dataType, total,
-          s"column ${f.name}")
-    }
-    lazy val dict20 = readBuffer(chunk.dict20.data)
-    lazy val dict32 = readBuffer(chunk.dict32.data)
-    val vectors: Array[ColumnVector] = required.fields.map { f =>
-      val vec = new OnHeapColumnVector(math.max(n, 1), f.dataType)
-      // rename-chain resolution + widen, mirroring decodeTable
-      val idx = Evolution.fileFieldIndex(table.schema, f)
-      if (idx >= 0) {
-        val fileDt = table.schema.fields(idx).dataType
-        if (fileDt != f.dataType && Evolution.widens(fileDt, f.dataType)) {
-          val tmp = new OnHeapColumnVector(math.max(n, 1), fileDt)
-          try {
-            decodeColRange(tmp, table.columns(idx), fileDt, fileDt,
-              row0, row1, total.toLong, chunk, dict20 _, dict32 _)
-            widenCopy(tmp, vec, fileDt, f.dataType, n)
-          } finally tmp.close()
-        } else decodeColRange(vec, table.columns(idx), fileDt, f.dataType,
-          row0, row1, total.toLong, chunk, dict20 _, dict32 _)
-      } else if (f.nullable) vec.putNulls(0, n)
-      else throw new OliveFormatException(
-        s"non-nullable column ${f.name} missing from file table ${table.name}")
-      vec
-    }.toArray
-    new ColumnarBatch(vectors, n)
   }
 
   /** Expand run-end-encoded (ends, values) into plain bytes for elements
@@ -681,14 +394,7 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     * only the expansion is range-bounded. */
   private def expandRee(endsBuf: BufferMeta, valsBuf: BufferMeta,
       dt: DataType, e0: Long, e1: Long): Array[Byte] = {
-    val es = dt match {
-      case ByteType => 1
-      case ShortType => 2
-      case IntegerType | DateType | FloatType | _: YearMonthIntervalType => 4
-      case LongType | TimestampType | TimestampNTZType | DoubleType | _: DayTimeIntervalType => 8
-      case d: DecimalType => if (d.precision <= 18) 8 else 16
-      case other => throw new OliveFormatException(s"REE on unsupported type $other")
-    }
+    val es = fixedElemSize(dt, "REE")
     val endBytes = readBuffer(endsBuf)
     if (endBytes.length % 4 != 0) throw new OliveFormatException("REE ends not i32-aligned")
     val runs = endBytes.length / 4
@@ -725,7 +431,7 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     * into plain bytes for `n` rows starting at the given index bytes. */
   private def expandPrimDict(numEntries: Int, idxW: Byte, entries: Array[Byte],
       idxBytes: Array[Byte], dt: DataType, n: Int): Array[Byte] = {
-    val es = primElemSize(dt)
+    val es = fixedElemSize(dt, "prim dict")
     if (numEntries <= 0 || entries.length != numEntries.toLong * es)
       throw new OliveFormatException(
         s"prim dict entries ${entries.length} != $numEntries * $es")
@@ -749,11 +455,12 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     out
   }
 
-  private def deltaElemSize(dt: DataType): Int = dt match {
+  /** Value width of an integral-only encoding (FOR, bit-pack, delta). */
+  private def integralElemSize(dt: DataType, what: String): Int = dt match {
     case IntegerType | DateType | _: YearMonthIntervalType => 4
     case LongType | TimestampType | TimestampNTZType | _: DayTimeIntervalType => 8
     case d: DecimalType if d.precision <= 18 => 8 // unscaled i64
-    case other => throw new OliveFormatException(s"delta encoding on non-integral $other")
+    case other => throw new OliveFormatException(s"$what on non-integral $other")
   }
 
   /** Page-resuming delta expansion [e0, e1): restart the prefix sum at
@@ -779,7 +486,7 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     }
     if (start <= 0L)
       return expandDelta(m.first, m.width, readElems(m.deltas, 0, e1, m.width), dt, e0, e1)
-    val es = deltaElemSize(dt)
+    val es = integralElemSize(dt, "delta encoding")
     val bytes = readElems(m.deltas, start, e1, m.width)
     val bb = Bytes.le(bytes)
     val out = new Array[Byte]((e1 - e0).toInt * es)
@@ -809,7 +516,7 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     * the load to [0, e1) pages. */
   private def expandDelta(first: Long, width: Byte, deltaBytes: Array[Byte],
       dt: DataType, e0: Long, e1: Long): Array[Byte] = {
-    val es = deltaElemSize(dt)
+    val es = integralElemSize(dt, "delta encoding")
     if (deltaBytes.length < e1 * width)
       throw new OliveFormatException(s"delta buffer ${deltaBytes.length} < ${e1 * width}")
     val bb = Bytes.le(deltaBytes)
@@ -911,25 +618,27 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     }
   }
 
-  /** [[fillScaled]] fused with [[expandBitPack]]: same checks, same
-    * arithmetic (unpack then the exact long → double divide), one loop. */
+  /** [[fillScaled]] fused with [[expandBitPack]] over elements [e0, e1):
+    * same checks, same arithmetic (unpack then the exact long → double
+    * divide), one loop, no intermediate 8n-byte buffer. */
   private def fillScaledBitPack(vec: WritableColumnVector, exponent: Byte, base: Long,
-      bits: Byte, bm: BufferMeta, n: Int, toFloat: Boolean): Unit = {
+      bits: Byte, bm: BufferMeta, e0: Long, e1: Long, toFloat: Boolean): Unit = {
     if (exponent < 0 || exponent > 18)
       throw new OliveFormatException(s"bad scale exponent $exponent")
     if (bits < 1 || bits > 56)
       throw new OliveFormatException(s"bad bit-pack width $bits")
-    val needEnd = (n.toLong * bits + 7) / 8 + 8
+    val n = (e1 - e0).toInt
+    val needEnd = (e1 * bits + 7) / 8 + 8
     if (needEnd > bm.rawSize)
       throw new OliveFormatException(s"bit-pack buffer ${bm.rawSize} < $needEnd")
-    val (bytes, start) = readBufferRange(bm, 0L, needEnd)
+    val (bytes, start) = readBufferRange(bm, (e0 * bits) >> 3, needEnd)
     val bb = Bytes.le(bytes)
     val mask = (1L << bits) - 1
     val pow = Pow10(exponent.toInt)
     var i = 0
     if (toFloat) {
       while (i < n) {
-        val bitPos = i.toLong * bits - start * 8
+        val bitPos = (e0 + i) * bits - start * 8
         val word = bb.getLong((bitPos >> 3).toInt)
         vec.putFloat(i,
           ((base + ((word >>> (bitPos & 7).toInt) & mask)).toDouble / pow).toFloat)
@@ -937,7 +646,7 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
       }
     } else {
       while (i < n) {
-        val bitPos = i.toLong * bits - start * 8
+        val bitPos = (e0 + i) * bits - start * 8
         val word = bb.getLong((bitPos >> 3).toInt)
         vec.putDouble(i,
           (base + ((word >>> (bitPos & 7).toInt) & mask)).toDouble / pow)
@@ -1015,13 +724,15 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     case _ => throw new OliveFormatException(s"bad dict index width $w")
   }
 
-  private def primElemSize(dt: DataType): Int = dt match {
+  /** Value width of a fixed-width encoding ([[fillPrimitive]]'s layouts). */
+  private def fixedElemSize(dt: DataType, what: String): Int = dt match {
     case ByteType => 1
     case ShortType => 2
     case IntegerType | DateType | FloatType | _: YearMonthIntervalType => 4
     case LongType | TimestampType | TimestampNTZType | DoubleType | _: DayTimeIntervalType => 8
     case d: DecimalType => if (d.precision <= 18) 8 else 16
-    case other => throw new OliveFormatException(s"prim dict on unsupported type $other")
+    case CalendarIntervalType => 16
+    case other => throw new OliveFormatException(s"$what on unsupported type $other")
   }
 
   /** Exact bytes for elements [e0, e1) of `es`-byte values. */
@@ -1035,9 +746,9 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
     else java.util.Arrays.copyOfRange(bytes, (b0 - start).toInt, (b1 - start).toInt)
   }
 
-  /** Offsets entries e0..e1 INCLUSIVE, monotonicity-checked. `total` is
-    * the column's full row count — it disambiguates the i32/i64 entry
-    * width the same way [[offsetsWidth]] does on the full-decode path. */
+  /** Offsets entries e0..e1 INCLUSIVE, monotonicity-checked, entry 0
+    * (when read) rebased to 0. `total` is the column's full row count —
+    * it disambiguates the i32/i64 entry width ([[offsetsWidth]]). */
   private def readOffsetsRange(bm: BufferMeta, e0: Long, e1: Long, maxEnd: Long,
       total: Long): Array[Int] = {
     val w = offsetsWidth(bm.rawSize, total)
@@ -1057,6 +768,7 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
       prev = o
       i += 1
     }
+    if (e0 == 0 && out(0) != 0) throw new OliveFormatException("offsets not rebased to 0")
     if (out(out.length - 1) > maxEnd)
       throw new OliveFormatException(s"offsets end ${out(out.length - 1)} > data $maxEnd")
     out
@@ -1087,11 +799,35 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
       }
     }
 
+  /** Offsets entries e0..e1 of a list/map column with `total` rows, and
+    * its full child count: the last entry. That count sizes child
+    * allocations, so it is bounded by the children's own buffer evidence
+    * `childEv` (-1 = none) and by [[MaxElems]]. A range that ends at the
+    * last row takes it from the entries just read, so a whole-chunk decode
+    * reads each offsets page once. */
+  private def readNestedOffsets(bm: BufferMeta, e0: Long, e1: Long, total: Long,
+      childEv: Long, what: String): (Array[Int], Long) = {
+    val bound = if (childEv >= 0) math.min(childEv, MaxElems) else MaxElems
+    if (e1 == total) {
+      val offs = readOffsetsRange(bm, e0, e1, bound, total)
+      (offs, offs(offs.length - 1).toLong)
+    } else {
+      val last = offsetEntryAt(bm, total, total)
+      if (last < 0 || last > bound)
+        throw new OliveFormatException(s"$what total $last out of bounds")
+      (readOffsetsRange(bm, e0, e1, last, total), last)
+    }
+  }
+
   /** Decode elements [e0, e1) of a column whose full element count is
-    * `total`, into vec[0, e1-e0). `fileDt`/`dt` as in [[decodeCol]]. */
+    * `total`, into vec[0, e1-e0). `fileDt` is the type the FILE stores
+    * (drives layout/width); `dt` is what the scan requests. They differ
+    * only under nested schema pruning, where a requested struct holds a
+    * SUBSET of the file struct's fields — matched by name below. */
   private def decodeColRange(vec: WritableColumnVector, meta: ColMeta, fileDt: DataType,
       dt: DataType, e0: Long, e1: Long, total: Long, chunk: ChunkMeta,
       dict20: () => Array[Byte], dict32: () => Array[Byte]): Unit = {
+    checkCount(meta, fileDt, total, s"column of $fileDt") // before any allocation
     val n = (e1 - e0).toInt
     vec.reserve(math.max(n, 1))
     applyValidityRange(vec, meta.validity, e0, e1)
@@ -1106,44 +842,24 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
           i += 1
         }
       case (PrimitiveMeta(_, values), BinaryType) =>
-        // fixed-size binary: width only derivable from the FULL element
-        // count. An EMPTY range (e.g. every list of a zone-map block is
-        // empty, total may even be 0) needs no width — don't reject it
-        if (n > 0) {
-          if (total <= 0 || values.rawSize % total != 0)
-            throw new OliveFormatException(s"fixed binary range needs exact width")
-          val w = (values.rawSize / total).toInt
-          val bytes = readElems(values, e0, e1, w)
-          var i = 0
-          while (i < n) { vec.putByteArray(i, bytes, i * w, w); i += 1 }
-        }
+        // fixed-size binary: the width is only derivable from the FULL
+        // element count (an empty column, total 0, has none to derive)
+        if (total > 0 && values.rawSize % total != 0)
+          throw new OliveFormatException(s"fixed binary buffer ${values.rawSize} % $total != 0")
+        val w = if (total > 0) (values.rawSize / total).toInt else 0
+        val bytes = readElems(values, e0, e1, w)
+        var i = 0
+        while (i < n) { vec.putByteArray(i, bytes, i * w, w); i += 1 }
       case (PrimitiveMeta(_, values), _) =>
-        val es = dt match {
-          case ByteType => 1
-          case ShortType => 2
-          case IntegerType | DateType | FloatType | _: YearMonthIntervalType => 4
-          case LongType | TimestampType | TimestampNTZType | DoubleType | _: DayTimeIntervalType => 8
-          case d: DecimalType => if (d.precision <= 18) 8 else 16
-          case CalendarIntervalType => 16
-          case other => throw new OliveFormatException(s"primitive meta does not match type $other")
-        }
-        fillPrimitive(vec, readElems(values, e0, e1, es), dt, n)
+        fillPrimitive(vec, readElems(values, e0, e1, fixedElemSize(dt, "primitive meta")), dt, n)
       case (ForMeta(_, base, width, values), _) =>
-        val elemSize = dt match {
-          case IntegerType | DateType | _: YearMonthIntervalType => 4
-          case LongType | TimestampType | TimestampNTZType | _: DayTimeIntervalType => 8
-          case d: DecimalType if d.precision <= 18 => 8 // unscaled i64
-          case other => throw new OliveFormatException(s"FOR encoding on non-integral $other")
-        }
-        fillPrimitive(vec, expandFor(base, width, readElems(values, e0, e1, width), n, elemSize), dt, n)
+        // expand unsigned narrow deltas back to the logical width, then
+        // take the same bulk little-endian fill path as plain primitives
+        fillPrimitive(vec, expandFor(base, width, readElems(values, e0, e1, width), n,
+          integralElemSize(dt, "FOR encoding")), dt, n)
       case (BitPackMeta(_, base, bits, values), _) =>
-        val elemSize = dt match {
-          case IntegerType | DateType | _: YearMonthIntervalType => 4
-          case LongType | TimestampType | TimestampNTZType | _: DayTimeIntervalType => 8
-          case d: DecimalType if d.precision <= 18 => 8 // unscaled i64
-          case other => throw new OliveFormatException(s"bit-pack encoding on non-integral $other")
-        }
-        fillPrimitive(vec, expandBitPack(base, bits, values, e0, e1, elemSize), dt, n)
+        fillPrimitive(vec, expandBitPack(base, bits, values, e0, e1,
+          integralElemSize(dt, "bit-pack encoding")), dt, n)
       case (ReeMeta(_, endsBuf, valsBuf), _) =>
         fillPrimitive(vec, expandRee(endsBuf, valsBuf, dt, e0, e1), dt, n)
       case (PrimDictMeta(_, numEntries, idxW, entriesBuf, idxBuf), _) =>
@@ -1155,6 +871,13 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
       case (dm: DeltaMeta, _) =>
         // prefix sums resume at the nearest page base (footer v5)
         fillPrimitive(vec, expandDeltaFrom(dm, dt, e0, e1), dt, n)
+      case (ScaledMeta(_, exponent, BitPackMeta(None, base, bits, values)), DoubleType) =>
+        // fused fast path: ALP-scaled decimals over bit-packed ints are
+        // the hottest decode in a lineitem scan (stack-sampled); unpack
+        // and divide in ONE loop
+        fillScaledBitPack(vec, exponent, base, bits, values, e0, e1, toFloat = false)
+      case (ScaledMeta(_, exponent, BitPackMeta(None, base, bits, values)), FloatType) =>
+        fillScaledBitPack(vec, exponent, base, bits, values, e0, e1, toFloat = true)
       case (ScaledMeta(_, exponent, inner), _) =>
         fillScaled(vec, dt, exponent, scaledLongs(inner, e0, e1), n)
       case (UnsignedPackedMeta(_, logical, inner), _) =>
@@ -1163,12 +886,11 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
             s"${Logical.name(logical)} column requires ${Logical.sparkType(logical)}, scan asked $dt")
         fillUnsignedWide(vec, logical, scaledLongs(inner, e0, e1), n)
       case (UnsignedMeta(_, logical, values), _) =>
+        // narrow unsigned/half storage → widened Spark type (Logical)
         if (dt != Logical.sparkType(logical))
           throw new OliveFormatException(
             s"${Logical.name(logical)} column requires ${Logical.sparkType(logical)}, scan asked $dt")
-        val es = Logical.elemSize(logical)
-        val bytes = readElems(values, e0, e1, es)
-        val bb = Bytes.le(bytes)
+        val bb = Bytes.le(readElems(values, e0, e1, Logical.elemSize(logical)))
         var i = 0
         logical match {
           case Logical.U8 =>
@@ -1189,7 +911,13 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
       case (DictIdxMeta(_, w, idxBuf), BinaryType) =>
         val dictMeta = if (w == 20) chunk.dict20 else chunk.dict32
         val dict = if (w == 20) dict20() else dict32()
+        if (idxBuf.rawSize != total * 4)
+          throw new OliveFormatException(s"dict index buffer ${idxBuf.rawSize} != ${total * 4}")
         val bb = Bytes.le(readElems(idxBuf, e0, e1, 4))
+        // dictionary-backed decode: the child data is the dict itself
+        // (ONE copy of the dict per chunk), each row just records
+        // (idx*w, w) — no per-row value copying, 4x+ cheaper than
+        // expanding 20/32-byte values per row.
         val child = vec.arrayData()
         child.reserve(dict.length)
         child.putBytes(0, dict.length, dict, 0)
@@ -1197,6 +925,7 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
         while (i < n) {
           if (!vec.isNullAt(i)) {
             val idx = bb.getInt(i * 4)
+            // unsigned bounds check, like the reference (`src/read.zig:756-788`)
             if (idx < 0 || idx >= dictMeta.numEntries)
               throw new OliveFormatException(s"dict index $idx out of ${dictMeta.numEntries}")
             vec.putArray(i, idx * w, w)
@@ -1207,8 +936,11 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
         // the dictionary is chunk-shared: load it whole; only the row
         // indices are range-read
         val dictData = readBuffer(dDataBuf)
-        val dictOffs = readOffsets(dOffBuf, numEntries, dictData.length)
+        val dictOffs = readOffsetsRange(dOffBuf, 0, numEntries, dictData.length, numEntries)
+        if (idxBuf.rawSize != total * idxW)
+          throw new OliveFormatException(s"dict index buffer ${idxBuf.rawSize} != ${total * idxW}")
         val bb = Bytes.le(readElems(idxBuf, e0, e1, idxW))
+        // dictionary-backed: child data is the dict, rows are (offset, len)
         val child = vec.arrayData()
         child.reserve(dictData.length)
         child.putBytes(0, dictData.length, dictData, 0)
@@ -1229,6 +961,8 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
         val (data, dStart) = readBufferRange(dataBuf, d0, d1)
         if (dStart > d0)
           throw new OliveFormatException("var-width data range short read")
+        // bulk path: one memcpy of the covering pages into the child,
+        // then per-row (offset, length) bookkeeping rebased to them
         val child = vec.arrayData()
         child.reserve(data.length)
         child.putBytes(0, data.length, data, 0)
@@ -1244,21 +978,12 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
           case ArrayType(fe, _) => fe
           case other => throw new OliveFormatException(s"file type $other for requested array")
         }
-        val childEv = impliedCount(childMeta, fileEt)
-        // the column's FULL child count is its LAST offset entry — one
-        // element read; exact `total` lets evidence-free children (fixed
-        // binary under structs) derive widths in range mode too
-        val childTotal = {
-          val last = offsetEntryAt(offBuf, total, total)
-          if (last < 0 || (childEv >= 0 && last > childEv) || last > MaxElems)
-            throw new OliveFormatException(s"list child total $last out of bounds")
-          last
-        }
-        val offs = readOffsetsRange(offBuf, e0, e1, childTotal, total)
-        val c0 = offs(0).toLong
-        val c1 = offs(n).toLong
-        val child = vec.getChild(0)
-        decodeColRange(child, childMeta, fileEt, et, c0, c1, childTotal, chunk, dict20, dict32)
+        // the exact child total lets evidence-free children (fixed binary
+        // under structs) derive their widths
+        val (offs, childTotal) = readNestedOffsets(offBuf, e0, e1, total,
+          impliedCount(childMeta, fileEt), "list child")
+        decodeColRange(vec.getChild(0), childMeta, fileEt, et, offs(0), offs(n), childTotal,
+          chunk, dict20, dict32)
         var i = 0
         while (i < n) { vec.putArray(i, offs(i) - offs(0), offs(i + 1) - offs(i)); i += 1 }
       case (StructMeta(_, children), st: StructType) =>
@@ -1268,6 +993,9 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
         }
         if (children.size != fileSt.size)
           throw new OliveFormatException("struct children mismatch")
+        // nested schema pruning requests a SUBSET of the file's fields;
+        // nested DDL resolves through rename chains and widens leaves,
+        // same contract as top-level decodeTableRange
         var c = 0
         while (c < st.size) {
           val f = st.fields(c)
@@ -1295,20 +1023,13 @@ final class GraftFileReader private (in: FSDataInputStream, fileLen: Long, val f
           case MapType(fk, fv, _) => (fk, fv)
           case other => throw new OliveFormatException(s"file type $other for requested map")
         }
-        val kEv = impliedCount(keyMeta, fileKt)
-        val vEv = impliedCount(valMeta, fileVt)
-        val ev = Seq(kEv, vEv).filter(_ >= 0).minOption.getOrElse(MaxElems)
-        val entryTotal = {
-          val last = offsetEntryAt(offBuf, total, total)
-          if (last < 0 || last > ev)
-            throw new OliveFormatException(s"map entry total $last out of bounds")
-          last
-        }
-        val offs = readOffsetsRange(offBuf, e0, e1, entryTotal, total)
-        val c0 = offs(0).toLong
-        val c1 = offs(n).toLong
-        decodeColRange(vec.getChild(0), keyMeta, fileKt, kt, c0, c1, entryTotal, chunk, dict20, dict32)
-        decodeColRange(vec.getChild(1), valMeta, fileVt, vt, c0, c1, entryTotal, chunk, dict20, dict32)
+        val ev = Seq(impliedCount(keyMeta, fileKt), impliedCount(valMeta, fileVt))
+          .filter(_ >= 0).minOption.getOrElse(-1L)
+        val (offs, entryTotal) = readNestedOffsets(offBuf, e0, e1, total, ev, "map entry")
+        decodeColRange(vec.getChild(0), keyMeta, fileKt, kt, offs(0), offs(n), entryTotal,
+          chunk, dict20, dict32)
+        decodeColRange(vec.getChild(1), valMeta, fileVt, vt, offs(0), offs(n), entryTotal,
+          chunk, dict20, dict32)
         var i = 0
         while (i < n) { vec.putArray(i, offs(i) - offs(0), offs(i + 1) - offs(i)); i += 1 }
       case (m, t) =>

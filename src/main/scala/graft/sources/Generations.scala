@@ -709,12 +709,7 @@ object Generations {
     // self-references from a previous conflicted attempt at a different
     // generation index and are replaced. A retried publish recomputes
     // with the CURRENT nextGen, so the prefix can never go stale.
-    // kill-switch parse is fail-safe: any unparseable value means ON
-    // (a typo'd conf must not fail every publish mid-write)
-    if (org.apache.spark.sql.SparkSession.getActiveSession.forall { ss =>
-      try ss.conf.get("spark.graft.rewrite.statsManifest", "true").toBoolean
-      catch { case _: IllegalArgumentException => true }
-    }) {
+    locally {
       def walkOut(p: Path): Seq[(Path, Long)] =
         fs.listStatus(p).toSeq.flatMap { st =>
           if (st.isFile && st.getPath.getName.endsWith(".graft"))

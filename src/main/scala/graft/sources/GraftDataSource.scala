@@ -3601,12 +3601,7 @@ class GraftPartitionReader(fs: FileSystem, path: Path, required: StructType,
   }
 
   /** Decode rows [r0, r1) (trimmed by `rowLimit`); partition-path columns
-    * become constant vectors from the file's `k=v` values. A full-chunk
-    * fallback for a range-undecodable shape (rare: fixed-width binary
-    * nested under a list) is ONLY legal when this is the chunk's sole
-    * range and starts at 0 — under a pushed LIMIT over-delivery is safe
-    * (Spark re-limits), but a widened MID-CHUNK range would duplicate
-    * rows other emitted ranges already carried. */
+    * become constant vectors from the file's `k=v` values. */
   private def decodeWithPartitions(chunk: Meta.ChunkMeta, table: Meta.TableMeta,
       r0: Int, r1: Int, rowLimit: Option[Int], base: Long,
       remap: Option[Array[Int]]): ColumnarBatch = {
@@ -3623,11 +3618,7 @@ class GraftPartitionReader(fs: FileSystem, path: Path, required: StructType,
         new ColumnarBatch(vs, m.length)
     }
     def decode(req: StructType): ColumnarBatch =
-      if (r0 == 0 && end == table.numRows) reader.decodeTable(chunk, table, req)
-      else if (r0 == 0 && r1 == table.numRows)
-        try reader.decodeTableRange(chunk, table, req, 0, end)
-        catch { case _: graft.format.OliveFormatException => reader.decodeTable(chunk, table, req) }
-      else reader.decodeTableRange(chunk, table, req, r0, end)
+      reader.decodeTableRange(chunk, table, req, r0, end)
     // `_file` (metadata column) and partition-path columns both become
     // constant vectors, and `_pos` a generated base+ordinal long vector
     // (every batch is a CONTIGUOUS chunk range, so positions are an

@@ -24,22 +24,49 @@ class AdversarialSpec extends SparkSpec {
 
   private def openRaw(f: java.io.File): Array[Byte] = Files.readAllBytes(f.toPath)
 
+  /** Opens `bytes` and decodes every table in two passes: whole chunks,
+    * then the middle third of each table with at least 3 rows (smaller
+    * tables whole). A hostile file must fail both passes; the whole-chunk
+    * failure is rethrown for the callers' checks. A range pass that
+    * accepts the file, or fails other than cleanly where the whole pass
+    * did, raises an AssertionError no `intercept[Exception]` can absorb. */
   private def tryOpen(bytes: Array[Byte]): Unit = {
     val tmp = Files.createTempDirectory("graft-adv2")
     val p = tmp.resolve("x.graft")
     Files.write(p, bytes)
     val hp = new Path(p.toString)
     val fs = hp.getFileSystem(new Configuration())
-    val r = GraftFileReader.open(fs, hp)
-    try {
-      // decode every chunk/table fully — corruption may hide in pages
-      r.footer.chunks.foreach(c => c.tables.foreach { t =>
-        val batch = r.decodeTable(c, t, t.schema)
-        batch.rowIterator().forEachRemaining(row =>
-          (0 until t.schema.size).foreach(i => if (!row.isNullAt(i)) row.get(i, t.schema(i).dataType)))
-        batch.close()
-      })
-    } finally r.close()
+    def decodeAll(decode: (GraftFileReader, Meta.ChunkMeta, Meta.TableMeta) =>
+        org.apache.spark.sql.vectorized.ColumnarBatch): Unit = {
+      val r = GraftFileReader.open(fs, hp)
+      try {
+        // decode every chunk/table — corruption may hide in pages
+        r.footer.chunks.foreach(c => c.tables.foreach { t =>
+          val batch = decode(r, c, t)
+          batch.rowIterator().forEachRemaining(row =>
+            (0 until t.schema.size).foreach(i => if (!row.isNullAt(i)) row.get(i, t.schema(i).dataType)))
+          batch.close()
+        })
+      } finally r.close()
+    }
+    def clean(e: Throwable) =
+      e.isInstanceOf[OliveFormatException] || e.isInstanceOf[java.io.IOException]
+    val whole = scala.util.Try(decodeAll((r, c, t) => r.decodeTable(c, t, t.schema)))
+    val mid = scala.util.Try(decodeAll { (r, c, t) =>
+      val n = t.numRows
+      if (n >= 3) r.decodeTableRange(c, t, t.schema, n / 3, 2 * n / 3)
+      else r.decodeTable(c, t, t.schema)
+    })
+    whole.failed.foreach { e =>
+      mid match {
+        case scala.util.Success(_) =>
+          throw new AssertionError(s"range decode accepted a file whole-chunk decode refused: $e")
+        case scala.util.Failure(m) if clean(e) && !clean(m) =>
+          throw new AssertionError(s"range decode failed uncleanly: $m", m)
+        case _ =>
+      }
+    }
+    whole.get
   }
 
   test("truncated files fail cleanly") {

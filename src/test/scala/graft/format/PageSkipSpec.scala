@@ -98,6 +98,73 @@ class PageSkipSpec extends SparkSpec {
       assert(java.util.Arrays.equals(fsb, want), s"row $id fsb mismatch")
     }
     batch.close(); r.close()
+
+    // scaled double/float over a bit-packed stream: the fused decode arm,
+    // entered at a row whose first bit is not byte-aligned
+    val sDir = Files.createTempDirectory("graft-pskip2s").toString
+    spark.range(0, 8000).coalesce(1).selectExpr(
+      "id",
+      "CAST((id * 7919) % 100003 AS DOUBLE) / 100 AS sd",
+      "CAST(CAST((id * 7919) % 100003 AS DOUBLE) / 100 AS FLOAT) AS sf")
+      .write.format("graft").option("pagesize", "2048").mode("append").save(sDir)
+    val sp = new Path(new java.io.File(sDir).listFiles()
+      .filter(_.getName.endsWith(".graft")).head.toString)
+    val sr = GraftFileReader.open(fs, sp)
+    val sChunk = sr.footer.chunks.head
+    val sTable = sChunk.tables.head
+    val (a, b) = (3211, 3310)
+    Seq("sd", "sf").foreach { c =>
+      sTable.columns(sTable.schema.fieldIndex(c)) match {
+        case Meta.ScaledMeta(_, _, Meta.BitPackMeta(None, _, bits, _)) =>
+          assert(a.toLong * bits % 8 != 0, s"$c: range start $a is byte-aligned at $bits bits")
+        case other => fail(s"precondition: $c must be scaled over bit-pack, got $other")
+      }
+    }
+    val sBatch = sr.decodeTableRange(sChunk, sTable, sTable.schema, a, b)
+    assert(sBatch.numRows() == b - a)
+    (0 until b - a).foreach { i =>
+      val row = sBatch.getRow(i)
+      val id = a.toLong + i
+      val want = ((id * 7919) % 100003).toDouble / 100
+      assert(row.getLong(0) == id)
+      assert(java.lang.Double.doubleToRawLongBits(row.getDouble(1)) ==
+        java.lang.Double.doubleToRawLongBits(want), s"row $id sd ${row.getDouble(1)} != $want")
+      assert(java.lang.Float.floatToRawIntBits(row.getFloat(2)) ==
+        java.lang.Float.floatToRawIntBits(want.toFloat), s"row $id sf ${row.getFloat(2)} != ${want.toFloat}")
+    }
+    sBatch.close(); sr.close()
+  }
+
+  test("a range whose lists are all empty decodes at the child buffer's end") {
+    // rows 4000.. hold empty lists, so a range over them asks the list's
+    // plain double child for the empty element range [total, total) —
+    // a byte range no page overlaps, which must read as empty
+    val dir = Files.createTempDirectory("graft-pskip7").toString
+    spark.range(0, 5000).coalesce(1).selectExpr("id",
+      "CASE WHEN id >= 4000 THEN CAST(array() AS array<double>) " +
+        "ELSE array(CAST(id AS DOUBLE) / 3, CAST(id AS DOUBLE) / 7) END AS l")
+      .write.format("graft").option("pagesize", "1024").mode("append").save(dir)
+    val p = new Path(new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".graft")).head.toString)
+    val r = GraftFileReader.open(p.getFileSystem(new Configuration()), p)
+    val chunk = r.footer.chunks.head
+    val table = chunk.tables.head
+    table.columns(1) match {
+      case Meta.ListMeta(_, _, _: Meta.PrimitiveMeta) =>
+      case other => fail(s"precondition: l's child must be plain doubles, got $other")
+    }
+    for ((a, b) <- Seq((4500, 5000), (4000, 4100), (3999, 4001))) {
+      val batch = r.decodeTableRange(chunk, table, table.schema, a, b)
+      (0 until b - a).foreach { i =>
+        val id = a + i
+        val l = batch.getRow(i).getArray(1)
+        if (id >= 4000) assert(l.numElements() == 0, s"row $id")
+        else assert(l.numElements() == 2 && l.getDouble(0) == id.toDouble / 3 &&
+          l.getDouble(1) == id.toDouble / 7, s"row $id")
+      }
+      batch.close()
+    }
+    r.close()
   }
 
   test("pushed limits decode a page prefix, not the whole chunk") {

@@ -327,7 +327,15 @@ class RandomRoundTripSpec extends SparkSpec {
         val full = rd.decodeTable(chunk, table, table.schema)
         val fullRows = (0 until table.numRows).map(i =>
           normRow(full.getRow(i), table.schema))
+        // ground truth: the whole chunk holds exactly the rows written,
+        // so the ranges below are checked against the input, not merely
+        // against the same decoder over [0, numRows)
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(table.schema)
+        val wholeRows = (0 until table.numRows).map(i => toRow(full.getRow(i)).asInstanceOf[Row])
         full.close()
+        assert(canon(spark.createDataFrame(wholeRows.asJava, table.schema)) == canon(df),
+          s"seed $seed whole-chunk decode diverged from the rows written")
         (0 until 8).foreach { _ =>
           val a = r.nextInt(table.numRows)
           val b = a + 1 + r.nextInt(table.numRows - a)
