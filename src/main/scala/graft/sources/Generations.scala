@@ -372,14 +372,12 @@ object Generations {
       rowChurning: Boolean = true,
       beforePublish: Option[(Configuration, Path) => Unit] = None): Unit = {
     val conf = s.sparkContext.hadoopConfiguration
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
     // replay detection FIRST: if the live generation already carries this
     // rewrite's key, the work was applied and swapped — re-applying would
     // double it (the exactly-once contract for at-least-once drivers)
     if (idempotencyKey.isDefined &&
         liveRewriteTag(conf, dir) == idempotencyKey) return
-    val nextGen = prepareRewrite(s, dir, graceMs) // entry sweep + allocation
+    val staged = stage(s, dir, graceMs) // entry sweep + allocation
     // pin the source view for the publish's late-append fold
     val srcDir = GraftDataSource.resolveDataDir(conf, dir)
     // ONE listing serves both the partition-column probe and the table
@@ -411,9 +409,6 @@ object Generations {
     // hive-style partition columns re-route to the same layout on rewrite
     val partCols = GraftDataSource.partitionColumns(listed)
     if (tableNames.isEmpty) return // nothing to rewrite
-    // stage under a unique tmp name; the publish below is one rename
-    val staging = new Path(root, s"$nextGen.tmp-${java.util.UUID.randomUUID()}")
-    claimStaging(conf, staging)
     tableNames.foreach { t =>
       // PIN the data read to the same listing the late-append fold
       // compares against: the lazy data-plane read otherwise lists at
@@ -423,36 +418,133 @@ object Generations {
         .option("fileFilter", listed.map(_._1.toString).mkString("\n")).load(dir))
       val layout = GraftDataSource.readBucketMarker(conf, dir, t)
       shapedWriter(df0, layout, targetFiles, t, writeOptions, partCols)
-        .save(staging.toString)
+        .save(staged.path.toString)
     }
     // metadata a caller wants published ATOMICALLY with the generation
     // (e.g. the clustering record) is written into the staging dir here,
     // so it rides the publish rename — it can never land in a
     // generation some concurrent rewrite published in between
-    beforePublish.foreach(_(conf, staging))
-    publishStaging(fs, conf, root, staging, nextGen, idempotencyKey, dir,
-      sourceView = Some((srcDir, listed.map(_._1.toUri.getPath).toSet)))
+    beforePublish.foreach(_(conf, staged.path))
     // stats lifecycle: a full rewrite either churned every row (DML —
     // the whole listing counts against each table's ANALYZE snapshot)
     // or preserved them all (compaction/clustering — re-anchor the byte
     // extrapolation so a 2× compaction doesn't halve row estimates)
-    if (rowChurning) {
+    val churn = if (!rowChurning) Seq.empty else {
       val total = GraftDataSource.inParallel(listed.map(_._1)) { p =>
         try p.getFileSystem(conf).getFileStatus(p).getLen catch {
           case _: Exception => 0L
         }
       }.sum
-      tableNames.foreach(t => GraftDataSource.recordChurn(s, dir, t, total))
-    } else GraftDataSource.rebaseStatsBytes(conf, dir)
+      tableNames.map(_ -> total)
+    }
+    // every table was rewritten: nothing carries by reference
+    staged.publish(Commit(srcDir, listed.map(_._1), carried = Seq.empty,
+      churn = churn, idempotencyKey = idempotencyKey))
+    if (!rowChurning) GraftDataSource.rebaseStatsBytes(conf, dir)
   }
 
-  /** Entry sweep + next-generation allocation, for a COW write whose
-    * data lands through Spark's own write path rather than a [[rewrite]]
-    * callback (SQL row-level operations, [[GraftCowBatchWrite]]): the
-    * caller stages into `<returned>.tmp-<uuid>` and hands the staging to
-    * [[publishStaging]] on commit. */
-  private[sources] def prepareRewrite(s: SparkSession, dir: String,
-      graceMs: Long = -1L): String = {
+  /** What a generation publishes besides the staging's fresh output.
+    *
+    *  - `srcDir` and `listing`: the source view, i.e. the live data dir
+    *    and the listing the carry set was taken from. The publish carries
+    *    that view's delete vectors and sibling bucket markers, and its
+    *    late-append fold compares against the listing.
+    *  - `carried`: (root-relative file, bytes, stats) per file the
+    *    generation keeps by reference.
+    *  - `freshDvs`: delete-vector entries this generation writes; each
+    *    replaces its file's live entry.
+    *  - `churn`: (table, bytes) billed against each table's ANALYZE
+    *    snapshot once the generation is live.
+    *  - `droppedTable`: a table whose bucket marker must not carry. */
+  private[sources] case class Commit(srcDir: String, listing: Seq[Path],
+      carried: Seq[(String, Long, Option[String])],
+      freshDvs: Seq[(String, String, String, Long)] = Seq.empty,
+      churn: Seq[(String, Long)] = Seq.empty,
+      droppedTable: Option[String] = None,
+      idempotencyKey: Option[String] = None)
+
+  /** A staged next generation of `dir`, made by [[stage]]: the one way
+    * every publisher (full and file-granular rewrites, SQL copy-on-write
+    * and merge-on-read writes, staged CTAS, DROP TABLE) builds a
+    * generation. The caller writes its fresh output under [[path]], then
+    * [[publish]]es or [[abort]]s. The staging dir is named and claimed
+    * on the first use of [[path]] (before any data lands in it), so an
+    * operation that finds nothing to do leaves nothing behind. */
+  private[sources] final class Staged private[Generations] (s: SparkSession,
+      dir: String, private var gen: String) {
+    private val conf = s.sparkContext.hadoopConfiguration
+    private val root = new Path(dir)
+    private val fs = root.getFileSystem(conf)
+    private var claimed = false
+
+    /** The generation this staging publishes as. */
+    def nextGen: String = gen
+
+    lazy val path: Path = {
+      val p = new Path(root, s"$gen.tmp-${java.util.UUID.randomUUID()}")
+      claimStaging(conf, p)
+      claimed = true
+      p
+    }
+
+    /** Carry and publish: write `.carry` (the carried files with their
+      * stats) and `.dvs` (the source view's entries for carried files
+      * that get no fresh entry, plus the fresh entries), copy the source
+      * view's bucket markers the staging lacks, publish through
+      * [[publishStaging]] with the source view's late-append fold, then
+      * bill churn. Any failure aborts the staging, except a lost
+      * generation race under `keepOnConflict` (the optimistic rebase
+      * re-publishes it). */
+    def publish(c: Commit, keepOnConflict: Boolean = false): Unit = {
+      try {
+        GraftDataSource.writeCarryManifest(fs, path, c.carried)
+        // a carried file keeps its delete vector; a rewritten or dropped
+        // file is not carried, so its entry goes with it
+        val carried = c.carried.map(_._1).toSet
+        val fresh = c.freshDvs.map(_._2).toSet
+        val live = if (c.srcDir == dir) Seq.empty
+          else GraftDataSource.readDvManifest(fs, new Path(c.srcDir))
+        GraftDataSource.writeDvManifest(fs, path,
+          live.filter(e => carried.contains(e._2) && !fresh.contains(e._2)) ++ c.freshDvs)
+        val dropped = c.droppedTable.map(t =>
+          GraftDataSource.bucketMarkerPath(path.toString, t).getName)
+        GraftDataSource.carryBucketMarkers(fs, conf, c.srcDir, path, dropped)
+        publishStaging(fs, conf, root, path, gen, c.idempotencyKey, dir,
+          keepStagingOnConflict = keepOnConflict,
+          sourceView = Some((c.srcDir, c.listing.map(_.toUri.getPath).toSet)))
+      } catch {
+        case e: GenerationConflictException if keepOnConflict => throw e
+        case e: Throwable => abort(); throw e
+      }
+      c.churn.foreach { case (t, bytes) => GraftDataSource.recordChurn(s, dir, t, bytes) }
+    }
+
+    /** Delete the staging (a no-op when it was never claimed). */
+    def abort(): Unit =
+      if (claimed) try fs.delete(path, true) catch { case _: Exception => }
+
+    /** Re-aim a staging that lost its generation race at `next`. The
+      * failed publish consumed the liveness claim just before its
+      * rename; the staging is demonstrably fresh, so claim it again, and
+      * drop its pre-race `.dvs` (the next publish writes the rebased
+      * view's). */
+    private[Generations] def retarget(next: String): Unit = {
+      claimStaging(conf, path)
+      fs.delete(new Path(path, GraftDataSource.DvManifestName), false)
+      gen = next
+    }
+  }
+
+  /** Entry sweep and next-generation allocation: the one way to start a
+    * generation (see [[Staged]]). */
+  private[sources] def stage(s: SparkSession, dir: String,
+      graceMs: Long = -1L): Staged =
+    new Staged(s, dir, prepareRewrite(s, dir, graceMs))
+
+  /** Entry sweep + next-generation allocation (for [[stage]], and
+    * [[vacuum]]'s sweep alone). */
+  private def prepareRewrite(s: SparkSession, dir: String,
+      graceMs: Long): String = {
     // the session's hadoop conf, NOT a bare new Configuration(): the
     // data plane (df reads/writes in the same call) resolves filesystems
     // through spark.hadoop.* — metadata ops must see the same world or a
@@ -578,7 +670,6 @@ object Generations {
       requireTargets: Set[String] = Set.empty): Seq[(String, String)] = {
     val conf = s.sparkContext.hadoopConfiguration
     val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
     val listed = GraftDataSource.listPartitionedSized(conf, dir)
     if (listed.isEmpty && requireTargets.isEmpty) return Seq.empty
     // requireTargets were selected from metadata read BEFORE this listing;
@@ -612,44 +703,32 @@ object Generations {
         s"$p holds tables ${f.names.mkString(",")}; a targeted rewrite of " +
           s"'$table' would drop the siblings' rows — compact or split first")
     }
-    val nextGen = prepareRewrite(s, dir)
+    val staged = stage(s, dir)
     val srcDir = GraftDataSource.resolveDataDir(conf, dir)
     val targetRels = targets.map(GraftDataSource.relativePath(root, _)).toSet
     val statsByRel = files.map(f =>
       GraftDataSource.relativePath(root, f.path) -> f.statsJson).toMap
-    val staging = new Path(root, s"$nextGen.tmp-${java.util.UUID.randomUUID()}")
-    claimStaging(conf, staging)
     try {
       val partCols = GraftDataSource.partitionColumns(listed.map { case (p, _, m) => (p, m) })
       val layout = GraftDataSource.readBucketMarker(conf, dir, table)
       val df = transform(s.read.format("graft").option("table", table)
         .option("fileFilter", targets.map(_.toString).mkString("\n")).load(dir),
         targets.size)
-      shapedWriter(df, layout, None, table, Map.empty, partCols).save(staging.toString)
-      GraftDataSource.carryBucketMarkers(fs, conf, dir, staging)
-      val carried = listed.collect { case (p, size, _)
-          if !targetRels.contains(GraftDataSource.relativePath(root, p)) =>
+      shapedWriter(df, layout, None, table, Map.empty, partCols).save(staged.path.toString)
+      // rewritten files shed their DVs (the candidate read applied them);
+      // carried files' entries ride by reference
+      val (rewritten, carried) = listed.map { case (p, size, _) =>
         val rel = GraftDataSource.relativePath(root, p)
         (rel, size, statsByRel.get(rel))
-      }
-      GraftDataSource.writeCarryManifest(fs, staging, carried)
-      // rewritten files shed their DVs (the candidate read applied them);
-      // carried files' and sibling tables' entries ride by reference
-      GraftDataSource.writeDvManifest(fs, staging,
-        GraftDataSource.carryDvEntries(fs, conf, dir, targetRels))
-      beforePublish(conf, staging,
+      }.partition(e => targetRels.contains(e._1))
+      beforePublish(conf, staged.path,
         carried.map { case (rel, _, _) => new Path(rel).getName })
-      publishStaging(fs, conf, root, staging, nextGen, None, dir,
-        sourceView = Some((srcDir, listed.map(_._1.toUri.getPath).toSet)))
-      GraftDataSource.recordChurn(s, dir, table,
-        listed.collect { case (p, size, _)
-          if targetRels.contains(GraftDataSource.relativePath(root, p)) => size }.sum)
+      staged.publish(Commit(srcDir, listed.map(_._1), carried,
+        churn = Seq(table -> rewritten.map(_._2).sum)))
       targets.map(p =>
         (GraftDataSource.relativePath(root, p), p.toUri.getPath)).sortBy(_._1)
     } catch {
-      case e: Throwable =>
-        try fs.delete(staging, true) catch { case _: Exception => }
-        throw e
+      case e: Throwable => staged.abort(); throw e
     }
   }
 
@@ -687,8 +766,8 @@ object Generations {
   }
 
   /** Publish a complete staging dir as generation `nextGen` and swing the
-    * pointer — the atomic tail shared by the full [[rewrite]], the
-    * file-granular [[rewriteTable]], and the SQL row-level COW write. */
+    * pointer — the atomic tail of [[Staged.publish]], which runs it for
+    * every generation publisher after the carry steps. */
   private[sources] def publishStaging(fs: org.apache.hadoop.fs.FileSystem, conf: Configuration,
       root: Path, staging: Path, nextGen: String,
       idempotencyKey: Option[String], dir: String,
@@ -977,14 +1056,13 @@ object Generations {
     if (idempotencyKey.isDefined &&
         liveRewriteTag(conf, dir) == idempotencyKey) return true
     val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    val nextGen = prepareRewrite(s, dir, graceMs) // entry sweep + allocation
+    val staged = stage(s, dir, graceMs) // entry sweep + allocation
     // pin the source view for the publish's late-append fold
-    var srcDir = GraftDataSource.resolveDataDir(conf, dir)
+    val srcDir = GraftDataSource.resolveDataDir(conf, dir)
     // classification footer probes can race a concurrent append's
     // visibility re-home (file moved into the live gen dir between the
     // listing and the open): re-list and re-classify, bounded
-    var (listed, files) = {
+    val (listed, files) = {
       var attempt = 0
       var out: Option[(Seq[(Path, Long, Map[String, String])], Seq[DmlFile])] = None
       while (out.isEmpty) {
@@ -1000,7 +1078,6 @@ object Generations {
       }
       out.get
     }
-    var srcKnown = listed.map(_._1.toUri.getPath).toSet
     val partCols = GraftDataSource.partitionColumns(listed.map { case (p, _, m) => (p, m) })
     if (!files.exists(_.metas.nonEmpty)) return false
     if (files.exists(f => f.candidate && f.names.size > 1)) {
@@ -1012,8 +1089,6 @@ object Generations {
     }
     val (candidates, carried) = files.partition(_.candidate)
     if (candidates.isEmpty && !alwaysWrite && idempotencyKey.isEmpty) return true
-    val staging = new Path(root, s"$nextGen.tmp-${java.util.UUID.randomUUID()}")
-    claimStaging(conf, staging)
     // candidate rows flow through the normal scan (partition values and
     // all), restricted to the candidate files; zero candidates → an
     // empty relation with the table's schema (Catalyst prunes the
@@ -1029,23 +1104,15 @@ object Generations {
     // writer so carried and new files keep one provable layout
     val layout = GraftDataSource.readBucketMarker(conf, dir, table)
     shapedWriter(out, layout, None, table, writeOptions, partCols)
-      .save(staging.toString)
-    // sibling tables' bucket markers live in the data dir — carry them
-    // (the write above re-created at most this table's own)
-    GraftDataSource.carryBucketMarkers(fs, conf, dir, staging)
+      .save(staged.path.toString)
     // everything untouched is carried by root-relative reference;
-    // re-carried files keep their ORIGINAL location (flattened chains)
-    // and their zone-map stats ride along, so the NEXT DML prunes them
-    // with zero per-file I/O
-    GraftDataSource.writeCarryManifest(fs, staging,
-      carried.map(f =>
-        (GraftDataSource.relativePath(root, f.path), f.size, Some(f.statsJson))))
-    // carried files keep their delete vectors (the candidate read above
-    // already applied DVs, so REWRITTEN files shed theirs — the
-    // replacement holds live rows only); sibling tables' entries carry
-    GraftDataSource.writeDvManifest(fs, staging,
-      GraftDataSource.carryDvEntries(fs, conf, dir,
-        candidates.map(f => GraftDataSource.relativePath(root, f.path)).toSet))
+    // re-carried files keep their ORIGINAL location (flattened chains),
+    // their zone-map stats (so the NEXT DML prunes them with zero
+    // per-file I/O) and their delete vectors. The candidate read above
+    // already applied DVs, so REWRITTEN files shed theirs, and their
+    // bytes count against the ANALYZE snapshot's churn budget.
+    var commit = Commit(srcDir, listed.map(_._1), carried.map(_.carryEntry(root)),
+      churn = Seq(table -> candidates.map(_.size).sum), idempotencyKey = idempotencyKey)
     // Optimistic-concurrency publish: losing the `gen-NNNNN` rename to a
     // concurrent rewrite is NOT fatal for a file-granular DML — the
     // staged output only depends on the candidate files' rows, so if the
@@ -1057,33 +1124,23 @@ object Generations {
     // state is the only sound answer, and only the caller can decide).
     val myCands = candidates.map(f =>
       GraftDataSource.relativePath(root, f.path)).toSet
-    var gen = nextGen
     var attempts = 0
     while (true) {
       try {
-        publishStaging(fs, conf, root, staging, gen, idempotencyKey, dir,
-          keepStagingOnConflict = true,
-          sourceView = Some((srcDir, srcKnown)))
-        // stats lifecycle: the candidate files' rows were rewritten —
-        // their bytes count against the ANALYZE snapshot's churn budget
-        GraftDataSource.recordChurn(s, dir, table, candidates.map(_.size).sum)
+        staged.publish(commit, keepOnConflict = true)
         return true
       } catch {
         case e: GenerationConflictException =>
           attempts += 1
-          if (attempts > 5) { fs.delete(staging, true); throw e }
-          rebaseStaging(conf, fs, root, dir, table, staging, gen,
-            myCands, pruneFilters) match {
-            case Some((next, winSrc, winKnown)) =>
-              gen = next
-              // the fold must now compare against the WINNER's view —
-              // late appends land in ITS gen dir, the new live target
-              srcDir = winSrc
-              srcKnown = winKnown
+          if (attempts > 5) { staged.abort(); throw e }
+          val lost = staged.nextGen
+          rebaseStaging(conf, root, dir, table, staged, commit, myCands,
+            pruneFilters) match {
+            case Some(rebased) => commit = rebased
             case None =>
-              fs.delete(staging, true)
+              staged.abort()
               throw new GenerationConflictException(
-                s"concurrent DML on $dir/$table: generation $gen landed " +
+                s"concurrent DML on $dir/$table: generation $lost landed " +
                   "while this rewrite was staging and its changes overlap " +
                   "the files this DML must touch — re-run the operation " +
                   "against the new table state", e)
@@ -1094,28 +1151,30 @@ object Generations {
   }
 
   /** Rebase a collided file-granular DML staging onto the race winner
-    * (generation `lostGen`, whose rename beat ours): re-classify the
-    * winner's view under OUR key filters, and iff the set of files this
-    * DML must rewrite is UNCHANGED — the winner carried every one of our
-    * candidate files untouched, and none of its new/rewritten files can
-    * hold a row our filters admit — swap the staging's carry manifest
-    * for (winner's view − our candidates) and return the next free
-    * generation index to publish at. None = true conflict (including
-    * un-pruned DMLs, whose footprint is the whole table by definition).
+    * (generation `staged.nextGen`, whose rename beat ours): re-classify
+    * the winner's view under OUR key filters, and iff the set of files
+    * this DML must rewrite is UNCHANGED — the winner carried every one
+    * of our candidate files untouched, and none of its new/rewritten
+    * files can hold a row our filters admit — re-aim the staging at the
+    * next free generation index and return `commit` with the winner's
+    * view as its source and (winner's view − our candidates) as its
+    * carry set. None = true conflict (including un-pruned DMLs, whose
+    * footprint is the whole table by definition).
     *
     * Soundness: candidate files are immutable, so our staged transform
     * output is byte-identical to what a serial re-run after the winner
     * would produce for those files; everything else of the winner's view
-    * rides the manifest by reference. The published generation therefore
-    * equals the winner-then-us serial order. The winner's view is listed
-    * from its GEN DIR, not the pointer (its swap may not have landed
-    * yet — the pointer view could still be the pre-race world). */
-  private def rebaseStaging(conf: Configuration, fs: org.apache.hadoop.fs.FileSystem,
-      root: Path, dir: String, table: String, staging: Path, lostGen: String,
-      myCands: Set[String],
-      pruneFilters: Option[Seq[graft.format.Stats.Prune]])
-      : Option[(String, String, Set[String])] = {
+    * — its delete vectors included — rides the manifests by reference.
+    * The published generation therefore equals the winner-then-us serial
+    * order. The winner's view is listed from its GEN DIR, not the
+    * pointer (its swap may not have landed yet — the pointer view could
+    * still be the pre-race world), and the fold compares against it:
+    * late appends land in ITS gen dir, the new live target. */
+  private def rebaseStaging(conf: Configuration, root: Path, dir: String,
+      table: String, staged: Staged, commit: Commit, myCands: Set[String],
+      pruneFilters: Option[Seq[graft.format.Stats.Prune]]): Option[Commit] = {
     if (pruneFilters.forall(_.isEmpty)) return None // whole-table footprint
+    val lostGen = staged.nextGen
     val winnerView =
       try GraftDataSource.listGenerationSized(conf, dir, lostGen)
       catch { case _: java.io.IOException => return None } // winner swept?
@@ -1129,22 +1188,11 @@ object Generations {
     // are a true overlap: this DML's staged replacement was computed
     // WITHOUT the winner's deletes and would silently resurrect them —
     // refuse the rebase, the caller re-runs against the new state.
-    // DVs on carried files rebase by reference like the files themselves.
-    val winnerDvs = GraftDataSource.readDvManifest(fs, new Path(root, lostGen))
-    if (winnerDvs.exists { case (_, rel, _, _) => myCands.contains(rel) })
+    val fs = root.getFileSystem(conf)
+    val winnerDir = new Path(root, lostGen)
+    if (GraftDataSource.readDvManifest(fs, winnerDir)
+        .exists { case (_, rel, _, _) => myCands.contains(rel) })
       return None
-    val carried2 = files.filterNot(_.candidate)
-    // the failed publish consumed the staging's liveness claim just
-    // before its rename; the staging is demonstrably fresh (we wrote it
-    // this call), so re-claim for the re-publish
-    claimStaging(conf, staging)
-    GraftDataSource.writeCarryManifest(fs, staging,
-      carried2.map(f =>
-        (GraftDataSource.relativePath(root, f.path), f.size, Some(f.statsJson))))
-    // replace (never merge) the staging's pre-race `.dvs`: the winner's
-    // entries ARE the rebased view's delete state
-    fs.delete(new Path(staging, GraftDataSource.DvManifestName), false)
-    GraftDataSource.writeDvManifest(fs, staging, winnerDvs)
     // allocate past every generation now on disk (the winner, plus any
     // racer that landed while we rebased — a further collision just
     // loops back here)
@@ -1153,14 +1201,19 @@ object Generations {
         GraftDataSource.genIndex(st.getPath.getName).fold(m)(math.max(m, _))
       else m
     }
-    Some((f"gen-${maxIdx + 1}%05d", new Path(root, lostGen).toString,
-      winnerView.map(_._1.toUri.getPath).toSet))
+    staged.retarget(f"gen-${maxIdx + 1}%05d")
+    Some(commit.copy(srcDir = winnerDir.toString, listing = winnerView.map(_._1),
+      carried = files.filterNot(_.candidate).map(_.carryEntry(root))))
   }
 
   /** One live file's classification for a file-granular DML. */
   private[sources] case class DmlFile(path: Path, size: Long,
       names: Seq[String], metas: Seq[graft.format.Meta.TableMeta],
-      statsJson: String, candidate: Boolean)
+      statsJson: String, candidate: Boolean) {
+    /** This file as a carried [[Commit]] entry. */
+    def carryEntry(root: Path): (String, Long, Option[String]) =
+      (GraftDataSource.relativePath(root, path), size, Some(statsJson))
+  }
 
   /** Classify every listed file for a file-granular DML on `table`:
     * candidate (can hold touched rows → rewrite) vs carried. Zone-map

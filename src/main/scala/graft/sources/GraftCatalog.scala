@@ -336,24 +336,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val resolved = GraftDataSource.resolveDataDir(conf, dir)
     if (resolved != dir) {
       // pointered namespace: one atomic pointer swap publishes the table
-      val s = org.apache.spark.sql.SparkSession.active
       val root = new Path(dir)
       val listed = GraftDataSource.listPartitionedSized(conf, dir)
       // no live file can hold the NEW table ⇒ candidates empty, every
-      // live file carries with its stats riding the manifest
+      // live file carries with its stats and delete vector
       val files = Generations.classifyForDml(conf, root, listed, ident.name(), None, dir)
-      val nextGen = Generations.prepareRewrite(s, dir)
-      val staging = new Path(root, s"$nextGen.tmp-${java.util.UUID.randomUUID()}")
-      Generations.claimStaging(conf, staging)
-      staged.foreach(f => AtomicPublish.renameNoClobber(conf, f, new Path(staging, f.getName)))
-      GraftDataSource.carryBucketMarkers(fs, conf, dir, staging)
+      val next = Generations.stage(org.apache.spark.sql.SparkSession.active, dir)
+      staged.foreach(f => AtomicPublish.renameNoClobber(conf, f, new Path(next.path, f.getName)))
       if (fs.exists(stageMarker))
         AtomicPublish.renameNoClobber(conf, stageMarker,
-          new Path(staging, stageMarker.getName))
-      GraftDataSource.writeCarryManifest(fs, staging,
-        files.map(f =>
-          (GraftDataSource.relativePath(root, f.path), f.size, Some(f.statsJson))))
-      Generations.publishStaging(fs, conf, root, staging, nextGen, None, dir)
+          new Path(next.path, stageMarker.getName))
+      next.publish(Generations.Commit(resolved, listed.map(_._1),
+        files.map(_.carryEntry(root))))
       writeMarker(dir, ident.name(), schema)
     } else {
       // loose layout: data files land first (names are uuid-unique; the
@@ -592,7 +586,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       // pointered: classify the live view (manifest stats, zero footer
       // I/O for covered files) and publish a generation WITHOUT the
       // table's files — copy-on-write drop, bytes reclaimed by the sweep
-      val s = org.apache.spark.sql.SparkSession.active
       val root = new Path(dir)
       val listed = GraftDataSource.listPartitionedSized(conf, dir)
       val files = Generations.classifyForDml(conf, root, listed,
@@ -604,18 +597,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       }
       val (dropped, carried) = files.partition(_.candidate)
       hadFiles = dropped.nonEmpty
-      if (hadFiles) {
-        val nextGen = Generations.prepareRewrite(s, dir)
-        val staging = new Path(root, s"$nextGen.tmp-${java.util.UUID.randomUUID()}")
-        Generations.claimStaging(conf, staging)
-        GraftDataSource.carryBucketMarkers(fs, conf, dir, staging)
-        // the dropped table's own bucket marker must NOT carry forward
-        fs.delete(GraftDataSource.bucketMarkerPath(staging.toString, ident.name()), false)
-        GraftDataSource.writeCarryManifest(fs, staging,
-          carried.map(f =>
-            (GraftDataSource.relativePath(root, f.path), f.size, Some(f.statsJson))))
-        Generations.publishStaging(fs, conf, root, staging, nextGen, None, dir)
-      }
+      // the siblings' files carry with their stats and delete vectors;
+      // the dropped table's files, delete vectors and bucket marker don't
+      if (hadFiles)
+        Generations.stage(org.apache.spark.sql.SparkSession.active, dir)
+          .publish(Generations.Commit(resolved, listed.map(_._1),
+            carried.map(_.carryEntry(root)), droppedTable = Some(ident.name())))
     } else {
       val files = GraftDataSource.listFiles(conf, dir)
       val probed = GraftDataSource.inParallel(files)(f => (f, openFooter(f)(_.tableNames)))

@@ -207,12 +207,17 @@ object GraftDataSource {
     * LIST call) is minutes; 16 concurrent calls make it seconds. */
   private val ListThreads = 16
 
-  /** Run `f` over `items` on a transient bounded pool, preserving order. */
+  /** Run `f` over `items` on a transient bounded pool, preserving order.
+    * The first failure cancels the rest: daemon threads and
+    * `shutdownNow`, so a failed sweep's queued footer opens never run
+    * on behind the exception (a caller that retries would otherwise
+    * race its own abandoned probes). */
   def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] = {
     if (items.size <= 1) items.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(ListThreads, items.size))
+        math.min(ListThreads, items.size),
+        r => { val t = new Thread(r, "graft-list"); t.setDaemon(true); t })
       try {
         items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
           def call(): B = f(a)
@@ -221,8 +226,12 @@ object GraftDataSource {
           // a corrupt footer), not an opaque ExecutionException wrapper
           try fut.get()
           catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
+            case e: Throwable =>
+              pool.shutdownNow()
+              throw (e match {
+                case x: java.util.concurrent.ExecutionException => Option(x.getCause).getOrElse(x)
+                case other => other
+              })
           }
         }
       } finally pool.shutdown()
@@ -400,23 +409,46 @@ object GraftDataSource {
     * file's per-chunk zone-map stats ([[graft.format.Stats.statsToJson]]),
     * which lets DML candidate selection prune manifest-covered files with
     * zero per-file I/O. */
-  def readCarryManifestFull(fs: FileSystem, genDir: Path): Seq[(String, Long, Option[String])] = {
-    val p = new Path(genDir, CarryManifestName)
+  def readCarryManifestFull(fs: FileSystem, genDir: Path): Seq[(String, Long, Option[String])] =
+    readStatsLines(fs, new Path(genDir, CarryManifestName), strict = true)
+
+  /** The one line codec of the stats manifests (`.carry` and the two
+    * stats sidecars): `<bytes>\t<rel>[\t<stats json>]`. */
+  private def statsLine(rel: String, bytes: Long, stats: Option[String]): String =
+    s"$bytes\t$rel" + stats.map("\t" + _).getOrElse("")
+
+  /** Parse a stats-manifest file; an absent file reads as empty. Strict
+    * (the `.carry` manifest, which defines a generation's view): a
+    * corrupt line fails naming the file. Lenient (the advisory sidecars,
+    * whose every line must carry stats): a torn or corrupt line — or any
+    * read failure — degrades to a footer read, never a failure. */
+  private def readStatsLines(fs: FileSystem, p: Path,
+      strict: Boolean): Seq[(String, Long, Option[String])] =
     try {
-      if (!fs.exists(p)) return Seq.empty
       val in = fs.open(p)
       val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      text.split('\n').toSeq.filter(_.nonEmpty).map { line =>
+      text.split('\n').toSeq.filter(_.nonEmpty).flatMap { line =>
         val parts = line.split('\t')
-        require(parts.length >= 2 && parts(0).nonEmpty,
-          s"corrupt carry manifest line in $p: '$line'")
-        (parts(1), parts(0).toLong,
-          if (parts.length >= 3 && parts(2).nonEmpty) Some(parts(2)) else None)
+        val stats = if (parts.length >= 3 && parts(2).nonEmpty) Some(parts(2)) else None
+        if (strict) {
+          require(parts.length >= 2 && parts(0).nonEmpty,
+            s"corrupt carry manifest line in $p: '$line'")
+          Some((parts(1), parts(0).toLong, stats))
+        } else if (stats.isDefined && parts(1).nonEmpty)
+          scala.util.Try((parts(1), parts(0).toLong, stats)).toOption
+        else None
       }
     } catch {
-      case _: java.io.FileNotFoundException => Seq.empty // swept mid-read
+      case _: java.io.FileNotFoundException => Seq.empty // absent, or swept mid-read
+      case _: java.io.IOException if !strict => Seq.empty
     }
-  }
+
+  /** A stats sidecar's lines, each carrying stats: [[readStatsLines]]
+    * lenient, and its writers' text. */
+  private def readStatsSidecar(fs: FileSystem, p: Path): Seq[(String, Long, String)] =
+    readStatsLines(fs, p, strict = false).collect { case (rel, sz, Some(js)) => (rel, sz, js) }
+  private def statsSidecarText(entries: Seq[(String, Long, String)]): String =
+    entries.map { case (rel, sz, js) => statsLine(rel, sz, Some(js)) }.mkString("\n")
 
   /** Staged-stats sidecar: footer stats of a STAGING dir's own fresh
     * output, accumulated by [[GraftBatchWrite.commit]] from the write
@@ -429,22 +461,8 @@ object GraftDataSource {
     * falls back to footer reads for its re-built entries. */
   val StagedStatsName = ".staged-stats"
 
-  def readStagedStats(fs: FileSystem, stagingDir: Path): Seq[(String, Long, String)] = {
-    val p = new Path(stagingDir, StagedStatsName)
-    try {
-      if (!fs.exists(p)) return Seq.empty
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      text.split('\n').toSeq.filter(_.nonEmpty).flatMap { line =>
-        val parts = line.split('\t')
-        if (parts.length >= 3 && parts(1).nonEmpty)
-          // toLong guarded too: a corrupt size field is a corrupt line,
-          // and a corrupt line degrades to a footer read, never a failure
-          scala.util.Try((parts(1), parts(0).toLong, parts(2))).toOption
-        else None // a torn/corrupt line degrades to a footer read, never a failure
-      }
-    } catch { case _: java.io.IOException => Seq.empty }
-  }
+  def readStagedStats(fs: FileSystem, stagingDir: Path): Seq[(String, Long, String)] =
+    readStatsSidecar(fs, new Path(stagingDir, StagedStatsName))
 
   /** Merge `entries` ((staging-relative rel, bytes, statsJson)) into the
     * sidecar. Per-table write commits run sequentially on the driver, so
@@ -457,8 +475,7 @@ object GraftDataSource {
     val add = entries.filterNot(e => have.contains(e._1))
     if (add.isEmpty) return
     AtomicPublish.text(sessionConf(), new Path(stagingDir, StagedStatsName),
-      (existing ++ add).map { case (rel, sz, js) => s"$sz\t$rel\t$js" }
-        .mkString("\n"))
+      statsSidecarText(existing ++ add))
   }
 
   /** Append-stats sidecars: a PLAIN APPEND's footer stats, written next
@@ -486,7 +503,7 @@ object GraftDataSource {
     val fs = dataDir.getFileSystem(conf)
     AtomicPublish.text(conf,
       new Path(dataDir, s"$AppendStatsPrefix${java.util.UUID.randomUUID()}"),
-      entries.map { case (rel, sz, js) => s"$sz\t$rel\t$js" }.mkString("\n"))
+      statsSidecarText(entries))
     // bound the sidecar count: many appends between publishes fold into
     // one file once they pile up. Planners read-only (a swept input
     // degrades them to footer reads); per-table write commits run
@@ -495,25 +512,13 @@ object GraftDataSource {
         .filter(_.getName.startsWith(AppendStatsPrefix)).toSeq
       catch { case _: java.io.IOException => Seq.empty }
     if (all.size >= AppendStatsFoldAt) {
-      val folded = all.flatMap(p => readAppendStatsFile(fs, p))
+      val folded = all.flatMap(p => readStatsSidecar(fs, p))
       AtomicPublish.text(conf,
         new Path(dataDir, s"$AppendStatsPrefix${java.util.UUID.randomUUID()}"),
-        folded.map { case (rel, sz, js) => s"$sz\t$rel\t$js" }.mkString("\n"))
+        statsSidecarText(folded))
       all.foreach(p => try fs.delete(p, false) catch { case _: java.io.IOException => })
     }
   }
-
-  private def readAppendStatsFile(fs: FileSystem, p: Path): Seq[(String, Long, String)] =
-    try {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      text.split('\n').toSeq.filter(_.nonEmpty).flatMap { line =>
-        val parts = line.split('\t')
-        if (parts.length >= 3 && parts(1).nonEmpty)
-          scala.util.Try((parts(1), parts(0).toLong, parts(2))).toOption
-        else None // torn/corrupt line: degrade to a footer read, never fail
-      }
-    } catch { case _: java.io.IOException => Seq.empty } // folded/swept mid-read
 
   def writeCarryManifest(fs: FileSystem, genDir: Path,
       entries: Seq[(String, Long, Option[String])]): Unit =
@@ -521,8 +526,7 @@ object GraftDataSource {
     // manifests (fresh stagings included) to compute its pinned-file
     // set — it must see a complete manifest or none, never a torn line
     AtomicPublish.text(GraftDataSource.sessionConf(), new Path(genDir, CarryManifestName),
-      entries.map { case (rel, size, stats) =>
-        s"$size\t$rel" + stats.map("\t" + _).getOrElse("") }
+      entries.map { case (rel, size, stats) => statsLine(rel, size, stats) }
         .sorted.mkString("\n"))
 
   /** Session switches for SQL DML semantics, one per command (the
@@ -618,32 +622,20 @@ object GraftDataSource {
       }.toMap
   }
 
-  /** Carry the live generation's `.dvs` entries into a rewrite's staging,
-    * minus the entries of data files the rewrite REPLACED (their rows
-    * were re-written without the deleted ones — a carried DV would
-    * re-delete positions of a different file). Sibling tables' entries
-    * always carry. Shared by [[Generations.rewriteTable]], the SQL COW
-    * commit, and the merge-on-read commit (which then overlays its own
-    * fresh entries). */
-  def carryDvEntries(fs: FileSystem, conf: Configuration, dir: String,
-      replacedRel: Set[String]): Seq[(String, String, String, Long)] = {
-    val resolved = resolveDataDir(conf, dir)
-    if (resolved == dir) return Seq.empty
-    readDvManifest(fs, new Path(resolved))
-      .filterNot { case (_, rel, _, _) => replacedRel.contains(rel) }
-  }
-
-  /** Copy sibling tables' bucket markers from the live data dir into a
-    * rewrite's staging (the rewrite re-created at most its OWN table's
-    * marker) — one implementation shared by [[Generations.rewriteTable]]
-    * and the SQL row-level COW commit. */
+  /** Copy the bucket markers of source data dir `dataDir` that `staging`
+    * lacks (a rewrite re-creates at most its OWN table's marker), except
+    * the `excluded` marker name (DROP TABLE's). A source dir already
+    * swept carries nothing: its generation was superseded, so the
+    * publish loses its generation race anyway. */
   def carryBucketMarkers(fs: FileSystem, conf: Configuration,
-      dir: String, staging: Path): Unit = {
-    val oldDataDir = new Path(resolveDataDir(conf, dir))
-    if (fs.getFileStatus(oldDataDir).isDirectory) fs.listStatus(oldDataDir).foreach { st =>
+      dataDir: String, staging: Path, excluded: Option[String]): Unit = {
+    val oldDataDir = new Path(dataDir)
+    val entries = try fs.listStatus(oldDataDir).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    entries.foreach { st =>
       val n = st.getPath.getName
       if (st.isFile && n.startsWith(".bucket_") && n.endsWith(".json") &&
-          !fs.exists(new Path(staging, n)))
+          !excluded.contains(n) && !fs.exists(new Path(staging, n)))
         org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs, new Path(staging, n),
           false, conf)
     }
@@ -744,7 +736,7 @@ object GraftDataSource {
       manifestParses.incrementAndGet()
       val raw = carrySt.map(_ => readCarryManifestFull(fs, p)
           .flatMap { case (rel, _, js) => js.map(rel -> _) }).getOrElse(Seq.empty) ++
-        sidecars.flatMap(s => readAppendStatsFile(fs, s.getPath)
+        sidecars.flatMap(s => readStatsSidecar(fs, s.getPath)
           .map { case (rel, _, js) => rel -> js })
       val parsed = inParallel(raw) { case (rel, js) =>
         graft.format.Stats.statsFromJson(js).map(rel -> _)

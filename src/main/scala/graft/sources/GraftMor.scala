@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.UUID
-
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
@@ -55,7 +53,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * re-deleting already-deleted rows is impossible by construction.
   *
   * Commit publishes through the same staging/claim/no-clobber/pointer
-  * machinery as every other rewrite ([[Generations.publishStaging]]):
+  * machinery as every other rewrite ([[Generations.Staged]]):
   * crash before commit leaves unreferenced staging for the next sweep; a
   * concurrent rewrite loses the no-clobber race loudly. A file whose
   * merged delete vector covers EVERY row is dropped from the carry
@@ -131,15 +129,11 @@ private[sources] class GraftMorBatchWrite(dir: String, table: String,
   private val conf = GraftDataSource.sessionConf()
   private val root = new Path(dir)
   private val fs = root.getFileSystem(conf)
-  private var staging: Path = _
-  private var nextGen: String = _
+  private var staged: Generations.Staged = _
   private var inner: GraftBatchWrite = _
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val s = SparkSession.active
-    nextGen = Generations.prepareRewrite(s, dir)
-    staging = new Path(root, s"$nextGen.tmp-${UUID.randomUUID()}")
-    Generations.claimStaging(conf, staging)
+    staged = Generations.stage(SparkSession.active, dir)
     val listed = GraftDataSource.listPartitionedSized(conf, dir)
     val partCols = GraftDataSource.partitionColumns(listed.map { case (p, _, m) => (p, m) })
     // hive-layout dirs whose path columns the catalog schema can't carry:
@@ -151,7 +145,7 @@ private[sources] class GraftMorBatchWrite(dir: String, table: String,
     // construction); replacement rows route through the bucketed writer
     // so they land as bucket-TAGGED files under the same layout tag the
     // carried originals prove their grouping with
-    inner = new GraftBatchWrite(staging.toString, writeSchema, truncate = false,
+    inner = new GraftBatchWrite(staged.path.toString, writeSchema, truncate = false,
       table, graft.format.GraftFileWriter.DefaultPageSize, "balanced",
       GraftBatchWrite.DefaultChunkRows,
       if (missingPart.isEmpty && layout.isEmpty) partCols else Seq.empty,
@@ -188,7 +182,7 @@ private[sources] class GraftMorBatchWrite(dir: String, table: String,
     val insertedFiles = dms.collect { case m: GraftCommitMessage => m.file }
       .exists(_.nonEmpty)
     if (newPerFile.valuesIterator.forall(_.isEmpty) && !insertedFiles) {
-      fs.delete(staging, true) // matched nothing: no generation churn
+      staged.abort() // matched nothing: no generation churn
       return
     }
     try {
@@ -257,42 +251,31 @@ private[sources] class GraftMorBatchWrite(dir: String, table: String,
           DvOut(rel, None, fullyDeleted = true, churn)
         } else {
           val blobName = s"_dv/dv-$blobIdx.dvg"
-          val out = fs.create(new Path(staging, blobName), false)
+          val out = fs.create(new Path(staged.path, blobName), false)
           try out.write(graft.format.Dv.encode(merged0)) finally out.close()
-          DvOut(rel, Some((table, rel, s"$nextGen/$blobName", merged0.length.toLong)),
+          DvOut(rel, Some((table, rel, s"${staged.nextGen}/$blobName", merged0.length.toLong)),
             fullyDeleted = false, churn)
         }
       }
-      val churnBytes = outs.map(_.churn).sum
-      val newEntries = Seq.newBuilder[(String, String, String, Long)]
-      outs.flatMap(_.entry).foreach(newEntries += _)
       val dropped = outs.filter(_.fullyDeleted).map(_.rel).toSet
-      val targets = outs.map(_.rel).toSet
       // carry every live data file by reference (minus fully-deleted
-      // ones), stats riding along so the next DML keeps zero-footer-I/O
-      GraftDataSource.writeCarryManifest(fs, staging,
+      // ones), stats riding along so the next DML keeps zero-footer-I/O;
+      // the fresh blobs above merged this table's entries for re-DV'd
+      // files, every other carried file keeps its live entry
+      staged.publish(Generations.Commit(srcDir, listed.map(_._1),
         listed.map { case (p, size, _) =>
           val rel = GraftDataSource.relativePath(root, p)
           (rel, size, statsByRel.get(rel))
-        }.filterNot { case (rel, _, _) => dropped.contains(rel) })
-      // sibling tables' DV entries carry verbatim; this table's entries
-      // for re-DV'd files were merged into the fresh blobs above
-      val carriedDv = GraftDataSource.carryDvEntries(fs, conf, dir,
-        targets ++ dropped)
-      GraftDataSource.writeDvManifest(fs, staging, carriedDv ++ newEntries.result())
-      GraftDataSource.carryBucketMarkers(fs, conf, dir, staging)
-      Generations.publishStaging(fs, conf, root, staging, nextGen, None, dir,
-        sourceView = Some((srcDir, listed.map(_._1.toUri.getPath).toSet)))
-      GraftDataSource.recordChurn(SparkSession.active, dir, table, churnBytes)
+        }.filterNot { case (rel, _, _) => dropped.contains(rel) },
+        freshDvs = outs.flatMap(_.entry),
+        churn = Seq(table -> outs.map(_.churn).sum)))
     } catch {
-      case e: Throwable =>
-        try fs.delete(staging, true) catch { case _: Exception => }
-        throw e
+      case e: Throwable => staged.abort(); throw e
     }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    if (staging != null) fs.delete(staging, true)
+    if (staged != null) staged.abort()
 }
 
 /** Serializable task-writer factory (a factory defined inline in the

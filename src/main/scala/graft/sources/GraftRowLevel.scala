@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.UUID
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters}
@@ -174,28 +172,23 @@ class GraftCowScanBuilder(op: GraftRowLevelOperation, dir: String,
   }
 }
 
-/** The replacement write: rows land in a `gen-N.tmp-*` staging dir via
-  * the ordinary [[GraftBatchWrite]]; commit writes the `.carry` manifest
-  * (live files minus the replaced set, by reference at their original
-  * location) and publishes the generation atomically — crash before
-  * commit leaves only unreferenced staging for the next sweep, identical
-  * to every other rewrite in this source. */
+/** The replacement write: rows land in a staged generation
+  * ([[Generations.stage]]) via the ordinary [[GraftBatchWrite]]; commit
+  * carries the live files minus the replaced set by reference at their
+  * original location and publishes the generation atomically — crash
+  * before commit leaves only unreferenced staging for the next sweep,
+  * identical to every other rewrite in this source. */
 class GraftCowBatchWrite(op: GraftRowLevelOperation, dir: String,
     table: String, schema: StructType,
     layout: Option[(String, Int, Option[String])] = None) extends BatchWrite {
 
   private val conf = GraftDataSource.sessionConf()
   private val root = new Path(dir)
-  private val fs = root.getFileSystem(conf)
-  private var staging: Path = _
-  private var nextGen: String = _
+  private var staged: Generations.Staged = _
   private var inner: GraftBatchWrite = _
 
   override def createBatchWriterFactory(pinfo: PhysicalWriteInfo): DataWriterFactory = {
-    val s = SparkSession.active
-    nextGen = Generations.prepareRewrite(s, dir)
-    staging = new Path(root, s"$nextGen.tmp-${UUID.randomUUID()}")
-    Generations.claimStaging(conf, staging)
+    staged = Generations.stage(SparkSession.active, dir)
     val partCols = op.partCols.getOrElse {
       val listed = GraftDataSource.listPartitionedSized(conf, dir)
       GraftDataSource.partitionColumns(listed.map { case (p, _, m) => (p, m) })
@@ -211,7 +204,7 @@ class GraftCowBatchWrite(op: GraftRowLevelOperation, dir: String,
           "but the catalog schema does not carry those columns — a row-level " +
           "rewrite would drop the partition values. Use FormatOps." +
           "updateWhere/deleteWhere/upsert on the path API for this layout")
-    inner = new GraftBatchWrite(staging.toString, schema, truncate = false,
+    inner = new GraftBatchWrite(staged.path.toString, schema, truncate = false,
       table, graft.format.GraftFileWriter.DefaultPageSize, "balanced",
       GraftBatchWrite.DefaultChunkRows, partCols,
       bucketSpec = layout.map { case (c, n, _) => (c, n) },
@@ -227,36 +220,24 @@ class GraftCowBatchWrite(op: GraftRowLevelOperation, dir: String,
     // pin the source view for the publish's late-append fold
     val srcDir = GraftDataSource.resolveDataDir(conf, dir)
     val commitListing = GraftDataSource.listPartitionedSized(conf, dir)
-    val carried = commitListing
-      .filterNot { case (p, _, _) => replaced.contains(p.toString) }
-    // sibling tables' bucket markers live in the data dir — carry them
-    // (the write above re-created at most this table's own)
-    GraftDataSource.carryBucketMarkers(fs, conf, dir, staging)
     // carried files keep their zone-map stats — from the scan's own
     // classification (covers files carried for the FIRST time) with the
-    // live manifest as fallback; immutable files, stats never stale
-    GraftDataSource.writeCarryManifest(fs, staging,
+    // live manifest as fallback; immutable files, stats never stale —
+    // and their delete vectors (the candidate read applied DVs, so
+    // replaced files' rewritten rows shed theirs)
+    val (rewritten, carried) = commitListing.partition { case (p, _, _) =>
+      replaced.contains(p.toString) }
+    staged.publish(Generations.Commit(srcDir, commitListing.map(_._1),
       carried.map { case (p, size, _) =>
         val rel = GraftDataSource.relativePath(root, p)
-        (rel, size, op.fileStats.get(rel)) })
-    // carried files keep their delete vectors (the candidate read applied
-    // DVs, so replaced files' rewritten rows shed theirs); sibling
-    // tables' entries carry verbatim
-    GraftDataSource.writeDvManifest(fs, staging,
-      GraftDataSource.carryDvEntries(fs, conf, dir,
-        replaced.map(s => GraftDataSource.relativePath(root, new Path(s)))))
-    Generations.publishStaging(fs, conf, root, staging, nextGen, None, dir,
-      sourceView = Some((srcDir, commitListing.map(_._1.toUri.getPath).toSet)))
-    // stats lifecycle: the replaced files' rows were churned by this
-    // DELETE/UPDATE/MERGE — bill their bytes against the ANALYZE snapshot
-    GraftDataSource.recordChurn(SparkSession.active, dir, table,
-      commitListing.collect {
-        case (p, size, _) if replaced.contains(p.toString) => size
-      }.sum)
+        (rel, size, op.fileStats.get(rel)) },
+      // stats lifecycle: the replaced files' rows were churned by this
+      // DELETE/UPDATE/MERGE — bill their bytes against the ANALYZE snapshot
+      churn = Seq(table -> rewritten.map(_._2).sum)))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    if (staging != null) fs.delete(staging, true)
+    if (staged != null) staged.abort()
 }
 
 /** Shape adapter for Spark's group-based ReplaceData rows. When the

@@ -596,4 +596,41 @@ class MorDeleteSpec extends SparkSpec {
       "empty-footprint DELETE must not churn a generation")
     assert(spark.table("mor9.db.t").count() == 100)
   }
+
+  /** Sibling tables `t` and `u` in one namespace, 4,000 rows each, with
+    * a merge-on-read DELETE of 400 rows on each: every later publish in
+    * the namespace must carry both tables' delete vectors. */
+  private def siblingsWithDvs(cat: String): String = {
+    val root = mkCatalog(cat)
+    spark.range(0, 4000).selectExpr("id AS k")
+      .repartitionByRange(4, col("id")).createOrReplaceTempView(s"${cat}_src")
+    spark.sql(s"CREATE TABLE $cat.db.t AS SELECT * FROM ${cat}_src")
+    spark.sql(s"CREATE TABLE $cat.db.u AS SELECT * FROM ${cat}_src")
+    withMor {
+      spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 3")
+      spark.sql(s"DELETE FROM $cat.db.u WHERE k % 10 = 7")
+    }
+    assert(spark.table(s"$cat.db.t").count() == 3600)
+    s"$root/db"
+  }
+
+  test("DROP TABLE of a sibling keeps the survivor's delete vectors") {
+    val dir = siblingsWithDvs("mor10")
+    spark.sql("DROP TABLE mor10.db.u")
+    val t = spark.table("mor10.db.t")
+    assert(t.count() == 3600, "dropping u resurrected t's deleted rows")
+    assert(t.filter(col("k") % 10 === 3).count() == 0)
+    // only carried files keep a delete vector: u's files left, so did theirs
+    val dvs = liveDvEntries(dir)
+    assert(dvs.map(_._1).toSet == Set("t"), s"u's entries carried: $dvs")
+    assert(dvs.map(_._4).sum == 400)
+  }
+
+  test("CTAS into a namespace keeps its siblings' delete vectors") {
+    siblingsWithDvs("mor11")
+    spark.sql("CREATE TABLE mor11.db.w AS SELECT * FROM mor11_src WHERE k < 10")
+    assert(spark.table("mor11.db.t").count() == 3600, "CTAS resurrected t's deleted rows")
+    assert(spark.table("mor11.db.u").count() == 3600, "CTAS resurrected u's deleted rows")
+    assert(spark.table("mor11.db.w").count() == 10)
+  }
 }

@@ -101,4 +101,22 @@ class PlanningSoakSpec extends SparkSpec {
     // the real manifest back so later suites' temp-dir sweeps stay sane
     GraftDataSource.writeCarryManifest(fs, genDir, existing)
   }
+
+  test("a failed parallel sweep cancels its queued probes") {
+    // item 0 fails at once; every other item would sleep, then count.
+    // Once the call has thrown, at most one pool's worth of the rest may
+    // have started — queued probes of a failed sweep must not run on
+    // behind the exception (a retrying caller would race them)
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val e = intercept[IllegalStateException] {
+      GraftDataSource.inParallel(0 until 64) { i =>
+        if (i == 0) throw new IllegalStateException("probe 0 failed")
+        started.incrementAndGet()
+        Thread.sleep(100)
+      }
+    }
+    assert(e.getMessage == "probe 0 failed")
+    Thread.sleep(1000) // a pool left running drains all 63 in ~0.4 s
+    assert(started.get <= 16, s"${started.get} probes ran after the sweep failed")
+  }
 }
