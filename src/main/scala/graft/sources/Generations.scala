@@ -242,14 +242,7 @@ object Generations {
   def rewriteTag(conf: Configuration, genDir: Path): Option[String] =
     try {
       val p = new Path(genDir, GraftDataSource.RewriteTagName)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-        finally in.close()
-      }
+      GraftDataSource.readMetaText(p.getFileSystem(conf), p).map(_.trim)
     } catch { case _: java.io.IOException => None }
 
   /** One row per generation still on disk: (index, isLive, birth epoch
@@ -377,38 +370,20 @@ object Generations {
     // double it (the exactly-once contract for at-least-once drivers)
     if (idempotencyKey.isDefined &&
         liveRewriteTag(conf, dir) == idempotencyKey) return
-    val staged = stage(s, dir, graceMs) // entry sweep + allocation
-    // pin the source view for the publish's late-append fold
-    val srcDir = GraftDataSource.resolveDataDir(conf, dir)
-    // ONE listing serves both the partition-column probe and the table
-    // enumeration (a 10^6-file LIST against an object store is the cost).
-    // A probe can race a concurrent append's visibility re-home (the
-    // file-level rename into the live generation dir): the listed path
-    // vanishes before the footer open. Re-list and re-probe, bounded —
-    // SKIPPING a vanished file could silently drop a whole table from
-    // the rewrite, so vanish is never ignored, only re-resolved.
-    var attempt = 0
-    var listed = GraftDataSource.listPartitionedFiles(conf, dir)
-    var tableNames: Seq[String] = Seq.empty
-    var probed = false
-    while (!probed) {
-      try {
-        tableNames = GraftDataSource.inParallel(listed.map(_._1)) { f =>
-          val r = graft.format.GraftFileReader.open(f.getFileSystem(conf), f)
-          try r.tableNames finally r.close()
-        }.flatten.distinct.sorted
-        probed = true
-      } catch {
-        case e: java.io.FileNotFoundException =>
-          attempt += 1
-          if (attempt > 4) throw e
-          Thread.sleep(5L * attempt)
-          listed = GraftDataSource.listPartitionedFiles(conf, dir)
-      }
+    val staged = stage(s, dir, graceMs) // entry sweep, allocation, source view
+    // the source view serves the table enumeration, the partition
+    // columns and the data read (a 10^6-file LIST against an object
+    // store is the cost). SKIPPING a file that vanished before its
+    // footer probe could silently drop a whole table from the rewrite,
+    // so the probe re-takes the view instead.
+    val tableNames = staged.retrying {
+      GraftDataSource.inParallel(staged.listing.map(_._1)) { f =>
+        val r = graft.format.GraftFileReader.open(f.getFileSystem(conf), f)
+        try r.tableNames finally r.close()
+      }.flatten.distinct.sorted
     }
-    // hive-style partition columns re-route to the same layout on rewrite
-    val partCols = GraftDataSource.partitionColumns(listed)
     if (tableNames.isEmpty) return // nothing to rewrite
+    val listed = staged.listing
     tableNames.foreach { t =>
       // PIN the data read to the same listing the late-append fold
       // compares against: the lazy data-plane read otherwise lists at
@@ -416,8 +391,9 @@ object Generations {
       // the fold would then reference a second time (duplicate rows)
       val df0 = transform(t, s.read.format("graft").option("table", t)
         .option("fileFilter", listed.map(_._1.toString).mkString("\n")).load(dir))
-      val layout = GraftDataSource.readBucketMarker(conf, dir, t)
-      shapedWriter(df0, layout, targetFiles, t, writeOptions, partCols)
+      val layout = GraftDataSource.readBucketMarkerAt(conf, staged.srcDir, t)
+      // hive-style partition columns re-route to the same layout
+      shapedWriter(df0, layout, targetFiles, t, writeOptions, staged.partCols)
         .save(staged.path.toString)
     }
     // metadata a caller wants published ATOMICALLY with the generation
@@ -429,35 +405,28 @@ object Generations {
     // the whole listing counts against each table's ANALYZE snapshot)
     // or preserved them all (compaction/clustering — re-anchor the byte
     // extrapolation so a 2× compaction doesn't halve row estimates)
-    val churn = if (!rowChurning) Seq.empty else {
-      val total = GraftDataSource.inParallel(listed.map(_._1)) { p =>
-        try p.getFileSystem(conf).getFileStatus(p).getLen catch {
-          case _: Exception => 0L
-        }
-      }.sum
-      tableNames.map(_ -> total)
-    }
-    // every table was rewritten: nothing carries by reference
-    staged.publish(Commit(srcDir, listed.map(_._1), carried = Seq.empty,
+    val churn = if (!rowChurning) Seq.empty else tableNames.map(_ -> listed.map(_._2).sum)
+    // every table was rewritten: the whole view is replaced
+    staged.publish(Commit(listed.map(e => GraftDataSource.relativePath(new Path(dir), e._1)),
       churn = churn, idempotencyKey = idempotencyKey))
     if (!rowChurning) GraftDataSource.rebaseStatsBytes(conf, dir)
   }
 
-  /** What a generation publishes besides the staging's fresh output.
+  /** What a generation changes in its source view ([[Staged]]), besides
+    * the staging's fresh output.
     *
-    *  - `srcDir` and `listing`: the source view, i.e. the live data dir
-    *    and the listing the carry set was taken from. The publish carries
-    *    that view's delete vectors and sibling bucket markers, and its
-    *    late-append fold compares against the listing.
-    *  - `carried`: (root-relative file, bytes, stats) per file the
-    *    generation keeps by reference.
+    *  - `replaced`: the root-relative files this generation drops from
+    *    the view (rewritten, deleted, or a dropped table's). Every other
+    *    file of the view carries by reference, with its delete vector.
+    *  - `stats`: root-relative file → zone-map stats json, from the
+    *    caller's classification; a carried file keeps its entry.
     *  - `freshDvs`: delete-vector entries this generation writes; each
     *    replaces its file's live entry.
     *  - `churn`: (table, bytes) billed against each table's ANALYZE
     *    snapshot once the generation is live.
     *  - `droppedTable`: a table whose bucket marker must not carry. */
-  private[sources] case class Commit(srcDir: String, listing: Seq[Path],
-      carried: Seq[(String, Long, Option[String])],
+  private[sources] case class Commit(replaced: Seq[String] = Seq.empty,
+      stats: Map[String, String] = Map.empty,
       freshDvs: Seq[(String, String, String, Long)] = Seq.empty,
       churn: Seq[(String, Long)] = Seq.empty,
       droppedTable: Option[String] = None,
@@ -466,19 +435,62 @@ object Generations {
   /** A staged next generation of `dir`, made by [[stage]]: the one way
     * every publisher (full and file-granular rewrites, SQL copy-on-write
     * and merge-on-read writes, staged CTAS, DROP TABLE) builds a
-    * generation. The caller writes its fresh output under [[path]], then
-    * [[publish]]es or [[abort]]s. The staging dir is named and claimed
-    * on the first use of [[path]] (before any data lands in it), so an
-    * operation that finds nothing to do leaves nothing behind. */
+    * generation. It holds the SOURCE VIEW the generation derives from —
+    * the live data dir and its listing, taken from one pointer read
+    * after the allocation — so a publisher classifies, reads and carries
+    * from one view and never lists on its own. The caller writes its
+    * fresh output under [[path]], then [[publish]]es or [[abort]]s. The
+    * staging dir is named and claimed on the first use of [[path]]
+    * (before any data lands in it), so an operation that finds nothing
+    * to do leaves nothing behind. */
   private[sources] final class Staged private[Generations] (s: SparkSession,
       dir: String, private var gen: String) {
     private val conf = s.sparkContext.hadoopConfiguration
     private val root = new Path(dir)
     private val fs = root.getFileSystem(conf)
     private var claimed = false
+    private var view = GraftDataSource.liveView(conf, dir)
 
     /** The generation this staging publishes as. */
     def nextGen: String = gen
+
+    /** The source view's data dir (`dir` itself when pointerless). */
+    def srcDir: String = view._1
+
+    /** The source view's files: (path, bytes, hive partition values). */
+    def listing: Seq[(Path, Long, Map[String, String])] = view._2
+
+    /** The source view's hive partition columns. */
+    def partCols: Seq[String] =
+      GraftDataSource.partitionColumns(listing.map { case (p, _, m) => (p, m) })
+
+    /** Run `f` over the source view; when a listed file vanishes before
+      * `f` opens it (a concurrent append's visibility re-home renames it
+      * into the live generation dir), re-take the view and run `f`
+      * again, at most 4 retries. A vanished file is never skipped: that
+      * could silently drop its rows. `f` must read the view through this
+      * staging and must not `return`. */
+    def retrying[A](f: => A): A = {
+      var attempt = 0
+      while (true) {
+        try return f
+        catch {
+          case e: java.io.FileNotFoundException =>
+            attempt += 1
+            if (attempt > 4) throw e
+            Thread.sleep(5L * attempt)
+            view = GraftDataSource.liveView(conf, dir)
+        }
+      }
+      throw new IllegalStateException("unreachable")
+    }
+
+    /** [[classifyForDml]] over the source view, with its generation's
+      * manifest stats. */
+    def classify(table: String,
+        pruneFilters: Option[Seq[graft.format.Stats.Prune]]): Seq[DmlFile] =
+      classifyForDml(conf, root, listing, table, pruneFilters, dir,
+        manifestStatsOverride = Some(GraftDataSource.carryStatsAt(conf, dir, srcDir)))
 
     lazy val path: Path = {
       val p = new Path(root, s"$gen.tmp-${java.util.UUID.randomUUID()}")
@@ -487,31 +499,44 @@ object Generations {
       p
     }
 
-    /** Carry and publish: write `.carry` (the carried files with their
-      * stats) and `.dvs` (the source view's entries for carried files
-      * that get no fresh entry, plus the fresh entries), copy the source
-      * view's bucket markers the staging lacks, publish through
-      * [[publishStaging]] with the source view's late-append fold, then
-      * bill churn. Any failure aborts the staging, except a lost
-      * generation race under `keepOnConflict` (the optimistic rebase
-      * re-publishes it). */
+    /** Carry and publish. Refuses when a `replaced` file has left the
+      * source view: the caller chose it from an older view (a concurrent
+      * rewrite replaced it since), and carrying the view's replacement
+      * next to this generation's own rewrite would duplicate its rows.
+      * Otherwise writes `.carry` (the view minus `replaced`, with
+      * stats) and `.dvs` (the view's entries for carried files that get
+      * no fresh entry, plus the fresh entries), copies the view's bucket
+      * markers the staging lacks, publishes through [[publishStaging]]
+      * with the view's late-append fold, then bills churn. Any failure
+      * aborts the staging, except a lost generation race under
+      * `keepOnConflict` (the optimistic rebase re-publishes it). */
     def publish(c: Commit, keepOnConflict: Boolean = false): Unit = {
       try {
-        GraftDataSource.writeCarryManifest(fs, path, c.carried)
-        // a carried file keeps its delete vector; a rewritten or dropped
-        // file is not carried, so its entry goes with it
-        val carried = c.carried.map(_._1).toSet
+        val live = listing.map { case (p, size, _) =>
+          (GraftDataSource.relativePath(root, p), size) }
+        val replaced = c.replaced.toSet
+        val gone = replaced -- live.map(_._1)
+        if (gone.nonEmpty) throw new graft.format.OliveFormatException(
+          s"live view of $dir changed while this operation ran: ${gone.size} " +
+            s"file(s) it replaces, ${gone.min} first, left it (a concurrent " +
+            "rewrite replaced or dropped them); nothing was published — re-run")
+        val carried = live.filterNot(e => replaced.contains(e._1))
+        GraftDataSource.writeCarryManifest(fs, path,
+          carried.map { case (rel, size) => (rel, size, c.stats.get(rel)) })
+        // a carried file keeps its delete vector; a replaced file sheds
+        // it (a rewrite applied it, a drop discards it)
+        val keep = carried.map(_._1).toSet
         val fresh = c.freshDvs.map(_._2).toSet
-        val live = if (c.srcDir == dir) Seq.empty
-          else GraftDataSource.readDvManifest(fs, new Path(c.srcDir))
+        val liveDvs = if (srcDir == dir) Seq.empty
+          else GraftDataSource.readDvManifest(fs, new Path(srcDir))
         GraftDataSource.writeDvManifest(fs, path,
-          live.filter(e => carried.contains(e._2) && !fresh.contains(e._2)) ++ c.freshDvs)
+          liveDvs.filter(e => keep.contains(e._2) && !fresh.contains(e._2)) ++ c.freshDvs)
         val dropped = c.droppedTable.map(t =>
           GraftDataSource.bucketMarkerPath(path.toString, t).getName)
-        GraftDataSource.carryBucketMarkers(fs, conf, c.srcDir, path, dropped)
+        GraftDataSource.carryBucketMarkers(fs, conf, srcDir, path, dropped)
         publishStaging(fs, conf, root, path, gen, c.idempotencyKey, dir,
           keepStagingOnConflict = keepOnConflict,
-          sourceView = Some((c.srcDir, c.listing.map(_.toUri.getPath).toSet)))
+          sourceView = Some((srcDir, listing.map(_._1.toUri.getPath).toSet)))
       } catch {
         case e: GenerationConflictException if keepOnConflict => throw e
         case e: Throwable => abort(); throw e
@@ -523,20 +548,22 @@ object Generations {
     def abort(): Unit =
       if (claimed) try fs.delete(path, true) catch { case _: Exception => }
 
-    /** Re-aim a staging that lost its generation race at `next`. The
-      * failed publish consumed the liveness claim just before its
-      * rename; the staging is demonstrably fresh, so claim it again, and
-      * drop its pre-race `.dvs` (the next publish writes the rebased
-      * view's). */
-    private[Generations] def retarget(next: String): Unit = {
+    /** Re-aim a staging that lost its generation race at `next`, with
+      * the race winner's view as its source view. The failed publish
+      * consumed the liveness claim just before its rename; the staging
+      * is demonstrably fresh, so claim it again, and drop its pre-race
+      * `.dvs` (the next publish writes the rebased view's). */
+    private[Generations] def retarget(next: String,
+        source: (String, Seq[(Path, Long, Map[String, String])])): Unit = {
       claimStaging(conf, path)
       fs.delete(new Path(path, GraftDataSource.DvManifestName), false)
       gen = next
+      view = source
     }
   }
 
-  /** Entry sweep and next-generation allocation: the one way to start a
-    * generation (see [[Staged]]). */
+  /** Entry sweep, next-generation allocation and the source view: the
+    * one way to start a generation (see [[Staged]]). */
   private[sources] def stage(s: SparkSession, dir: String,
       graceMs: Long = -1L): Staged =
     new Staged(s, dir, prepareRewrite(s, dir, graceMs))
@@ -670,63 +697,56 @@ object Generations {
       requireTargets: Set[String] = Set.empty): Seq[(String, String)] = {
     val conf = s.sparkContext.hadoopConfiguration
     val root = new Path(dir)
-    val listed = GraftDataSource.listPartitionedSized(conf, dir)
-    if (listed.isEmpty && requireTargets.isEmpty) return Seq.empty
+    // staged BEFORE the targets are chosen: the entry sweep waits out a
+    // publish mid-swap, so the view the targets come from is the view
+    // this generation replaces. An early return leaves the staging
+    // unclaimed — nothing on disk.
+    val staged = stage(s, dir)
+    if (staged.listing.isEmpty && requireTargets.isEmpty) return Seq.empty
     // requireTargets were selected from metadata read BEFORE this listing;
     // an empty live view with required targets outstanding is the
     // concurrent-change race (table dropped/vacuumed in between), not a
     // never-existed table — surface the 're-run' refusal, not 'not found'
-    if (listed.isEmpty)
+    if (staged.listing.isEmpty)
       throw new graft.format.OliveFormatException(
         s"live view of $dir changed while selecting the rewrite's target " +
           "files (the table was dropped or vacuumed); re-run")
     // classification (manifest-first, footer fallback) tells which files
     // hold the table at all — a sibling table's file is never a target
-    val files = classifyForDml(conf, root, listed, table, None, dir)
+    val files = staged.retrying(staged.classify(table, None))
     if (!files.exists(_.metas.nonEmpty) && requireTargets.nonEmpty)
       throw new graft.format.OliveFormatException(
         s"live view of $dir changed while selecting the rewrite's target " +
           s"files (no '$table' file remains live); re-run")
     require(files.exists(_.metas.nonEmpty),
       s"table '$table' not found in $dir; nothing to rewrite")
-    val holds = files.filter(_.metas.nonEmpty).map(_.path.toUri.getPath).toSet
-    val targets = listed.collect { case (p, _, _)
-        if holds.contains(p.toUri.getPath) && isTarget(p) => p }
-    if (!requireTargets.subsetOf(targets.map(_.toUri.getPath).toSet))
+    val targets = files.filter(f => f.metas.nonEmpty && isTarget(f.path))
+    if (!requireTargets.subsetOf(targets.map(_.path.toUri.getPath).toSet))
       throw new graft.format.OliveFormatException(
         s"live view of $dir changed while selecting the rewrite's target " +
           "files (a concurrent rewrite replaced one); re-run")
     if (targets.isEmpty) return Seq.empty
-    targets.foreach { p =>
-      val f = files.find(_.path.toUri.getPath == p.toUri.getPath).get
+    targets.foreach { f =>
       if (f.names.size > 1) throw new UnsupportedOperationException(
-        s"$p holds tables ${f.names.mkString(",")}; a targeted rewrite of " +
+        s"${f.path} holds tables ${f.names.mkString(",")}; a targeted rewrite of " +
           s"'$table' would drop the siblings' rows — compact or split first")
     }
-    val staged = stage(s, dir)
-    val srcDir = GraftDataSource.resolveDataDir(conf, dir)
-    val targetRels = targets.map(GraftDataSource.relativePath(root, _)).toSet
-    val statsByRel = files.map(f =>
-      GraftDataSource.relativePath(root, f.path) -> f.statsJson).toMap
+    val targetRels = targets.map(f => GraftDataSource.relativePath(root, f.path))
     try {
-      val partCols = GraftDataSource.partitionColumns(listed.map { case (p, _, m) => (p, m) })
-      val layout = GraftDataSource.readBucketMarker(conf, dir, table)
+      val layout = GraftDataSource.readBucketMarkerAt(conf, staged.srcDir, table)
       val df = transform(s.read.format("graft").option("table", table)
-        .option("fileFilter", targets.map(_.toString).mkString("\n")).load(dir),
+        .option("fileFilter", targets.map(_.path.toString).mkString("\n")).load(dir),
         targets.size)
-      shapedWriter(df, layout, None, table, Map.empty, partCols).save(staged.path.toString)
+      shapedWriter(df, layout, None, table, Map.empty, staged.partCols)
+        .save(staged.path.toString)
       // rewritten files shed their DVs (the candidate read applied them);
       // carried files' entries ride by reference
-      val (rewritten, carried) = listed.map { case (p, size, _) =>
-        val rel = GraftDataSource.relativePath(root, p)
-        (rel, size, statsByRel.get(rel))
-      }.partition(e => targetRels.contains(e._1))
+      val targetSet = targets.map(_.path).toSet
       beforePublish(conf, staged.path,
-        carried.map { case (rel, _, _) => new Path(rel).getName })
-      staged.publish(Commit(srcDir, listed.map(_._1), carried,
-        churn = Seq(table -> rewritten.map(_._2).sum)))
-      targets.map(p =>
-        (GraftDataSource.relativePath(root, p), p.toUri.getPath)).sortBy(_._1)
+        files.map(_.path).filterNot(targetSet.contains).map(_.getName))
+      staged.publish(Commit(targetRels, dmlStats(root, files),
+        churn = Seq(table -> targets.map(_.size).sum)))
+      targetRels.zip(targets.map(_.path.toUri.getPath)).sortBy(_._1)
     } catch {
       case e: Throwable => staged.abort(); throw e
     }
@@ -767,7 +787,9 @@ object Generations {
 
   /** Publish a complete staging dir as generation `nextGen` and swing the
     * pointer — the atomic tail of [[Staged.publish]], which runs it for
-    * every generation publisher after the carry steps. */
+    * every generation publisher after the carry steps. `sourceView` is
+    * the staged source view: its data dir and its listing's URI paths,
+    * for the clustering-record carry and the late-append fold. */
   private[sources] def publishStaging(fs: org.apache.hadoop.fs.FileSystem, conf: Configuration,
       root: Path, staging: Path, nextGen: String,
       idempotencyKey: Option[String], dir: String,
@@ -826,7 +848,7 @@ object Generations {
     // one candidate file must not erase the CLAIM for the thousands of
     // carried files that are still perfectly tiled (a vanished record
     // reads as never-clustered and triggers a pointless full
-    // re-cluster). Copied byte-for-byte from the superseded live
+    // re-cluster). Copied byte-for-byte from the source view's
     // generation unless this staging wrote its own (cluster /
     // incremental recluster); honesty is downstream's job — DESCRIBE
     // diffs the record's member NAMES against the live listing, so a
@@ -839,24 +861,19 @@ object Generations {
       // already staged — the carry is best-effort by design (a dropped
       // claim is a conservative DESCRIBE, never wrong rows)
       try {
-        if (!fs.exists(specDst)) {
-          val src = GraftDataSource.resolveDataDir(conf, dir)
-          if (src != dir) {
-            val specSrc = new Path(src, GraftDataSource.ClusterSpecName)
-            if (fs.exists(specSrc)) {
-              val in = fs.open(specSrc)
-              val bytes = try in.readAllBytes() finally in.close()
-              // carry ONLY name-tracking records (5+ lines): DESCRIBE
-              // checks those name-exactly, so a carried record over a
-              // file-replacing DML reads 'partial', never 'clustered'.
-              // A vintage 4-line record has only the count check, which
-              // a count-preserving replacement would fool — for those
-              // the old vanish-on-publish behavior IS the honest claim.
-              if (new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-                  .split("\n").length > 4) {
-                val out = AtomicPublish.createStream(conf, specDst, overwrite = false)
-                try out.write(bytes) finally out.close()
-              }
+        sourceView.map(_._1).filter(_ != dir).foreach { src =>
+          if (!fs.exists(specDst)) GraftDataSource.readMetaBytes(fs,
+              new Path(src, GraftDataSource.ClusterSpecName)).foreach { bytes =>
+            // carry ONLY name-tracking records (5+ lines): DESCRIBE
+            // checks those name-exactly, so a carried record over a
+            // file-replacing DML reads 'partial', never 'clustered'.
+            // A vintage 4-line record has only the count check, which
+            // a count-preserving replacement would fool — for those
+            // the old vanish-on-publish behavior IS the honest claim.
+            if (new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+                .split("\n").length > 4) {
+              val out = AtomicPublish.createStream(conf, specDst, overwrite = false)
+              try out.write(bytes) finally out.close()
             }
           }
         }
@@ -1056,29 +1073,11 @@ object Generations {
     if (idempotencyKey.isDefined &&
         liveRewriteTag(conf, dir) == idempotencyKey) return true
     val root = new Path(dir)
-    val staged = stage(s, dir, graceMs) // entry sweep + allocation
-    // pin the source view for the publish's late-append fold
-    val srcDir = GraftDataSource.resolveDataDir(conf, dir)
+    val staged = stage(s, dir, graceMs) // entry sweep, allocation, source view
     // classification footer probes can race a concurrent append's
     // visibility re-home (file moved into the live gen dir between the
-    // listing and the open): re-list and re-classify, bounded
-    val (listed, files) = {
-      var attempt = 0
-      var out: Option[(Seq[(Path, Long, Map[String, String])], Seq[DmlFile])] = None
-      while (out.isEmpty) {
-        val l = GraftDataSource.listPartitionedSized(conf, dir)
-        if (l.isEmpty) return false
-        try out = Some((l, classifyForDml(conf, root, l, table, pruneFilters, dir)))
-        catch {
-          case e: java.io.FileNotFoundException =>
-            attempt += 1
-            if (attempt > 4) throw e
-            Thread.sleep(5L * attempt)
-        }
-      }
-      out.get
-    }
-    val partCols = GraftDataSource.partitionColumns(listed.map { case (p, _, m) => (p, m) })
+    // listing and the open): re-take the view and re-classify
+    val files = staged.retrying(staged.classify(table, pruneFilters))
     if (!files.exists(_.metas.nonEmpty)) return false
     if (files.exists(f => f.candidate && f.names.size > 1)) {
       // a mixed-table candidate file can't be rewritten for one table
@@ -1087,7 +1086,7 @@ object Generations {
         None, writeOptions, graceMs, idempotencyKey)
       return true
     }
-    val (candidates, carried) = files.partition(_.candidate)
+    val candidates = files.filter(_.candidate)
     if (candidates.isEmpty && !alwaysWrite && idempotencyKey.isEmpty) return true
     // candidate rows flow through the normal scan (partition values and
     // all), restricted to the candidate files; zero candidates → an
@@ -1102,8 +1101,8 @@ object Generations {
     // a declared bucket layout outlives every rewrite (same contract as
     // the full rewrite): route the rewritten rows through the bucketed
     // writer so carried and new files keep one provable layout
-    val layout = GraftDataSource.readBucketMarker(conf, dir, table)
-    shapedWriter(out, layout, None, table, writeOptions, partCols)
+    val layout = GraftDataSource.readBucketMarkerAt(conf, staged.srcDir, table)
+    shapedWriter(out, layout, None, table, writeOptions, staged.partCols)
       .save(staged.path.toString)
     // everything untouched is carried by root-relative reference;
     // re-carried files keep their ORIGINAL location (flattened chains),
@@ -1111,7 +1110,8 @@ object Generations {
     // per-file I/O) and their delete vectors. The candidate read above
     // already applied DVs, so REWRITTEN files shed theirs, and their
     // bytes count against the ANALYZE snapshot's churn budget.
-    var commit = Commit(srcDir, listed.map(_._1), carried.map(_.carryEntry(root)),
+    val myCands = candidates.map(f => GraftDataSource.relativePath(root, f.path))
+    var commit = Commit(myCands, dmlStats(root, files),
       churn = Seq(table -> candidates.map(_.size).sum), idempotencyKey = idempotencyKey)
     // Optimistic-concurrency publish: losing the `gen-NNNNN` rename to a
     // concurrent rewrite is NOT fatal for a file-granular DML — the
@@ -1122,8 +1122,6 @@ object Generations {
     // keys both commit, final state equal to either serial order; a true
     // overlap still fails loudly (re-running the DML against the new
     // state is the only sound answer, and only the caller can decide).
-    val myCands = candidates.map(f =>
-      GraftDataSource.relativePath(root, f.path)).toSet
     var attempts = 0
     while (true) {
       try {
@@ -1134,8 +1132,7 @@ object Generations {
           attempts += 1
           if (attempts > 5) { staged.abort(); throw e }
           val lost = staged.nextGen
-          rebaseStaging(conf, root, dir, table, staged, commit, myCands,
-            pruneFilters) match {
+          rebaseStaging(conf, root, dir, table, staged, commit, pruneFilters) match {
             case Some(rebased) => commit = rebased
             case None =>
               staged.abort()
@@ -1154,11 +1151,11 @@ object Generations {
     * (generation `staged.nextGen`, whose rename beat ours): re-classify
     * the winner's view under OUR key filters, and iff the set of files
     * this DML must rewrite is UNCHANGED — the winner carried every one
-    * of our candidate files untouched, and none of its new/rewritten
-    * files can hold a row our filters admit — re-aim the staging at the
-    * next free generation index and return `commit` with the winner's
-    * view as its source and (winner's view − our candidates) as its
-    * carry set. None = true conflict (including un-pruned DMLs, whose
+    * of our candidate files (`commit.replaced`) untouched, and none of
+    * its new/rewritten files can hold a row our filters admit — re-aim
+    * the staging at the next free generation index with the winner's
+    * view as its source view, and return `commit` with the winner
+    * view's stats. None = true conflict (including un-pruned DMLs, whose
     * footprint is the whole table by definition).
     *
     * Soundness: candidate files are immutable, so our staged transform
@@ -1171,16 +1168,16 @@ object Generations {
     * still be the pre-race world), and the fold compares against it:
     * late appends land in ITS gen dir, the new live target. */
   private def rebaseStaging(conf: Configuration, root: Path, dir: String,
-      table: String, staged: Staged, commit: Commit, myCands: Set[String],
+      table: String, staged: Staged, commit: Commit,
       pruneFilters: Option[Seq[graft.format.Stats.Prune]]): Option[Commit] = {
     if (pruneFilters.forall(_.isEmpty)) return None // whole-table footprint
-    val lostGen = staged.nextGen
+    val winnerDir = new Path(root, staged.nextGen)
     val winnerView =
-      try GraftDataSource.listGenerationSized(conf, dir, lostGen)
+      try GraftDataSource.listGenerationSized(conf, dir, staged.nextGen)
       catch { case _: java.io.IOException => return None } // winner swept?
-    val winnerStats = GraftDataSource.genCarryStats(conf, dir, lostGen)
-    val files = classifyForDml(conf, root, winnerView, table, pruneFilters,
-      dir, manifestStatsOverride = Some(winnerStats))
+    val files = classifyForDml(conf, root, winnerView, table, pruneFilters, dir,
+      manifestStatsOverride = Some(GraftDataSource.carryStatsAt(conf, dir, winnerDir.toString)))
+    val myCands = commit.replaced.toSet
     val newCands = files.filter(_.candidate)
       .map(f => GraftDataSource.relativePath(root, f.path)).toSet
     if (newCands != myCands) return None // winner moved our footprint
@@ -1189,7 +1186,6 @@ object Generations {
     // WITHOUT the winner's deletes and would silently resurrect them —
     // refuse the rebase, the caller re-runs against the new state.
     val fs = root.getFileSystem(conf)
-    val winnerDir = new Path(root, lostGen)
     if (GraftDataSource.readDvManifest(fs, winnerDir)
         .exists { case (_, rel, _, _) => myCands.contains(rel) })
       return None
@@ -1201,19 +1197,19 @@ object Generations {
         GraftDataSource.genIndex(st.getPath.getName).fold(m)(math.max(m, _))
       else m
     }
-    staged.retarget(f"gen-${maxIdx + 1}%05d")
-    Some(commit.copy(srcDir = winnerDir.toString, listing = winnerView.map(_._1),
-      carried = files.filterNot(_.candidate).map(_.carryEntry(root))))
+    staged.retarget(f"gen-${maxIdx + 1}%05d", (winnerDir.toString, winnerView))
+    Some(commit.copy(stats = dmlStats(root, files)))
   }
 
   /** One live file's classification for a file-granular DML. */
   private[sources] case class DmlFile(path: Path, size: Long,
       names: Seq[String], metas: Seq[graft.format.Meta.TableMeta],
-      statsJson: String, candidate: Boolean) {
-    /** This file as a carried [[Commit]] entry. */
-    def carryEntry(root: Path): (String, Long, Option[String]) =
-      (GraftDataSource.relativePath(root, path), size, Some(statsJson))
-  }
+      statsJson: String, candidate: Boolean)
+
+  /** Root-relative file → stats json of a classification: the
+    * [[Commit.stats]] a carried file keeps. */
+  private[sources] def dmlStats(root: Path, files: Seq[DmlFile]): Map[String, String] =
+    files.map(f => GraftDataSource.relativePath(root, f.path) -> f.statsJson).toMap
 
   /** Classify every listed file for a file-granular DML on `table`:
     * candidate (can hold touched rows → rewrite) vs carried. Zone-map

@@ -333,21 +333,17 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           .map(_.getPath).filter(_.getName.endsWith(".graft"))
       else Seq.empty
     val stageMarker = GraftDataSource.bucketMarkerPath(stage, ident.name())
-    val resolved = GraftDataSource.resolveDataDir(conf, dir)
-    if (resolved != dir) {
+    if (GraftDataSource.resolveDataDir(conf, dir) != dir) {
       // pointered namespace: one atomic pointer swap publishes the table
-      val root = new Path(dir)
-      val listed = GraftDataSource.listPartitionedSized(conf, dir)
-      // no live file can hold the NEW table ⇒ candidates empty, every
-      // live file carries with its stats and delete vector
-      val files = Generations.classifyForDml(conf, root, listed, ident.name(), None, dir)
       val next = Generations.stage(org.apache.spark.sql.SparkSession.active, dir)
+      // no live file can hold the NEW table ⇒ nothing replaced, every
+      // live file carries with its stats and delete vector
+      val files = next.classify(ident.name(), None)
       staged.foreach(f => AtomicPublish.renameNoClobber(conf, f, new Path(next.path, f.getName)))
       if (fs.exists(stageMarker))
         AtomicPublish.renameNoClobber(conf, stageMarker,
           new Path(next.path, stageMarker.getName))
-      next.publish(Generations.Commit(resolved, listed.map(_._1),
-        files.map(_.carryEntry(root))))
+      next.publish(Generations.Commit(stats = Generations.dmlStats(new Path(dir), files)))
       writeMarker(dir, ident.name(), schema)
     } else {
       // loose layout: data files land first (names are uuid-unique; the
@@ -580,29 +576,28 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val marker = schemaMarker(dir, ident.name())
     val fs = marker.getFileSystem(conf)
     val hadMarker = fs.exists(marker)
-    val resolved = GraftDataSource.resolveDataDir(conf, dir)
     var hadFiles = false
-    if (resolved != dir) {
-      // pointered: classify the live view (manifest stats, zero footer
-      // I/O for covered files) and publish a generation WITHOUT the
-      // table's files — copy-on-write drop, bytes reclaimed by the sweep
+    if (GraftDataSource.resolveDataDir(conf, dir) != dir) {
+      // pointered: classify the staged source view (manifest stats, zero
+      // footer I/O for covered files) and publish a generation WITHOUT
+      // the table's files — copy-on-write drop, bytes reclaimed by the
+      // sweep
       val root = new Path(dir)
-      val listed = GraftDataSource.listPartitionedSized(conf, dir)
-      val files = Generations.classifyForDml(conf, root, listed,
-        ident.name(), None, dir)
+      val staged = Generations.stage(org.apache.spark.sql.SparkSession.active, dir)
+      val files = staged.classify(ident.name(), None)
       files.find(f => f.candidate && f.names.size > 1).foreach { f =>
         throw new UnsupportedOperationException(
           s"table ${ident.name()} shares multi-table file ${f.path}; " +
             "drop the namespace directory instead")
       }
-      val (dropped, carried) = files.partition(_.candidate)
+      val dropped = files.filter(_.candidate)
       hadFiles = dropped.nonEmpty
       // the siblings' files carry with their stats and delete vectors;
       // the dropped table's files, delete vectors and bucket marker don't
       if (hadFiles)
-        Generations.stage(org.apache.spark.sql.SparkSession.active, dir)
-          .publish(Generations.Commit(resolved, listed.map(_._1),
-            carried.map(_.carryEntry(root)), droppedTable = Some(ident.name())))
+        staged.publish(Generations.Commit(
+          dropped.map(f => GraftDataSource.relativePath(root, f.path)),
+          Generations.dmlStats(root, files), droppedTable = Some(ident.name())))
     } else {
       val files = GraftDataSource.listFiles(conf, dir)
       val probed = GraftDataSource.inParallel(files)(f => (f, openFooter(f)(_.tableNames)))

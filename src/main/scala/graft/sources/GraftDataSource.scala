@@ -321,13 +321,8 @@ object GraftDataSource {
   def readClusterRecord(conf: Configuration, dir: String)
       : Option[((String, String, Long, String), Option[Set[String]])] = {
     val p = new Path(resolveDataDir(conf, dir), ClusterSpecName)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n")
-      finally in.close()
+    readMetaText(p.getFileSystem(conf), p).flatMap { text =>
+      val lines = text.split("\n")
       if (lines.length < 4) None
       else try {
         val header = (lines(0).trim, lines(1).trim, lines(2).trim.toLong, lines(3).trim)
@@ -340,6 +335,21 @@ object GraftDataSource {
       } catch { case _: NumberFormatException => None }
     }
   }
+
+  /** The one read rule of the small metadata files (`.dvs`, `.carry`,
+    * `.swap-ts`, `.cluster-spec`, bucket and schema markers): open the
+    * file and read a missing one as absent — one metadata call, not an
+    * `exists` probe and then an open. Any other failure propagates; each
+    * caller keeps its own rule for those. */
+  def readMetaBytes(fs: FileSystem, p: Path): Option[Array[Byte]] =
+    try {
+      val in = fs.open(p)
+      try Some(in.readAllBytes()) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** [[readMetaBytes]] as UTF-8 text. */
+  def readMetaText(fs: FileSystem, p: Path): Option[String] =
+    readMetaBytes(fs, p).map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
 
   /** Header-only view of [[readClusterRecord]]. */
   def readClusterSpec(conf: Configuration, dir: String)
@@ -425,8 +435,7 @@ object GraftDataSource {
   private def readStatsLines(fs: FileSystem, p: Path,
       strict: Boolean): Seq[(String, Long, Option[String])] =
     try {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val text = readMetaText(fs, p).getOrElse("") // absent, or swept mid-read
       text.split('\n').toSeq.filter(_.nonEmpty).flatMap { line =>
         val parts = line.split('\t')
         val stats = if (parts.length >= 3 && parts(2).nonEmpty) Some(parts(2)) else None
@@ -438,10 +447,7 @@ object GraftDataSource {
           scala.util.Try((parts(1), parts(0).toLong, stats)).toOption
         else None
       }
-    } catch {
-      case _: java.io.FileNotFoundException => Seq.empty // absent, or swept mid-read
-      case _: java.io.IOException if !strict => Seq.empty
-    }
+    } catch { case _: java.io.IOException if !strict => Seq.empty }
 
   /** A stats sidecar's lines, each carrying stats: [[readStatsLines]]
     * lenient, and its writers' text. */
@@ -569,18 +575,12 @@ object GraftDataSource {
   /** One `.dvs` manifest's rows: (table, relDataFile, relDvBlob, cardinality). */
   def readDvManifest(fs: FileSystem, genDir: Path): Seq[(String, String, String, Long)] = {
     val p = new Path(genDir, DvManifestName)
-    try {
-      if (!fs.exists(p)) return Seq.empty
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      text.split('\n').toSeq.filter(_.nonEmpty).map { line =>
-        val parts = line.split('\t')
-        require(parts.length == 4 && parts.forall(_.nonEmpty),
-          s"corrupt DV manifest line in $p: '$line'")
-        (parts(0), parts(1), parts(2), parts(3).toLong)
-      }
-    } catch {
-      case _: java.io.FileNotFoundException => Seq.empty // swept mid-read
+    // absent, or swept mid-read: no delete vectors
+    readMetaText(fs, p).getOrElse("").split('\n').toSeq.filter(_.nonEmpty).map { line =>
+      val parts = line.split('\t')
+      require(parts.length == 4 && parts.forall(_.nonEmpty),
+        s"corrupt DV manifest line in $p: '$line'")
+      (parts(0), parts(1), parts(2), parts(3).toLong)
     }
   }
 
@@ -654,15 +654,6 @@ object GraftDataSource {
     listPartitionedSizedAt(conf, dir, new Path(dir, genName).toString,
       viaPointer = false)
 
-  /** [[liveCarryStats]] pinned to one generation dir (the rebase path's
-    * zero-I/O classification over the race winner's manifest). */
-  private[sources] def genCarryStats(conf: Configuration, dir: String,
-      genName: String): Map[String, String] = {
-    val p = new Path(dir, genName)
-    readCarryManifestFull(p.getFileSystem(conf), p)
-      .flatMap { case (rel, _, js) => js.map(rel -> _) }.toMap
-  }
-
   /** The catalog's declared-schema marker for `table` under `dir`, if
     * present and parseable — the path API consults it so DML reads agree
     * with the catalog's evolved (renamed/dropped/widened) view. Corrupt
@@ -671,12 +662,7 @@ object GraftDataSource {
       table: String): Option[StructType] =
     try {
       val marker = new Path(dir, s".schema_$table.json")
-      val fs = marker.getFileSystem(conf)
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      readMetaText(marker.getFileSystem(conf), marker).flatMap { json =>
         org.apache.spark.sql.types.DataType.fromJson(json) match {
           case s: StructType => Some(s)
           case _ => None
@@ -687,15 +673,19 @@ object GraftDataSource {
   /** rel → stats-json for every stats-carrying entry of the LIVE
     * generation's manifest; empty for pointerless tables or manifests
     * written before stats rode along. */
-  def liveCarryStats(conf: Configuration, dir: String): Map[String, String] = {
-    val resolved = resolveDataDir(conf, dir)
+  def liveCarryStats(conf: Configuration, dir: String): Map[String, String] =
+    carryStatsAt(conf, dir, resolveDataDir(conf, dir))
+
+  /** [[liveCarryStats]] of an ALREADY-resolved data dir: a publisher's
+    * source view, or the rebase path's race winner. */
+  private[sources] def carryStatsAt(conf: Configuration, dir: String,
+      resolved: String): Map[String, String] =
     if (resolved == dir) Map.empty
     else {
       val p = new Path(resolved)
       readCarryManifestFull(p.getFileSystem(conf), p)
         .flatMap { case (rel, _, js) => js.map(rel -> _) }.toMap
     }
-  }
 
   /** [[liveCarryStats]] PARSED, cached per generation MANIFEST identity
     * (path + the `.carry` file's mtime and length — an `overwrite` can
@@ -1023,14 +1013,7 @@ object GraftDataSource {
   def readSwapTs(conf: Configuration, genDir: Path): Option[Long] =
     try {
       val p = new Path(genDir, SwapTsName)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        s.toLongOption
-      }
+      readMetaText(p.getFileSystem(conf), p).flatMap(_.trim.toLongOption)
     } catch {
       // a grace-sweep reclaiming this generation between the caller's
       // listing and this read: fall back to mtime; if the gen is truly
@@ -1100,13 +1083,21 @@ object GraftDataSource {
     * table here once, and a racing reader silently returned 0 of 30 000
     * rows (CompactionSpec "tiny grace"). Vanished-under-pointer is now
     * retry-then-throw, never Seq.empty. */
-  def listPartitionedSized(conf: Configuration, dir: String): Seq[(Path, Long, Map[String, String])] = {
+  def listPartitionedSized(conf: Configuration, dir: String): Seq[(Path, Long, Map[String, String])] =
+    liveView(conf, dir)._2
+
+  /** [[listPartitionedSized]] together with the data dir it listed: both
+    * come from ONE pointer read, so a caller that also reads the
+    * generation's manifests (a publisher's source view) reads the same
+    * generation it listed. */
+  def liveView(conf: Configuration, dir: String)
+      : (String, Seq[(Path, Long, Map[String, String])]) = {
     listingCalls.incrementAndGet()
     var attempt = 0
     while (true) {
       val resolved = resolveDataDir(conf, dir)
       val viaPointer = resolved != dir
-      try return listPartitionedSizedAt(conf, dir, resolved, viaPointer)
+      try return (resolved, listPartitionedSizedAt(conf, dir, resolved, viaPointer))
       catch {
         case e: java.io.FileNotFoundException =>
           // the view we were walking was replaced under us: the pointer's
@@ -1346,11 +1337,7 @@ object GraftDataSource {
   def readBucketMarkerAt(conf: Configuration, dataDir: String,
       table: String): Option[(String, Int, Option[String])] = {
     val marker = bucketMarkerPath(dataDir, table)
-    val fs = marker.getFileSystem(conf)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    readMetaText(marker.getFileSystem(conf), marker).flatMap { json =>
       try {
         val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
         val col = node.get("col").asText()

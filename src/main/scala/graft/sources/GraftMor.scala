@@ -134,8 +134,7 @@ private[sources] class GraftMorBatchWrite(dir: String, table: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     staged = Generations.stage(SparkSession.active, dir)
-    val listed = GraftDataSource.listPartitionedSized(conf, dir)
-    val partCols = GraftDataSource.partitionColumns(listed.map { case (p, _, m) => (p, m) })
+    val partCols = staged.partCols
     // hive-layout dirs whose path columns the catalog schema can't carry:
     // replacement rows couldn't be routed to (or even HOLD) their
     // partition values, so inserts must refuse with guidance — position
@@ -187,14 +186,10 @@ private[sources] class GraftMorBatchWrite(dir: String, table: String,
     }
     try {
       inner.commit(dms) // inserted rows' data files land in the staging
-      // pin the source view; classify for carry stats (zero footer I/O
+      // classify the staged source view for carry stats (zero footer I/O
       // for manifest-covered files, same contract as every DML)
-      val listed = GraftDataSource.listPartitionedSized(conf, dir)
-      val srcDir = GraftDataSource.resolveDataDir(conf, dir)
-      val files = Generations.classifyForDml(conf, root, listed, table, None, dir)
-      val statsByRel = files.map(f =>
-        GraftDataSource.relativePath(root, f.path) -> f.statsJson).toMap
-      val byUriPath = listed.map { case (p, size, _) => p.toUri.getPath -> (p, size) }.toMap
+      val files = staged.classify(table, None)
+      val byUriPath = staged.listing.map { case (p, size, _) => p.toUri.getPath -> (p, size) }.toMap
 
       files.filter(_.names.size > 1).foreach { f =>
         if (newPerFile.contains(f.path.toString) ||
@@ -205,7 +200,7 @@ private[sources] class GraftMorBatchWrite(dir: String, table: String,
               "one table's row space. Use copy-on-write mode for this table")
       }
 
-      val existing = GraftDataSource.liveDvs(conf, dir, Some(table))
+      val existing = GraftDataSource.liveDvsAt(conf, dir, staged.srcDir, Some(table))
       // per-touched-file work (existing-blob read, footer row count, merged
       // blob write) runs in the shared listing pool: a 10^4-file delete
       // wave costs one parallel sweep on the driver, not 10^4 sequential
@@ -257,16 +252,13 @@ private[sources] class GraftMorBatchWrite(dir: String, table: String,
             fullyDeleted = false, churn)
         }
       }
-      val dropped = outs.filter(_.fullyDeleted).map(_.rel).toSet
-      // carry every live data file by reference (minus fully-deleted
-      // ones), stats riding along so the next DML keeps zero-footer-I/O;
-      // the fresh blobs above merged this table's entries for re-DV'd
-      // files, every other carried file keeps its live entry
-      staged.publish(Generations.Commit(srcDir, listed.map(_._1),
-        listed.map { case (p, size, _) =>
-          val rel = GraftDataSource.relativePath(root, p)
-          (rel, size, statsByRel.get(rel))
-        }.filterNot { case (rel, _, _) => dropped.contains(rel) },
+      // carry every live data file by reference (fully-deleted ones are
+      // replaced by nothing), stats riding along so the next DML keeps
+      // zero-footer-I/O; the fresh blobs above merged this table's
+      // entries for re-DV'd files, every other carried file keeps its
+      // live entry
+      staged.publish(Generations.Commit(outs.filter(_.fullyDeleted).map(_.rel),
+        Generations.dmlStats(root, files),
         freshDvs = outs.flatMap(_.entry),
         churn = Seq(table -> outs.map(_.churn).sum)))
     } catch {

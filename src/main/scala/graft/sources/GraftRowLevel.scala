@@ -56,7 +56,10 @@ class GraftRowLevelOperation(dir: String, table: String, schema: StructType,
   /** Files the write's commit will REPLACE (everything else is carried).
     * Recorded by the scan builder (then narrowed by planInputPartitions
     * after runtime group filtering); read by the write's commit. All on
-    * the driver: scan planning strictly precedes write commit. */
+    * the driver: scan planning strictly precedes write commit. A file
+    * that has left the commit's source view by then (a concurrent DML
+    * rewrote it) makes the publish refuse: carrying its replacement next
+    * to this rewrite of it would duplicate its rows. */
   @volatile private[sources] var replaced: Option[Seq[Path]] = None
 
   /** rel → stats-json for every file the scan's classification touched
@@ -64,10 +67,6 @@ class GraftRowLevelOperation(dir: String, table: String, schema: StructType,
     * the next DML keeps the zero-footer-I/O property even for files
     * carried for the first time. */
   @volatile private[sources] var fileStats: Map[String, String] = Map.empty
-
-  /** Partition columns observed by the scan's listing — saves the write
-    * factory its own recursive listing (seconds at object-store scale). */
-  @volatile private[sources] var partCols: Option[Seq[String]] = None
 
   override def command(): RowLevelOperation.Command = cmd
   override def description(): String = s"graft copy-on-write $cmd on $table"
@@ -162,10 +161,7 @@ class GraftCowScanBuilder(op: GraftRowLevelOperation, dir: String,
     // initial replaced set (planInputPartitions re-records it after
     // runtime group filtering narrows the read further)
     op.replaced = Some(cands.map(_.path))
-    op.fileStats = files.map(f =>
-      GraftDataSource.relativePath(root, f.path) -> f.statsJson).toMap
-    op.partCols = Some(GraftDataSource.partitionColumns(
-      listed.map { case (p, _, m) => (p, m) }))
+    op.fileStats = Generations.dmlStats(root, files)
     new GraftScan(Seq(dir), required, Some(table), Array.empty, -1,
       fileFilter = Some(cands.map(_.path.toString).toSet),
       cowOp = Some(op))
@@ -174,25 +170,22 @@ class GraftCowScanBuilder(op: GraftRowLevelOperation, dir: String,
 
 /** The replacement write: rows land in a staged generation
   * ([[Generations.stage]]) via the ordinary [[GraftBatchWrite]]; commit
-  * carries the live files minus the replaced set by reference at their
-  * original location and publishes the generation atomically — crash
-  * before commit leaves only unreferenced staging for the next sweep,
-  * identical to every other rewrite in this source. */
+  * names the replaced set, and the publish carries the staged source
+  * view minus that set by reference at their original location and
+  * publishes the generation atomically — crash before commit leaves
+  * only unreferenced staging for the next sweep, identical to every
+  * other rewrite in this source. */
 class GraftCowBatchWrite(op: GraftRowLevelOperation, dir: String,
     table: String, schema: StructType,
     layout: Option[(String, Int, Option[String])] = None) extends BatchWrite {
 
-  private val conf = GraftDataSource.sessionConf()
   private val root = new Path(dir)
   private var staged: Generations.Staged = _
   private var inner: GraftBatchWrite = _
 
   override def createBatchWriterFactory(pinfo: PhysicalWriteInfo): DataWriterFactory = {
     staged = Generations.stage(SparkSession.active, dir)
-    val partCols = op.partCols.getOrElse {
-      val listed = GraftDataSource.listPartitionedSized(conf, dir)
-      GraftDataSource.partitionColumns(listed.map { case (p, _, m) => (p, m) })
-    }
+    val partCols = staged.partCols
     // the COW rewrite re-emits EVERY row of its candidate files: if the
     // dir is hive-partitioned on columns the write schema can't carry,
     // the replacement files would silently read NULL for those columns
@@ -216,24 +209,17 @@ class GraftCowBatchWrite(op: GraftRowLevelOperation, dir: String,
     inner.commit(messages)
     val replaced = op.replaced.getOrElse(throw new IllegalStateException(
       "row-level write committed before its scan planned; no replaced-file " +
-        "set to anchor the carry manifest")).map(_.toString).toSet
-    // pin the source view for the publish's late-append fold
-    val srcDir = GraftDataSource.resolveDataDir(conf, dir)
-    val commitListing = GraftDataSource.listPartitionedSized(conf, dir)
-    // carried files keep their zone-map stats — from the scan's own
-    // classification (covers files carried for the FIRST time) with the
-    // live manifest as fallback; immutable files, stats never stale —
-    // and their delete vectors (the candidate read applied DVs, so
-    // replaced files' rewritten rows shed theirs)
-    val (rewritten, carried) = commitListing.partition { case (p, _, _) =>
-      replaced.contains(p.toString) }
-    staged.publish(Generations.Commit(srcDir, commitListing.map(_._1),
-      carried.map { case (p, size, _) =>
-        val rel = GraftDataSource.relativePath(root, p)
-        (rel, size, op.fileStats.get(rel)) },
+        "set to anchor the carry manifest")).map(GraftDataSource.relativePath(root, _))
+    val replacedSet = replaced.toSet
+    // carried files keep their zone-map stats from the scan's own
+    // classification (immutable files, stats never stale) and their
+    // delete vectors (the candidate read applied DVs, so replaced files'
+    // rewritten rows shed theirs)
+    staged.publish(Generations.Commit(replaced, op.fileStats,
       // stats lifecycle: the replaced files' rows were churned by this
       // DELETE/UPDATE/MERGE — bill their bytes against the ANALYZE snapshot
-      churn = Seq(table -> rewritten.map(_._2).sum)))
+      churn = Seq(table -> staged.listing.collect { case (p, size, _)
+        if replacedSet.contains(GraftDataSource.relativePath(root, p)) => size }.sum)))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

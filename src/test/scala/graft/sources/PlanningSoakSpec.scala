@@ -119,4 +119,41 @@ class PlanningSoakSpec extends SparkSpec {
     Thread.sleep(1000) // a pool left running drains all 63 in ~0.4 s
     assert(started.get <= 16, s"${started.get} probes ran after the sweep failed")
   }
+
+  test("DML statements list the live view no more often than pinned") {
+    // recursive listings per statement on one 8,000-row, 8-file catalog
+    // table: each publisher takes its source view once, when it stages
+    val root = Files.createTempDirectory("graft-listings").toString
+    spark.conf.set("spark.sql.catalog.soak_ls", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.soak_ls.root", root)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS soak_ls.db")
+    spark.range(0, 8000).selectExpr("id AS k", "id % 7 AS v")
+      .repartitionByRange(8, col("id")).createOrReplaceTempView("soak_ls_src")
+    spark.sql("CREATE TABLE soak_ls.db.t AS SELECT * FROM soak_ls_src")
+    def listings(stmt: => Unit): Long = {
+      val before = GraftDataSource.listingCalls.get()
+      stmt
+      GraftDataSource.listingCalls.get() - before
+    }
+    val cowUpdate = listings(spark.sql("UPDATE soak_ls.db.t SET v = -1 WHERE k < 100"))
+    // the UPDATE's generation made the namespace pointered
+    val ctas = listings(spark.sql("CREATE TABLE soak_ls.db.u AS SELECT * FROM soak_ls_src"))
+    val morDelete = listings {
+      spark.conf.set("spark.graft.deleteMode", "merge-on-read")
+      try spark.sql("DELETE FROM soak_ls.db.t WHERE k % 97 = 3")
+      finally spark.conf.set("spark.graft.deleteMode", "copy-on-write")
+    }
+    val deleteWhere = listings(FormatOps.deleteWhere(spark, s"$root/db", "t", col("k") === 200L))
+    val drop = listings(spark.sql("DROP TABLE soak_ls.db.u"))
+    val counts = Seq("pointered CTAS" -> ctas, "COW UPDATE" -> cowUpdate,
+      "MoR DELETE" -> morDelete, "FormatOps.deleteWhere" -> deleteWhere,
+      "DROP TABLE" -> drop)
+    info(counts.map { case (k, n) => s"$k=$n" }.mkString(", "))
+    // MoR DELETE: the scan's listing and the staged view, which its
+    // commit reuses
+    val bounds = Map("pointered CTAS" -> 4L, "COW UPDATE" -> 4L, "MoR DELETE" -> 2L,
+      "FormatOps.deleteWhere" -> 4L, "DROP TABLE" -> 1L)
+    counts.foreach { case (k, n) => assert(n <= bounds(k), s"$k listed $n times") }
+    assert(spark.table("soak_ls.db.t").count() == 8000 - 83 - 1)
+  }
 }
