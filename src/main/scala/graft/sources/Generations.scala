@@ -63,16 +63,6 @@ object Generations {
     else None
   }
 
-  /** Table names present in `dir`'s LIVE generation (pointer-resolved
-    * by the DSv2 listing), via a parallel footer probe. */
-  def liveTableNames(conf: Configuration, dir: String): Seq[String] = {
-    val listed = GraftDataSource.listPartitionedFiles(conf, dir)
-    GraftDataSource.inParallel(listed.map(_._1)) { f =>
-      val r = graft.format.GraftFileReader.open(f.getFileSystem(conf), f)
-      try r.tableNames finally r.close()
-    }.flatten.distinct.sorted
-  }
-
   /** Rewrite `dir`'s live data into a new generation and atomically
     * swap the pointer to it.
     *
@@ -377,10 +367,8 @@ object Generations {
     // footer probe could silently drop a whole table from the rewrite,
     // so the probe re-takes the view instead.
     val tableNames = staged.retrying {
-      GraftDataSource.inParallel(staged.listing.map(_._1)) { f =>
-        val r = graft.format.GraftFileReader.open(f.getFileSystem(conf), f)
-        try r.tableNames finally r.close()
-      }.flatten.distinct.sorted
+      GraftDataSource.tableIndex(conf, dir, (staged.srcDir, staged.listing))
+        .flatMap(_.names).toSeq.distinct.sorted
     }
     if (tableNames.isEmpty) return // nothing to rewrite
     val listed = staged.listing
@@ -485,12 +473,10 @@ object Generations {
       throw new IllegalStateException("unreachable")
     }
 
-    /** [[classifyForDml]] over the source view, with its generation's
-      * manifest stats. */
+    /** [[classifyForDml]] over the source view. */
     def classify(table: String,
         pruneFilters: Option[Seq[graft.format.Stats.Prune]]): Seq[DmlFile] =
-      classifyForDml(conf, root, listing, table, pruneFilters, dir,
-        manifestStatsOverride = Some(GraftDataSource.carryStatsAt(conf, dir, srcDir)))
+      classifyForDml(conf, dir, view, table, pruneFilters)
 
     lazy val path: Path = {
       val p = new Path(root, s"$gen.tmp-${java.util.UUID.randomUUID()}")
@@ -642,18 +628,15 @@ object Generations {
     require(minFraction >= 0.0 && minFraction <= 1.0,
       s"min_fraction must be in [0,1], got $minFraction")
     val conf = s.sparkContext.hadoopConfiguration
-    val dvs = GraftDataSource.liveDvs(conf, dir, Some(table))
+    val resolved = GraftDataSource.resolveDataDir(conf, dir)
+    val dvs = GraftDataSource.liveDvsAt(conf, dir, resolved, Some(table))
     if (dvs.isEmpty) return Seq.empty
-    // per-target live fraction from the footer (parallel, bounded by the
-    // number of DV'd files)
-    val stats = GraftDataSource.inParallel(dvs.toSeq) { case (uriPath, (_, card)) =>
-      val p = new Path(uriPath)
-      val r = graft.format.GraftFileReader.open(p.getFileSystem(conf), p)
-      val rows = try r.footer.chunks.iterator
-        .flatMap(_.tables.filter(_.name == table)).map(_.numRows.toLong).sum
-      finally r.close()
-      (uriPath, card, rows)
-    }
+    // per-target live fraction, row counts from the DV'd files' table index
+    val dvFiles = dvs.keys.toSeq.sorted.map(u => (new Path(u), 0L, Map.empty[String, String]))
+    val stats = GraftDataSource.tableIndex(conf, dir, (resolved, dvFiles)).map { f =>
+      val uriPath = f.path.toUri.getPath
+      (uriPath, dvs(uriPath)._2, f.metas.filter(_.name == table).map(_.numRows.toLong).sum)
+    }.toSeq
     val targets = stats.filter { case (_, card, rows) =>
       rows > 0 && card.toDouble / rows >= minFraction }
     if (targets.isEmpty) return Seq.empty
@@ -831,11 +814,8 @@ object Generations {
           .map { case (rel, _, js) => rel -> js }.toMap
         val entries = GraftDataSource.inParallel(fresh) { case (p, size) =>
           val rel = GraftDataSource.relativePath(staging, p)
-          val js = staged.getOrElse(rel, {
-            val r = graft.format.GraftFileReader.open(p.getFileSystem(conf), p)
-            val metas = try r.footer.chunks.flatMap(_.tables).toSeq finally r.close()
-            graft.format.Stats.statsToJson(metas)
-          })
+          val js = staged.getOrElse(rel,
+            graft.format.Stats.statsToJson(GraftDataSource.footerMetas(conf, p)))
           (s"$nextGen/$rel", size, Some(js): Option[String])
         }
         GraftDataSource.writeCarryManifest(fs, staging, existing ++ entries)
@@ -1175,8 +1155,7 @@ object Generations {
     val winnerView =
       try GraftDataSource.listGenerationSized(conf, dir, staged.nextGen)
       catch { case _: java.io.IOException => return None } // winner swept?
-    val files = classifyForDml(conf, root, winnerView, table, pruneFilters, dir,
-      manifestStatsOverride = Some(GraftDataSource.carryStatsAt(conf, dir, winnerDir.toString)))
+    val files = classifyForDml(conf, dir, (winnerDir.toString, winnerView), table, pruneFilters)
     val myCands = commit.replaced.toSet
     val newCands = files.filter(_.candidate)
       .map(f => GraftDataSource.relativePath(root, f.path)).toSet
@@ -1211,18 +1190,18 @@ object Generations {
   private[sources] def dmlStats(root: Path, files: Seq[DmlFile]): Map[String, String] =
     files.map(f => GraftDataSource.relativePath(root, f.path) -> f.statsJson).toMap
 
-  /** Classify every listed file for a file-granular DML on `table`:
-    * candidate (can hold touched rows → rewrite) vs carried. Zone-map
-    * stats come from the live generation's carry manifest where present,
-    * so the overwhelming majority of a large table's files — everything
-    * the previous rewrite carried — is classified with ZERO per-file
-    * I/O; footers are opened only for files the manifest doesn't cover
-    * (the previous rewrite's own output) and for manifest-kept
-    * candidates, where the footer's blooms get a second chance to
-    * prune. Each record carries a fresh-or-reused statsJson so the next
-    * manifest keeps the zero-I/O property (files are immutable, stats
-    * never go stale). A corrupt/legacy stats field falls back to the
-    * footer probe — never a wrong skip.
+  /** Classify every file of `view` (a data dir of `dir` and its listing)
+    * for a file-granular DML on `table`: candidate (can hold touched
+    * rows → rewrite) vs carried. Zone-map stats come from the view's
+    * table index ([[GraftDataSource.tableIndex]]), so every file its
+    * manifests cover is classified with ZERO per-file I/O; a footer is
+    * opened for a file no manifest covers and, when there are prune
+    * filters, for a manifest-kept candidate, where the footer's blooms
+    * get a second chance to prune. Each record carries a fresh-or-reused
+    * statsJson (a carried file keeps its manifest text byte for byte) so
+    * the next manifest keeps the zero-I/O property (files are immutable,
+    * stats never go stale). A corrupt/legacy stats field falls back to
+    * the footer probe — never a wrong skip.
     *
     * Prune filters name columns by their CURRENT (declared) spellings,
     * but a pre-rename file records stats under the old spelling — each
@@ -1235,13 +1214,13 @@ object Generations {
     * Partition and `_file` columns never count as absent (their values
     * come from the path); no marker (plain-dir table, DDL impossible)
     * means identity translation — today's behavior. */
-  private[sources] def classifyForDml(conf: Configuration, root: Path,
-      listed: Seq[(Path, Long, Map[String, String])], table: String,
-      pruneFilters: Option[Seq[graft.format.Stats.Prune]], dir: String,
-      manifestStatsOverride: Option[Map[String, String]] = None): Seq[DmlFile] = {
+  private[sources] def classifyForDml(conf: Configuration, dir: String,
+      view: (String, Seq[(Path, Long, Map[String, String])]), table: String,
+      pruneFilters: Option[Seq[graft.format.Stats.Prune]]): Seq[DmlFile] = {
     import graft.format.{Evolution, Stats}
+    val filtered = pruneFilters.exists(_.nonEmpty)
     val declared: Option[org.apache.spark.sql.types.StructType] =
-      if (pruneFilters.forall(_.isEmpty)) None // nothing to translate
+      if (!filtered) None // nothing to translate
       else GraftDataSource.markerSchemaAt(conf, dir, table).map(Evolution.visible)
     // one conjunct proves the skip for one chunk, in the FILE's spellings
     def skipProven(p: Stats.Prune, t: graft.format.Meta.TableMeta,
@@ -1276,29 +1255,19 @@ object Generations {
           !fls.exists(f => metas.forall(t => skipProven(f, t, partCols)))
         case _ => true
       }
-    val manifestStats = manifestStatsOverride
-      .getOrElse(GraftDataSource.liveCarryStats(conf, dir))
-    GraftDataSource.inParallel(listed) { case (p, size, parts) =>
-      val partCols = parts.keySet
-      def footer(): Seq[graft.format.Meta.TableMeta] = {
-        val r = graft.format.GraftFileReader.open(p.getFileSystem(conf), p)
-        try r.footer.chunks.flatMap(_.tables).toSeq finally r.close()
-      }
-      def fromFooter(): DmlFile = {
-        val full = footer()
-        val mine = full.filter(_.name == table)
-        DmlFile(p, size, full.map(_.name).distinct, mine,
-          graft.format.Stats.statsToJson(full),
-          mine.nonEmpty && mustRewrite(mine, partCols))
-      }
-      val rel = GraftDataSource.relativePath(root, p)
-      manifestStats.get(rel).flatMap(graft.format.Stats.statsFromJson) match {
-        case Some(all) =>
-          val mine = all.filter(_.name == table)
-          if (mine.nonEmpty && mustRewrite(mine, partCols)) fromFooter() // bloom pass
-          else DmlFile(p, size, all.map(_.name).distinct, mine,
-            manifestStats(rel), candidate = false)
-        case None => fromFooter()
+    def classified(f: GraftDataSource.IndexedFile,
+        metas: Seq[graft.format.Meta.TableMeta], statsJson: String): DmlFile = {
+      val mine = metas.filter(_.name == table)
+      DmlFile(f.path, f.size, metas.map(_.name).distinct, mine, statsJson,
+        mine.nonEmpty && mustRewrite(mine, f.part.keySet))
+    }
+    GraftDataSource.inParallel(GraftDataSource.tableIndex(conf, dir, view).toVector) { f =>
+      val kept = classified(f, f.metas, f.statsJson)
+      // bloom pass: manifest stats hold no blooms, a candidate's footer may
+      if (!(filtered && kept.candidate && f.manifestJson.isDefined)) kept
+      else {
+        val full = GraftDataSource.footerMetas(conf, f.path)
+        classified(f, full, Stats.statsToJson(full))
       }
     }
   }

@@ -8,8 +8,6 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.format.GraftFileReader
-
 /** DSv2 TableCatalog over a warehouse of graft directories.
   *
   * The reference's chunk is "several named tables written together"
@@ -50,35 +48,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   private def nsDir(namespace: Array[String]): String =
     (Seq(root) ++ namespace).mkString("/")
 
-  private def schemaMarker(dir: String, table: String): Path =
-    new Path(dir, s".schema_$table.json")
-
-  private def openFooter[T](f: Path)(g: GraftFileReader => T): T = {
-    val r = GraftFileReader.open(f.getFileSystem(conf), f)
-    try g(r) finally r.close()
-  }
-
-  private def markerSchema(dir: String, table: String): Option[StructType] =
-    try {
-      val marker = schemaMarker(dir, table)
-      val fs = marker.getFileSystem(conf)
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        org.apache.spark.sql.types.DataType.fromJson(json) match {
-          case s: StructType => Some(s)
-          case _ => None
-        }
-      }
-    } catch {
-      // a corrupt/truncated marker (crashed DDL) must not make a table
-      // with readable data files unreadable: fall through to footers
-      case _: Exception => None
-    }
-
   private def writeMarker(dir: String, table: String, schema: StructType): Unit =
-    AtomicPublish.text(conf, schemaMarker(dir, table), schema.json)
+    AtomicPublish.text(conf, GraftDataSource.schemaMarkerPath(dir, table), schema.json)
+
+  /** The table index ([[GraftDataSource.tableIndex]]) of `dir`'s live view. */
+  private def liveIndex(dir: String): Iterator[GraftDataSource.IndexedFile] =
+    GraftDataSource.tableIndex(conf, dir, GraftDataSource.liveView(conf, dir))
 
   /** The table's DECLARED schema: the marker when present (createTable
     * writes it, ALTER TABLE ADD COLUMN evolves it — files written before
@@ -89,7 +64,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     * silently hide the newer files' columns (the exact hazard
     * [[alterTable]] documents; the read path must agree with it). */
   private def findTableSchema(dir: String, table: String): Option[StructType] =
-    markerSchema(dir, table).orElse(unionedTableSchema(dir, table))
+    GraftDataSource.markerSchemaAt(conf, dir, table).orElse(unionedTableSchema(dir, table))
 
   override def listNamespaces(): Array[Array[String]] = {
     val p = new Path(root)
@@ -122,17 +97,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val dir = nsDir(namespace)
-    // every footer must be read (a namespace's tables are the union
-    // across files), so probe them all 16-way concurrently
-    val fromFiles = GraftDataSource.inParallel(
-      GraftDataSource.listFiles(conf, dir))(f => openFooter(f)(_.tableNames)).flatten
+    // a namespace's tables are the union across its files
+    val fromFiles = liveIndex(dir).flatMap(_.names).toSeq
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
     val fromMarkers =
       if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith(".schema_") && n.endsWith(".json"))
-        .map(n => n.stripPrefix(".schema_").stripSuffix(".json"))
+      else fs.listStatus(p).toSeq.flatMap(st => GraftDataSource.schemaMarkerTable(st.getPath.getName))
     (fromFiles ++ fromMarkers).distinct.map(t => Identifier.of(namespace, t)).toArray
   }
 
@@ -520,7 +491,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     loadTable(ident)
   }
 
-  /** Marker schema + every footer schema for `table`, folded additively
+  /** Marker schema + the footer schema of every file holding `table`
+    * (as the table index says), folded additively
     * (fields merged by name, first occurrence's type wins; a TYPE
     * conflict for one name is refused loudly — except the lossless
     * widenings ALTER COLUMN TYPE produces, where the wider type wins).
@@ -529,11 +501,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     * as separate columns. */
   private def unionedTableSchema(dir: String, table: String): Option[StructType] = {
     import graft.format.Evolution
-    val files = GraftDataSource.listFiles(conf, dir)
-    val fromFiles = GraftDataSource.inParallel(files) { f =>
-      openFooter(f)(_.footer.chunks.flatMap(_.tables).find(_.name == table).map(_.schema))
-    }.flatten
-    val marker = markerSchema(dir, table)
+    val holders = liveIndex(dir).filter(_.holds(table)).toSeq
+    val fromFiles = GraftDataSource.inParallel(holders)(
+      GraftDataSource.footerSchema(conf, _, table)).flatten
+    val marker = GraftDataSource.markerSchemaAt(conf, dir, table)
     val claimed: Set[String] = marker.toSeq.flatMap(_.fields.toSeq)
       .flatMap(Evolution.allNames).map(_.toLowerCase).toSet
     val all = marker.toSeq ++ fromFiles
@@ -573,7 +544,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     * so they keep the direct physical delete. */
   override def dropTable(ident: Identifier): Boolean = {
     val dir = nsDir(ident.namespace())
-    val marker = schemaMarker(dir, ident.name())
+    val marker = GraftDataSource.schemaMarkerPath(dir, ident.name())
     val fs = marker.getFileSystem(conf)
     val hadMarker = fs.exists(marker)
     var hadFiles = false
@@ -599,13 +570,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           dropped.map(f => GraftDataSource.relativePath(root, f.path)),
           Generations.dmlStats(root, files), droppedTable = Some(ident.name())))
     } else {
-      val files = GraftDataSource.listFiles(conf, dir)
-      val probed = GraftDataSource.inParallel(files)(f => (f, openFooter(f)(_.tableNames)))
-      val owned = probed.flatMap { case (f, names) =>
-        if (names == Seq(ident.name())) Some(f)
-        else if (names.contains(ident.name()))
+      val owned = liveIndex(dir).toSeq.flatMap { f =>
+        if (f.names == Seq(ident.name())) Some(f.path)
+        else if (f.holds(ident.name()))
           throw new UnsupportedOperationException(
-            s"table ${ident.name()} shares multi-table file $f; drop the namespace directory instead")
+            s"table ${ident.name()} shares multi-table file ${f.path}; drop the namespace directory instead")
         else None
       }
       hadFiles = owned.nonEmpty
@@ -678,13 +647,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       case (Seq("sys"), "verify_table") => verifyTableProc
       case (Seq("sys"), "materialize_dvs") => materializeDvsProc
       case (Seq("sys"), "changes_summary") => changesSummaryProc
-      case _ => throw new IllegalArgumentException(
-        s"unknown procedure $ident — available: sys.history(ns), " +
-          "sys.vacuum(ns, grace_ms), sys.restore(ns, generation), " +
-          "sys.compact(ns, target_files), sys.compact_to_size(ns, target_bytes), " +
-          "sys.cluster(ns, cols, target_files, table, binning), " +
-          "sys.contract(ns), sys.audit(ns), sys.reindex_ivf(ns, cells), " +
-          "sys.analyze(ns, exact), sys.materialize_dvs(ns, table, min_fraction)")
+      case _ => throw new IllegalArgumentException(s"unknown procedure $ident — available: " +
+        listProcedures(Array("sys")).map(p => s"sys.${p.name}").mkString(", "))
     }
 
   /** Shared shape: unbound and bound in one object (binding is trivial —

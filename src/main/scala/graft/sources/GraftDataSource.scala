@@ -57,31 +57,29 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
 
   private def inferSchemaOnce(options: CaseInsensitiveStringMap): StructType = {
     val conf = GraftDataSource.sessionConf()
-    val files = GraftDataSource.paths(options)
-      .flatMap(GraftDataSource.listPartitionedFiles(conf, _))
+    val views = GraftDataSource.paths(options).map(d => d -> GraftDataSource.liveView(conf, d))
+    val files = views.flatMap(_._2._2.map { case (p, _, part) => (p, part) })
     if (files.isEmpty) new StructType()
     else {
-      // a named table may be absent from the FIRST file (per-table files
-      // sharing a namespace dir): probe footers in parallel batches with
-      // early exit, like the catalog, instead of trusting files.head
       val data = Option(options.get("table")) match {
         case Some(t) =>
           // the catalog's declared-schema marker is authoritative when
           // present: after a RENAME/DROP/WIDEN DDL the footers disagree
           // file-by-file (old spellings, narrower types), and a
           // first-footer-wins inference would hand DML a pre-DDL schema
-          GraftDataSource.paths(options).iterator
-            .flatMap(d => GraftDataSource.markerSchemaAt(conf, d, t))
+          views.iterator
+            .flatMap { case (d, _) => GraftDataSource.markerSchemaAt(conf, d, t) }
             .nextOption()
             .map(graft.format.Evolution.visible)
             .getOrElse {
-          files.map(_._1).grouped(64).map { batch =>
-            GraftDataSource.inParallel(batch) { f =>
-              val r = GraftFileReader.open(f.getFileSystem(conf), f)
-              try r.footer.chunks.flatMap(_.tables).find(_.name == t).map(_.schema)
-              finally r.close()
-            }.collectFirst { case Some(s) => s }
-          }.collectFirst { case Some(s) => s }.getOrElse(
+          // a named table may be absent from the FIRST file (per-table
+          // files sharing a namespace dir): the table index names the
+          // files holding it, and the first one's footer serves the schema
+          views.iterator
+            .flatMap { case (d, v) => GraftDataSource.tableIndex(conf, d, v) }
+            .filter(_.holds(t))
+            .flatMap(GraftDataSource.footerSchema(conf, _, t))
+            .nextOption().getOrElse(
             throw new IllegalArgumentException(
               s"table $t not found in any of ${files.size} files"))
             }
@@ -604,23 +602,27 @@ object GraftDataSource {
     * pair the DV set with a listing of the SAME generation (the scan's
     * consistency snapshot) instead of re-resolving and racing a swap. */
   def liveDvsAt(conf: Configuration, dir: String, resolved: String,
-      table: Option[String]): Map[String, (Path, Long)] = {
-    // `dir` may BE a generation dir (time travel pins one directly) —
-    // its `.dvs` applies and paths resolve against the TABLE root (the
-    // gen dir's parent), exactly like carried data-file references
-    val (genDir, root) =
-      if (resolved != dir) (new Path(resolved), new Path(dir))
-      else if (genIndex(new Path(dir).getName).isDefined)
-        (new Path(dir), new Path(dir).getParent)
-      else return Map.empty
-    val fs = genDir.getFileSystem(conf)
-    val rootUri = root.toUri.getPath.stripSuffix("/")
-    readDvManifest(fs, genDir)
-      .filter { case (t, _, _, _) => table.forall(_ == t) }
-      .map { case (_, rel, dv, n) =>
-        s"$rootUri/$rel" -> (new Path(root, dv), n)
-      }.toMap
-  }
+      table: Option[String]): Map[String, (Path, Long)] =
+    generationRoot(dir, resolved).fold(Map.empty[String, (Path, Long)]) { root =>
+      val genDir = new Path(resolved)
+      val fs = genDir.getFileSystem(conf)
+      val rootUri = root.toUri.getPath.stripSuffix("/")
+      readDvManifest(fs, genDir)
+        .filter { case (t, _, _, _) => table.forall(_ == t) }
+        .map { case (_, rel, dv, n) =>
+          s"$rootUri/$rel" -> (new Path(root, dv), n)
+        }.toMap
+    }
+
+  /** When the view of `dir` whose data dir is `resolved` is a
+    * generation, the table root its manifests' (`.carry`, `.dvs`)
+    * entries are relative to: `dir` under a pointer, or the parent when
+    * `dir` IS a generation dir (time travel pins one directly). None
+    * for a pointerless dir, which has no generation manifests. */
+  private def generationRoot(dir: String, resolved: String): Option[Path] =
+    if (resolved != dir) Some(new Path(dir))
+    else if (genIndex(new Path(dir).getName).isDefined) Some(new Path(dir).getParent)
+    else None
 
   /** Copy the bucket markers of source data dir `dataDir` that `staging`
     * lacks (a rewrite re-creates at most its OWN table's marker), except
@@ -654,14 +656,23 @@ object GraftDataSource {
     listPartitionedSizedAt(conf, dir, new Path(dir, genName).toString,
       viaPointer = false)
 
+  /** The catalog's declared-schema marker of `table` under `dir`, and
+    * the table a marker's file name declares. */
+  def schemaMarkerPath(dir: String, table: String): Path = new Path(dir, s"$MarkerPre$table$MarkerSuf")
+  def schemaMarkerTable(name: String): Option[String] = Some(name)
+    .filter(n => n.startsWith(MarkerPre) && n.endsWith(MarkerSuf))
+    .map(_.stripPrefix(MarkerPre).stripSuffix(MarkerSuf))
+  private val MarkerPre = ".schema_"
+  private val MarkerSuf = ".json"
+
   /** The catalog's declared-schema marker for `table` under `dir`, if
     * present and parseable — the path API consults it so DML reads agree
     * with the catalog's evolved (renamed/dropped/widened) view. Corrupt
-    * or missing markers fall through to footer inference. */
+    * (a crashed DDL) or missing markers fall through to footer inference. */
   def markerSchemaAt(conf: Configuration, dir: String,
       table: String): Option[StructType] =
     try {
-      val marker = new Path(dir, s".schema_$table.json")
+      val marker = schemaMarkerPath(dir, table)
       readMetaText(marker.getFileSystem(conf), marker).flatMap { json =>
         org.apache.spark.sql.types.DataType.fromJson(json) match {
           case s: StructType => Some(s)
@@ -670,51 +681,92 @@ object GraftDataSource {
       }
     } catch { case _: Exception => None }
 
-  /** rel → stats-json for every stats-carrying entry of the LIVE
-    * generation's manifest; empty for pointerless tables or manifests
-    * written before stats rode along. */
-  def liveCarryStats(conf: Configuration, dir: String): Map[String, String] =
-    carryStatsAt(conf, dir, resolveDataDir(conf, dir))
+  /** One listed file of a view's [[tableIndex]]: the per-chunk table
+    * metas it holds (names, row counts, zone maps, and schemas, whose
+    * field metadata only a footer keeps), and the stats text of the
+    * manifest entry that covered it, if one did. */
+  private[sources] case class IndexedFile(path: Path, size: Long,
+      part: Map[String, String], metas: Seq[graft.format.Meta.TableMeta],
+      manifestJson: Option[String]) {
+    def names: Seq[String] = metas.map(_.name).distinct
+    def holds(table: String): Boolean = metas.exists(_.name == table)
+    /** The stats text a generation manifest records for this file: the
+      * covering entry's own text, byte for byte, else the footer's. */
+    def statsJson: String = manifestJson.getOrElse(graft.format.Stats.statsToJson(metas))
+  }
 
-  /** [[liveCarryStats]] of an ALREADY-resolved data dir: a publisher's
-    * source view, or the rebase path's race winner. */
-  private[sources] def carryStatsAt(conf: Configuration, dir: String,
-      resolved: String): Map[String, String] =
-    if (resolved == dir) Map.empty
-    else {
-      val p = new Path(resolved)
-      readCarryManifestFull(p.getFileSystem(conf), p)
-        .flatMap { case (rel, _, js) => js.map(rel -> _) }.toMap
+  /** The table index of one view of `dir` (its data dir and listing, as
+    * [[liveView]] returns them): for each listed file, in listing order,
+    * the tables it holds. A file the view's manifests cover
+    * ([[manifestStats]]) costs no I/O; any other costs one footer open,
+    * run in parallel batches of 64, so a caller that stops at the first
+    * file holding a table opens no footer past that file's batch. */
+  private[sources] def tableIndex(conf: Configuration, dir: String,
+      view: (String, Seq[(Path, Long, Map[String, String])])): Iterator[IndexedFile] = {
+    val covered = manifestStats(conf, dir, view._1)
+    view._2.grouped(64).flatMap { batch =>
+      val opened = inParallel(batch.filterNot(e => covered.contains(e._1.toUri.getPath))) {
+        case (p, _, _) => p -> footerMetas(conf, p)
+      }.toMap
+      batch.map { case (p, size, part) =>
+        covered.get(p.toUri.getPath) match {
+          case Some((metas, js)) => IndexedFile(p, size, part, metas, Some(js))
+          case None => IndexedFile(p, size, part, opened(p), None)
+        }
+      }
     }
+  }
 
-  /** [[liveCarryStats]] PARSED, cached per generation MANIFEST identity
-    * (path + the `.carry` file's mtime and length — an `overwrite` can
-    * delete every generation and a later DML re-create the same
-    * `gen-00001` path with different content, and the late-append fold
-    * can grow a published manifest in place, so the path alone is not
-    * an identity). The parse is shared JVM-wide; without this every
-    * scan re-read and re-parsed the same manifest JSON — AQE and
-    * multi-statement pipelines plan scans constantly, and the per-scan
-    * parse throttled whole pipelines. A stale entry can only LOSE
-    * pruning, never mis-prune (entries are keyed by globally-unique
-    * file names), but the identity key makes even that window one
-    * getFileStatus wide. */
-  def parsedCarryStats(conf: Configuration,
-      dir: String): Map[String, Seq[graft.format.Meta.TableMeta]] = {
-    val resolved = resolveDataDir(conf, dir)
+  /** Every table meta of `p`'s footer: one open. */
+  private[sources] def footerMetas(conf: Configuration,
+      p: Path): Seq[graft.format.Meta.TableMeta] = {
+    val r = GraftFileReader.open(p.getFileSystem(conf), p)
+    try r.footer.chunks.flatMap(_.tables) finally r.close()
+  }
+
+  /** `table`'s schema in indexed file `f`, from its footer: a manifest
+    * stores a schema as DDL, which drops field metadata such as
+    * `graft.fixedWidth` and `graft.logicalType`. */
+  private[sources] def footerSchema(conf: Configuration, f: IndexedFile,
+      table: String): Option[StructType] =
+    f.manifestJson.fold(f.metas)(_ => footerMetas(conf, f.path))
+      .find(_.name == table).map(_.schema)
+
+  /** The manifests of one view of `dir` whose data dir is `resolved`,
+    * PARSED: data-file URI path → (its table metas, the manifest's stats
+    * text for it) for every file they cover. They are the data dir's
+    * `.carry` when it is a generation ([[generationRoot]]: the
+    * pointer's, or a generation-pinned dir's own) and its append-stats
+    * sidecars, which cover what the carry manifest can't: files landed
+    * since the last publish (and EVERYTHING on a never-published plain
+    * table, which has no carry manifest). An entry whose stats don't
+    * parse is left out, so its file costs a footer read, never a wrong
+    * skip.
+    *
+    * Cached per MANIFEST identity (path + the `.carry` file's mtime and
+    * length — an `overwrite` can delete every generation and a later
+    * DML re-create the same `gen-00001` path with different content,
+    * and the late-append fold can grow a published manifest in place,
+    * so the path alone is not an identity). The parse is shared
+    * JVM-wide; without this every scan re-read and re-parsed the same
+    * manifest JSON — AQE and multi-statement pipelines plan scans
+    * constantly, and the per-scan parse throttled whole pipelines. A
+    * stale entry can only LOSE pruning, never mis-prune (entries are
+    * keyed by globally-unique file names), but the identity key makes
+    * even that window one getFileStatus wide. */
+  private[sources] def manifestStats(conf: Configuration, dir: String,
+      resolved: String): Map[String, (Seq[graft.format.Meta.TableMeta], String)] = {
     val p = new Path(resolved)
     val fs = p.getFileSystem(conf)
-    // append-stats sidecars cover what the carry manifest can't: files
-    // landed since the last publish (and EVERYTHING on a never-published
-    // plain table, where resolved == dir and no carry exists)
+    val root = generationRoot(dir, resolved)
     val sidecars = (try fs.listStatus(p).toSeq catch {
       case _: java.io.IOException => Seq.empty
     }).filter(_.getPath.getName.startsWith(AppendStatsPrefix))
-    val carrySt = if (resolved == dir) None
-      else try Some(fs.getFileStatus(new Path(p, CarryManifestName))) catch {
-        case _: java.io.FileNotFoundException => None
+    val carrySt = root.flatMap { _ =>
+      try Some(fs.getFileStatus(new Path(p, CarryManifestName))) catch {
         case _: java.io.IOException => None
       }
+    }
     if (carrySt.isEmpty && sidecars.isEmpty) return Map.empty
     val carryStamp = carrySt.map(s => s"${s.getModificationTime}:${s.getLen}").getOrElse("-")
     val sideStamp = sidecars.map(s =>
@@ -724,26 +776,26 @@ object GraftDataSource {
     if (cached != null) cached
     else {
       manifestParses.incrementAndGet()
+      val rootUri = root.getOrElse(p).toUri.getPath.stripSuffix("/")
       val raw = carrySt.map(_ => readCarryManifestFull(fs, p)
           .flatMap { case (rel, _, js) => js.map(rel -> _) }).getOrElse(Seq.empty) ++
         sidecars.flatMap(s => readStatsSidecar(fs, s.getPath)
           .map { case (rel, _, js) => rel -> js })
       val parsed = inParallel(raw) { case (rel, js) =>
-        graft.format.Stats.statsFromJson(js).map(rel -> _)
+        graft.format.Stats.statsFromJson(js).map(ms => s"$rootUri/$rel" -> (ms, js))
       }.flatten.toMap
       parsedStatsCache.put(key, parsed)
       parsed
     }
   }
-  /** Cache-miss counter for [[parsedCarryStats]] — planning the same live
+  /** Cache-miss counter for [[manifestStats]] — planning the same live
     * view twice must parse the manifest once (PlanningSoakSpec). */
   private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong
   private val parsedStatsCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Map[String, Seq[graft.format.Meta.TableMeta]]](
+    new java.util.LinkedHashMap[String, Map[String, (Seq[graft.format.Meta.TableMeta], String)]](
         64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Map[String, Seq[graft.format.Meta.TableMeta]]])
-          : Boolean = size() > 256
+      override def removeEldestEntry(e: java.util.Map.Entry[String,
+          Map[String, (Seq[graft.format.Meta.TableMeta], String)]]): Boolean = size() > 256
     })
 
   /** Appender's half of the append-vs-rewrite race guard (shared by the
@@ -1626,7 +1678,8 @@ class GraftTable(dirs: Seq[String], schema: StructType, options: CaseInsensitive
     val spark = org.apache.spark.sql.SparkSession.active
     val conf = GraftDataSource.sessionConf()
     val target = Option(options.get("table")).orElse {
-      Generations.liveTableNames(conf, dirs.head) match {
+      GraftDataSource.tableIndex(conf, dirs.head, GraftDataSource.liveView(conf, dirs.head))
+          .flatMap(_.names).toSeq.distinct.sorted match {
         case Seq(only) => Some(only)
         case Seq() => None // marker-only empty table: nothing to delete
         case many => throw new IllegalArgumentException(
@@ -1826,7 +1879,7 @@ class GraftScanBuilder(dirs: Seq[String], fullSchema: StructType, tableOpt: Opti
     // exactly one group, so per-file partials stay exact per group).
     // Everything else declines and scans (chunk skipping still applies;
     // compaction materializes the DVs and re-enables the footer walk).
-    // The proof is zero-I/O: liveDvs + parsedCarryStats are the same
+    // The proof is zero-I/O: liveDvs + manifestStats are the same
     // planning metadata the scan reads anyway; a DV'd file the manifest
     // doesn't cover is simply not provable → decline, never a runtime
     // surprise. The reader re-derives the null-freedom from the
@@ -1839,11 +1892,10 @@ class GraftScanBuilder(dirs: Seq[String], fullSchema: StructType, tableOpt: Opti
       val spellings = n +: chainOf(n)
       dvByDir.forall { case (d, dv) =>
         dv.isEmpty || {
-          val rootUri = new Path(d).toUri.getPath.stripSuffix("/")
-          val stats = GraftDataSource.parsedCarryStats(GraftDataSource.sessionConf(), d)
+          val conf = GraftDataSource.sessionConf()
+          val stats = GraftDataSource.manifestStats(conf, d, GraftDataSource.resolveDataDir(conf, d))
           dv.keys.forall { uriPath =>
-            val rel = uriPath.stripPrefix(rootUri + "/")
-            stats.get(rel).exists { metas =>
+            stats.get(uriPath).exists { case (metas, _) =>
               val tms = metas.filter(t => tableOpt.forall(_ == t.name))
               val present = tms.map(t =>
                 spellings.iterator.map(sp => t.schema.fieldNames.indexOf(sp))
@@ -2112,10 +2164,8 @@ class GraftScan(dirs: Seq[String], required: StructType, tableOpt: Option[String
     * once per scan, and only on first use from a filtered consumer. */
   private lazy val manifestMetas: Map[String, Seq[graft.format.Meta.TableMeta]] =
     dirs.flatMap { d =>
-      val rootUri = new org.apache.hadoop.fs.Path(d).toUri.getPath.stripSuffix("/")
-      GraftDataSource.parsedCarryStats(conf, d).toSeq.map { case (rel, ms) =>
-        (s"$rootUri/$rel", ms)
-      }
+      GraftDataSource.manifestStats(conf, d, GraftDataSource.resolveDataDir(conf, d))
+        .iterator.map { case (uri, (ms, _)) => uri -> ms }
     }.toMap
 
   /** Live delete vectors of this scan's view (merge-on-read DELETE

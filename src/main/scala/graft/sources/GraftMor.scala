@@ -228,11 +228,8 @@ private[sources] class GraftMorBatchWrite(dir: String, table: String,
             graft.format.Dv.merge(graft.format.Dv.decode(bytes), fresh0)
           case None => fresh0
         }
-        val r = graft.format.GraftFileReader.open(livePath.getFileSystem(conf), livePath)
-        val totalRows = try {
-          r.footer.chunks.iterator
-            .flatMap(_.tables.filter(_.name == table)).map(_.numRows.toLong).sum
-        } finally r.close()
+        val totalRows = GraftDataSource.footerMetas(conf, livePath)
+          .filter(_.name == table).map(_.numRows.toLong).sum
         if (merged0.nonEmpty && merged0.last >= totalRows)
           throw new graft.format.OliveFormatException(
             s"delete position ${merged0.last} beyond $rel's $totalRows rows — " +

@@ -141,11 +141,10 @@ class GraftCowScanBuilder(op: GraftRowLevelOperation, dir: String,
   override def build(): Scan = {
     val conf = GraftDataSource.sessionConf()
     val root = new Path(dir)
-    val listed = GraftDataSource.listPartitionedSized(conf, dir)
     // manifest-covered files classify with zero per-file I/O; footers
     // open only for uncovered files and bloom-refinable candidates
-    val files = Generations.classifyForDml(conf, root, listed, table,
-      Some(cond.toSeq.map(graft.format.Stats.FilterPrune)).filter(_.nonEmpty), dir)
+    val files = Generations.classifyForDml(conf, dir, GraftDataSource.liveView(conf, dir),
+      table, Some(cond.toSeq.map(graft.format.Stats.FilterPrune)).filter(_.nonEmpty))
     val cands = files.filter(_.candidate)
     // replacing a file means dropping EVERYTHING in it that the write
     // doesn't re-emit — a file shared with a sibling table can't be

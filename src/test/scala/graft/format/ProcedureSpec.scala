@@ -69,8 +69,17 @@ class ProcedureSpec extends SparkSpec {
         .count(_.getName.endsWith(".graft")) == 1)
       assert(spark.read.format("graft").load(dir).count() == 500)
       intercept[Exception] { spark.sql(s"CALL $cat.sys.compact_to_size('db', 0)") }
-      // unknown procedure refuses loudly
-      intercept[Exception] { spark.sql(s"CALL $cat.sys.nope('db')") }
+      // unknown procedure refuses loudly, naming every registered one
+      val nope = intercept[Exception] { spark.sql(s"CALL $cat.sys.nope('db')") }
+      val catalog = new graft.sources.GraftCatalog()
+      catalog.initialize(cat, new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("root", root)))
+      // Spark wraps the catalog's refusal as the cause of its own error
+      val refusal = Iterator.iterate[Throwable](nope)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      catalog.listProcedures(Array("sys")).foreach { p =>
+        assert(refusal.contains(s"sys.${p.name}"), refusal)
+      }
     }
   }
 

@@ -52,8 +52,9 @@ class DmlRenamePruneSpec extends SparkSpec {
     assert(listed.size == 6, s"want 6 physical files, got ${listed.size}")
     // CURRENT-name key that lives mid-file in ONE pre-rename file: the
     // old-name zone maps must disprove it everywhere else
-    val files = Generations.classifyForDml(conf, new Path(dir), listed, "t",
-      Some(Seq(graft.format.Stats.FilterPrune(EqualTo("val", 15000L)))), dir)
+    val files = Generations.classifyForDml(conf, dir,
+      (GraftDataSource.resolveDataDir(conf, dir), listed), "t",
+      Some(Seq(graft.format.Stats.FilterPrune(EqualTo("val", 15000L)))))
     val cands = files.filter(_.candidate)
     assert(cands.size == 1,
       s"rename must not widen the candidate set: ${cands.map(_.path.getName)}")

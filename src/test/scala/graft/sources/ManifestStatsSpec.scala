@@ -43,7 +43,6 @@ class ManifestStatsSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-mstats-io").toString
     seed(dir)
     FormatOps.deleteWhere(spark, dir, "data", col("id") < 100) // gen-1: 1 rewritten + 7 carried w/ stats
-    val root = new Path(dir)
     val listed = GraftDataSource.listPartitionedSized(conf, dir)
     assert(listed.size == 8)
     val before = graft.format.GraftFileReader.opens.get()
@@ -51,9 +50,10 @@ class ManifestStatsSpec extends SparkSpec {
     // — repartitionByRange boundaries are sampled (seeded by global RDD
     // ids, so they drift ±tens with suite ordering) and a probe at a
     // nominal boundary once straddled two files
-    val files = Generations.classifyForDml(conf, root, listed, "data",
+    val files = Generations.classifyForDml(conf, dir,
+      (GraftDataSource.resolveDataDir(conf, dir), listed), "data",
       Some(Seq(graft.format.Stats.FilterPrune(
-        In("id", (7490L until 7500L).toArray.map(_.asInstanceOf[Any]))))), dir)
+        In("id", (7490L until 7500L).toArray.map(_.asInstanceOf[Any]))))))
     val opened = graft.format.GraftFileReader.opens.get() - before
     val cands = files.filter(_.candidate)
     assert(cands.size == 1, s"want 1 candidate, got ${cands.map(_.path.getName)}")

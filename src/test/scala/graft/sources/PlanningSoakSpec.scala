@@ -121,8 +121,10 @@ class PlanningSoakSpec extends SparkSpec {
   }
 
   test("DML statements list the live view no more often than pinned") {
-    // recursive listings per statement on one 8,000-row, 8-file catalog
-    // table: each publisher takes its source view once, when it stages
+    // recursive listings and footer opens per statement on one
+    // 8,000-row, 8-file catalog table: each publisher takes its source
+    // view once, when it stages, and learns which tables a file holds
+    // from the view's manifests
     val root = Files.createTempDirectory("graft-listings").toString
     spark.conf.set("spark.sql.catalog.soak_ls", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.soak_ls.root", root)
@@ -130,10 +132,13 @@ class PlanningSoakSpec extends SparkSpec {
     spark.range(0, 8000).selectExpr("id AS k", "id % 7 AS v")
       .repartitionByRange(8, col("id")).createOrReplaceTempView("soak_ls_src")
     spark.sql("CREATE TABLE soak_ls.db.t AS SELECT * FROM soak_ls_src")
-    def listings(stmt: => Unit): Long = {
+    // (listings, footer opens)
+    def listings(stmt: => Unit): (Long, Long) = {
       val before = GraftDataSource.listingCalls.get()
+      val opens0 = graft.format.GraftFileReader.opens.get()
       stmt
-      GraftDataSource.listingCalls.get() - before
+      (GraftDataSource.listingCalls.get() - before,
+        graft.format.GraftFileReader.opens.get() - opens0)
     }
     val cowUpdate = listings(spark.sql("UPDATE soak_ls.db.t SET v = -1 WHERE k < 100"))
     // the UPDATE's generation made the namespace pointered
@@ -144,16 +149,74 @@ class PlanningSoakSpec extends SparkSpec {
       finally spark.conf.set("spark.graft.deleteMode", "copy-on-write")
     }
     val deleteWhere = listings(FormatOps.deleteWhere(spark, s"$root/db", "t", col("k") === 200L))
+    val absent = listings(assert(!spark.catalog.tableExists("soak_ls.db.absent")))
+    val show = listings(assert(spark.sql("SHOW TABLES IN soak_ls.db").count() == 2))
     val drop = listings(spark.sql("DROP TABLE soak_ls.db.u"))
     val counts = Seq("pointered CTAS" -> ctas, "COW UPDATE" -> cowUpdate,
       "MoR DELETE" -> morDelete, "FormatOps.deleteWhere" -> deleteWhere,
       "DROP TABLE" -> drop)
-    info(counts.map { case (k, n) => s"$k=$n" }.mkString(", "))
+    info(counts.map { case (k, n) => s"$k=${n._1}" }.mkString(", "))
     // MoR DELETE: the scan's listing and the staged view, which its
     // commit reuses
     val bounds = Map("pointered CTAS" -> 4L, "COW UPDATE" -> 4L, "MoR DELETE" -> 2L,
       "FormatOps.deleteWhere" -> 4L, "DROP TABLE" -> 1L)
-    counts.foreach { case (k, n) => assert(n <= bounds(k), s"$k listed $n times") }
+    counts.foreach { case (k, (n, _)) => assert(n <= bounds(k), s"$k listed $n times") }
     assert(spark.table("soak_ls.db.t").count() == 8000 - 83 - 1)
+
+    // footer opens: (bound, the count when each path probed footers on
+    // its own). From the UPDATE's publish on every file is covered by a
+    // manifest, so a statement opens only the files it reads or
+    // publishes: CTAS its own 8 fresh files, DROP TABLE and the catalog
+    // lookups none
+    val opened = counts ++ Seq("absent tableExists" -> absent, "SHOW TABLES" -> show)
+    info(opened.map { case (k, n) => s"$k=${n._2} opens" }.mkString(", "))
+    val openBounds = Map("pointered CTAS" -> (8L, 32L), "COW UPDATE" -> (20L, 20L),
+      "MoR DELETE" -> (24L, 32L), "FormatOps.deleteWhere" -> (4L, 4L),
+      "DROP TABLE" -> (0L, 8L), "absent tableExists" -> (0L, 16L), "SHOW TABLES" -> (0L, 16L))
+    opened.foreach { case (k, (_, n)) =>
+      val (bound, was) = openBounds(k)
+      assert(n <= bound, s"$k opened $n footers (bound $bound; $was when it probed footers itself)")
+    }
+  }
+
+  test("a path-API table's schema costs one footer open, its keyed deletes few") {
+    // 30 files, each covered by the write's append-stats sidecar. The
+    // schema must come from a footer: the manifest's DDL spelling drops
+    // the fixed-width field metadata
+    import org.apache.spark.sql.types.MetadataBuilder
+    val dir = Files.createTempDirectory("graft-index-opens").toString
+    val fixed = new MetadataBuilder().putLong(graft.format.ColumnEncoder.FixedWidthKey, 8).build()
+    spark.range(0, 30000)
+      .selectExpr("id", "unhex(lpad(hex(id), 16, '0')) AS h")
+      .withColumn("h", col("h").as("h", fixed))
+      .repartitionByRange(30, col("id")).sortWithinPartitions("id")
+      .write.format("graft").option("table", "data").mode("overwrite").save(dir)
+    assert(GraftDataSource.listPartitionedSized(conf, dir).size == 30)
+    def opens(stmt: => Unit): Long = {
+      val before = graft.format.GraftFileReader.opens.get()
+      stmt
+      graft.format.GraftFileReader.opens.get() - before
+    }
+    var schema: org.apache.spark.sql.types.StructType = null
+    val schemaOpens = opens {
+      schema = spark.read.format("graft").option("table", "data").load(dir).schema
+    }
+    assert(schemaOpens == 1, s"load(table).schema opened $schemaOpens footers (was 30)")
+    assert(schema("h").metadata.getLong(graft.format.ColumnEncoder.FixedWidthKey) == 8L,
+      s"the footer's field metadata was lost: ${schema("h").metadata}")
+    val first = opens(FormatOps.deleteWhere(spark, dir, "data", col("id") === 7777L))
+    val again = opens(FormatOps.deleteWhere(spark, dir, "data", col("id") === 17777L))
+    info(s"load(table).schema=$schemaOpens opens, deleteWhere=$first then $again opens")
+    assert(first <= 8, s"the first deleteWhere opened $first footers (was 93)")
+    assert(again <= 8, s"the second deleteWhere opened $again footers (was 64)")
+    assert(spark.read.format("graft").option("table", "data").load(dir).count() == 30000 - 2)
+    // a generation-pinned read (time travel) indexes that generation's own
+    // carry manifest
+    val pinnedOpens = opens {
+      schema = spark.read.format("graft").option("table", "data")
+        .option("generation", "1").load(dir).schema
+    }
+    assert(pinnedOpens == 1, s"a pinned load(table).schema opened $pinnedOpens footers")
+    assert(schema("h").metadata.getLong(graft.format.ColumnEncoder.FixedWidthKey) == 8L)
   }
 }
