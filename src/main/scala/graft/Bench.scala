@@ -86,7 +86,15 @@ object Bench {
     val load = fmt(java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage)
     val skipped = skip.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","errors":${errors.mkString("[", ",", "]")},"loadavg1m":$load,"queries":$qs,"query_loadavg":$loads,"fixture_s":$fixtures,"error_detail":$errorDetail,"skipped":$skipped,"sf":"$sfDir","runs":$reps,"timing":"min_of_$reps"}"""
+    // what the board ran on: the source revision, the cores the JVM
+    // sees, and the local[N] the session was built with
+    val rev = try scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+        .!!(scala.sys.process.ProcessLogger(_ => ())).trim
+      catch { case _: Exception => "unknown" }
+    val host = s""""rev":${Harness.json(if (rev.isEmpty) "unknown" else rev)},""" +
+      s""""nproc":${Runtime.getRuntime.availableProcessors},""" +
+      s""""SPARK_GRAFT_CPUS":${sys.env.get("SPARK_GRAFT_CPUS").map(Harness.json).getOrElse("null")}"""
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","errors":${errors.mkString("[", ",", "]")},"loadavg1m":$load,"queries":$qs,"query_loadavg":$loads,"fixture_s":$fixtures,"error_detail":$errorDetail,"skipped":$skipped,"sf":"$sfDir","runs":$reps,"timing":"min_of_$reps",$host}"""
     println(line)
     // the driver keeps only the LAST 2000 chars of stdout and parses the
     // JSON line it finds there — the full 130-query line is ~3.5 KB and
@@ -94,10 +102,12 @@ object Bench {
     // full line to a committable file, then print a COMPACT line LAST:
     // query names shortened to their unique qNN prefix and 2-decimal
     // seconds, ~1.6 KB — whole inside the tail window, so the driver's
-    // artifact finally parses standalone.
+    // artifact finally parses standalone. The file goes to the working
+    // directory (the checkout `sbt runMain` runs in), never elsewhere.
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"), line + "\n")
-    catch { case _: Throwable => }
+      java.nio.file.Paths.get("BENCH_FULL.json"), line + "\n")
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] BENCH_FULL.json not written: $e") }
     def fmt2(v: Double): String = BigDecimal(v)
       .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
     val shortQs = results.map { case (k, v, _, _, _) =>

@@ -1843,7 +1843,6 @@ object FormatOps {
     * (restore), or any resolution error. */
   private def changesFileGranular(s: SparkSession, dir: String, fromGen: Int,
       toGen: Option[Int], keys: Seq[String]): Option[DataFrame] = try {
-    if (!s.conf.get("spark.graft.cdf.fileGranular", "true").toBoolean) return None
     val conf = s.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(conf)
@@ -1967,7 +1966,9 @@ object FormatOps {
       None
   }
 
-  private def changesFull(s: SparkSession, dir: String, fromGen: Int,
+  /** The row-level diff of two whole generations: what [[changesBetween]]
+    * falls back to, and the reference its file-granular path must equal. */
+  private[graft] def changesFull(s: SparkSession, dir: String, fromGen: Int,
       toGen: Option[Int], keys: Seq[String]): DataFrame = {
     def readGen(g: Option[Int]): DataFrame = {
       val r = s.read.format("graft")

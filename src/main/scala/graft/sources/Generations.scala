@@ -794,23 +794,25 @@ object Generations {
     // generation index and are replaced. A retried publish recomputes
     // with the CURRENT nextGen, so the prefix can never go stale.
     locally {
+      // the staged data files, and the stats sidecars the staging's write
+      // commits left (staging-relative rels)
+      def isSidecar(p: Path) = p.getName.startsWith(GraftDataSource.AppendStatsPrefix)
       def walkOut(p: Path): Seq[(Path, Long)] =
         fs.listStatus(p).toSeq.flatMap { st =>
-          if (st.isFile && st.getPath.getName.endsWith(".graft"))
+          if (st.isFile && (st.getPath.getName.endsWith(".graft") || isSidecar(st.getPath)))
             Seq((st.getPath, st.getLen))
           else if (st.isDirectory) walkOut(st.getPath)
           else Seq.empty
         }
-      val fresh = walkOut(staging)
+      val (sidecars, fresh) = walkOut(staging).partition(e => isSidecar(e._1))
       if (fresh.nonEmpty) {
         val freshNames = fresh.map(_._1.getName).toSet
         val existing = GraftDataSource.readCarryManifestFull(fs, staging)
           .filterNot(e => freshNames.contains(new Path(e._1).getName))
         // stats the write tasks already handed over through their commit
-        // messages (the .staged-stats sidecar, staging-relative rels)
-        // serve directly; only files some other write path staged — or a
-        // torn sidecar line dropped — pay a footer open
-        val staged = GraftDataSource.readStagedStats(fs, staging)
+        // messages serve directly; only files some other write path
+        // staged — or a torn sidecar line dropped — pay a footer open
+        val staged = sidecars.flatMap(e => GraftDataSource.readStatsSidecar(fs, e._1))
           .map { case (rel, _, js) => rel -> js }.toMap
         val entries = GraftDataSource.inParallel(fresh) { case (p, size) =>
           val rel = GraftDataSource.relativePath(staging, p)
@@ -820,9 +822,10 @@ object Generations {
         }
         GraftDataSource.writeCarryManifest(fs, staging, existing ++ entries)
       }
-      // the sidecar never publishes
-      try fs.delete(new Path(staging, GraftDataSource.StagedStatsName), false)
-      catch { case _: java.io.IOException => }
+      // the sidecars never publish
+      sidecars.foreach { e =>
+        try fs.delete(e._1, false) catch { case _: java.io.IOException => }
+      }
     }
     // the clustering record survives every publish: a DML that replaces
     // one candidate file must not erase the CLAIM for the thousands of

@@ -298,10 +298,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     if (findTableSchema(dir, ident.name()).isDefined)
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         Seq(name()) ++ ident.namespace().toSeq :+ ident.name())
+    // the data files and the stats sidecar the CTAS write left: its rels
+    // name files relative to the stage, so they hold wherever the files go
     val staged: Seq[Path] =
       if (fs.exists(stagePath))
-        fs.listStatus(stagePath).toSeq.filter(_.isFile)
-          .map(_.getPath).filter(_.getName.endsWith(".graft"))
+        fs.listStatus(stagePath).toSeq.filter(_.isFile).map(_.getPath)
+          .filter(p => p.getName.endsWith(".graft") ||
+            p.getName.startsWith(GraftDataSource.AppendStatsPrefix))
       else Seq.empty
     val stageMarker = GraftDataSource.bucketMarkerPath(stage, ident.name())
     if (GraftDataSource.resolveDataDir(conf, dir) != dir) {

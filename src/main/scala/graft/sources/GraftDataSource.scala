@@ -420,8 +420,8 @@ object GraftDataSource {
   def readCarryManifestFull(fs: FileSystem, genDir: Path): Seq[(String, Long, Option[String])] =
     readStatsLines(fs, new Path(genDir, CarryManifestName), strict = true)
 
-  /** The one line codec of the stats manifests (`.carry` and the two
-    * stats sidecars): `<bytes>\t<rel>[\t<stats json>]`. */
+  /** The one line codec of the stats manifests (`.carry` and the stats
+    * sidecars): `<bytes>\t<rel>[\t<stats json>]`. */
   private def statsLine(rel: String, bytes: Long, stats: Option[String]): String =
     s"$bytes\t$rel" + stats.map("\t" + _).getOrElse("")
 
@@ -449,55 +449,29 @@ object GraftDataSource {
 
   /** A stats sidecar's lines, each carrying stats: [[readStatsLines]]
     * lenient, and its writers' text. */
-  private def readStatsSidecar(fs: FileSystem, p: Path): Seq[(String, Long, String)] =
+  private[sources] def readStatsSidecar(fs: FileSystem, p: Path): Seq[(String, Long, String)] =
     readStatsLines(fs, p, strict = false).collect { case (rel, sz, Some(js)) => (rel, sz, js) }
   private def statsSidecarText(entries: Seq[(String, Long, String)]): String =
     entries.map { case (rel, sz, js) => statsLine(rel, sz, Some(js)) }.mkString("\n")
 
-  /** Staged-stats sidecar: footer stats of a STAGING dir's own fresh
-    * output, accumulated by [[GraftBatchWrite.commit]] from the write
-    * tasks' commit messages (same line format as the carry manifest,
-    * STAGING-relative rel paths — no generation prefix).
-    * [[Generations.publishStaging]] consumes it to build the
-    * generation's self-covering manifest entries without re-opening a
-    * single footer, then deletes it BEFORE the publish rename — the
-    * sidecar never publishes, and a conflicted retry (rare) simply
-    * falls back to footer reads for its re-built entries. */
-  val StagedStatsName = ".staged-stats"
-
-  def readStagedStats(fs: FileSystem, stagingDir: Path): Seq[(String, Long, String)] =
-    readStatsSidecar(fs, new Path(stagingDir, StagedStatsName))
-
-  /** Merge `entries` ((staging-relative rel, bytes, statsJson)) into the
-    * sidecar. Per-table write commits run sequentially on the driver, so
-    * read-merge-write needs no lock. */
-  def appendStagedStats(fs: FileSystem, stagingDir: Path,
-      entries: Seq[(String, Long, String)]): Unit = {
-    if (entries.isEmpty) return
-    val existing = readStagedStats(fs, stagingDir)
-    val have = existing.map(_._1).toSet
-    val add = entries.filterNot(e => have.contains(e._1))
-    if (add.isEmpty) return
-    AtomicPublish.text(sessionConf(), new Path(stagingDir, StagedStatsName),
-      statsSidecarText(existing ++ add))
-  }
-
-  /** Append-stats sidecars: a PLAIN APPEND's footer stats, written next
-    * to the files it landed (`.stats-append-<uuid>`, same line format as
-    * the staged-stats sidecar, TABLE-ROOT-relative rels). The carry
-    * manifest only covers files that existed at the last publish, so
-    * without these every appended file is a scheduled task until the
-    * next DML/compaction — at 100 TB an append-mostly table would
-    * degrade to full task waves (caught by the r16 sf1 run: q141's
-    * post-rename append scheduled all 32 files). Planning merges them
-    * under the carry entries; they are ADVISORY — a lost or stale
-    * sidecar costs pruning, never correctness. Unique names make
-    * concurrent appends race-free; a fold pass keeps the file count
-    * bounded; an overwrite deletes them with the data; sidecars in
-    * superseded generation dirs age out with the generation (planning
-    * lists only the LIVE data dir). Streaming epochs deliberately skip
-    * the sidecar (one per epoch would proliferate) — their appends stay
-    * reader-level-skipped until a compaction covers them. */
+  /** Stats sidecars (`.stats-append-<uuid>`): every write commit's
+    * footer stats, which the write tasks hand over in their commit
+    * messages, written into the write's data dir with rels relative to
+    * its target dir (the table root, a rewrite's staging, or a CTAS
+    * stage, whose sidecar moves with its files). In a live data dir they
+    * cover what the carry manifest can't — files landed since the last
+    * publish — so an appended file is pruned at planning instead of
+    * becoming a scheduled task; planning merges them under the carry
+    * entries. In a staging, [[Generations.publishStaging]] builds the
+    * self-covering manifest from them and deletes them before the
+    * rename. They are ADVISORY — a lost or stale sidecar costs pruning
+    * or a footer open, never correctness. Unique names make concurrent
+    * writes race-free; a fold pass keeps the file count bounded; an
+    * overwrite deletes them with the data; sidecars in superseded
+    * generation dirs age out with the generation (planning lists only
+    * the LIVE data dir). Streaming epochs skip the sidecar (one per
+    * epoch would proliferate) — their appends stay reader-level-skipped
+    * until a compaction covers them. */
   val AppendStatsPrefix = ".stats-append-"
   private val AppendStatsFoldAt = 64
 
@@ -511,7 +485,7 @@ object GraftDataSource {
     // bound the sidecar count: many appends between publishes fold into
     // one file once they pile up. Planners read-only (a swept input
     // degrades them to footer reads); per-table write commits run
-    // sequentially on the driver, same contract appendStagedStats uses.
+    // sequentially on the driver, so the read-fold-delete needs no lock.
     val all = try fs.listStatus(dataDir).map(_.getPath)
         .filter(_.getName.startsWith(AppendStatsPrefix)).toSeq
       catch { case _: java.io.IOException => Seq.empty }
@@ -3953,68 +3927,59 @@ class GraftBatchWrite(dir: String, schema: StructType, truncate: Boolean,
   }
   @volatile private var resolvedDataDir: String = dir
 
-  /** Append-vs-rewrite race guard, the appender's half (the rewrite's
+  /** One commit for every write. A non-truncating write first runs the
+    * append-vs-rewrite race guard, the appender's half (the rewrite's
     * half is the publish-time late-append fold in
     * [[Generations.publishStaging]]): if the generation pointer moved
     * while this append was writing, its files may sit in a superseded
     * generation the new manifest never saw. The two halves meet at the
     * pointer swap: a file visible before it is folded by the
     * publisher's re-list; one visible after it observes the moved
-    * pointer here. The common case costs exactly one pointer read. */
+    * pointer here. The common case costs exactly one pointer read. It
+    * then merges the tasks' sketch deltas into the ANALYZE sidecar. An
+    * overwrite rebuilt the table root outright and does neither.
+    *
+    * Every write then records its tasks' footer stats in one stats
+    * sidecar in its data dir (see [[GraftDataSource.AppendStatsPrefix]]),
+    * rels relative to `dir`. Re-homed files (pointer moved mid-write)
+    * keep their pre-move paths there — their entries just never match a
+    * listed file, which costs pruning, never correctness. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    if (truncate) {
-      // overwrite rebuilt the table root outright — no race guard, no
-      // sketch merge. Its own fresh output still self-covers with an
-      // append-stats sidecar so the new table plans pruned from write 1
-      val conf0 = GraftDataSource.sessionConf()
-      val root0 = new Path(dir)
-      GraftDataSource.writeAppendStats(conf0, new Path(resolvedDataDir),
-        messages.iterator.collect { case m: GraftCommitMessage => m.statsJson }
-          .flatten.map { case (abs, (sz, js)) =>
-            (GraftDataSource.relativePath(root0, new Path(abs)), sz, js)
-          }.toSeq)
-      return
-    }
     val conf = GraftDataSource.sessionConf()
-    GraftDataSource.ensureAppendVisibility(conf, dir, resolvedDataDir, messages)
-    GraftDataSource.mergeAppendStats(conf, dir, table, messages)
-    // a STAGING target (a rewrite building its next generation): persist
-    // the tasks' footer stats so publishStaging's self-covering manifest
-    // never re-opens a footer this very job just wrote. Appends (table
-    // root target) skip — their stats merge above, and live generations
-    // don't carry the sidecar.
-    val target = new Path(dir)
-    // the name pattern alone could false-positive on a user table whose
-    // root happens to match; a REAL staging dir always carries the
-    // liveness claim claimStaging stamped at creation — require both, so
-    // a coincidental name never accumulates a permanent sidecar in a
-    // live data dir (only publishStaging ever deletes it).
-    if (target.getName.matches("gen-\\d+\\.tmp-.*") &&
-        target.getFileSystem(conf).exists(
-          new Path(target, GraftDataSource.StagingClaimName))) {
-      val entries = messages.iterator.collect {
-        case m: GraftCommitMessage => m.statsJson
-      }.flatten.map { case (abs, (sz, js)) =>
-        (GraftDataSource.relativePath(target, new Path(abs)), sz, js)
-      }.toSeq
-      GraftDataSource.appendStagedStats(target.getFileSystem(conf), target, entries)
-    } else {
-      // PLAIN APPEND into the live data dir: the carry manifest (if any)
-      // predates these files, so without a sidecar every one of them is
-      // a scheduled task for every later filtered scan until the next
-      // publish. Rels are TABLE-ROOT-relative (the same key space the
-      // carry manifest uses). Re-homed files (pointer moved mid-write)
-      // keep their pre-move paths here — their entries just never match
-      // a listed file, which costs pruning, never correctness.
-      val entries = messages.iterator.collect {
-        case m: GraftCommitMessage => m.statsJson
-      }.flatten.map { case (abs, (sz, js)) =>
-        (GraftDataSource.relativePath(target, new Path(abs)), sz, js)
-      }.toSeq
-      GraftDataSource.writeAppendStats(conf, new Path(resolvedDataDir), entries)
+    if (!truncate) {
+      GraftDataSource.ensureAppendVisibility(conf, dir, resolvedDataDir, messages)
+      GraftDataSource.mergeAppendStats(conf, dir, table, messages)
     }
+    val root = new Path(dir)
+    GraftDataSource.writeAppendStats(conf, new Path(resolvedDataDir),
+      messages.iterator.collect { case m: GraftCommitMessage => m.statsJson }
+        .flatten.map { case (abs, (sz, js)) =>
+          (GraftDataSource.relativePath(root, new Path(abs)), sz, js)
+        }.toSeq)
   }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {}
+
+  /** A failed job deletes the files its committed tasks already renamed
+    * into the data dir, which their commit messages name (a partitioned
+    * or bucketed task joins its files' names with `;`), so a failed
+    * append leaves the table as it was and a retry lands one copy.
+    * If the generation pointer moved while the job ran, a publish may
+    * have folded those files into its manifest by reference (the
+    * late-append fold in [[Generations.publishStaging]]); deleting them
+    * would leave the live view naming missing files, so the files stay
+    * and the table keeps the committed tasks' rows. Not covered: a
+    * swap between that pointer read and the deletes, a task whose
+    * result never reached the driver, and what a reader listed while
+    * the job ran. */
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    val conf = GraftDataSource.sessionConf()
+    if (GraftDataSource.resolveDataDir(conf, dir) != resolvedDataDir) return
+    messages.iterator.collect { case m: GraftCommitMessage => m.file.split(";") }
+      .flatten.filter(_.nonEmpty).foreach { f =>
+        val p = new Path(f)
+        try p.getFileSystem(conf).delete(p, false)
+        catch { case _: java.io.IOException => }
+      }
+  }
 }
 
 class GraftWriterFactory(dir: String, schema: StructType, table: String,

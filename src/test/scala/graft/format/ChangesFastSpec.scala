@@ -32,9 +32,7 @@ class ChangesFastSpec extends SparkSpec {
 
   private def both(dir: String, fromGen: Int): (Seq[String], Seq[String]) = {
     val fast = FormatOps.changesBetween(spark, dir, fromGen, None, Seq("k"))
-    spark.conf.set("spark.graft.cdf.fileGranular", "false")
-    val full = try FormatOps.changesBetween(spark, dir, fromGen, None, Seq("k"))
-      finally spark.conf.set("spark.graft.cdf.fileGranular", "true")
+    val full = FormatOps.changesFull(spark, dir, fromGen, None, Seq("k"))
     (canon(fast), canon(full))
   }
 
@@ -150,9 +148,7 @@ class ChangesFastSpec extends SparkSpec {
     try spark.sql("DELETE FROM cdfres.db.t WHERE k % 7 = 0")
     finally spark.conf.set("spark.graft.deleteMode", "copy-on-write")
     val fast = canon(FormatOps.changesBetween(spark, dir, afterDelete, None, Seq("k")))
-    spark.conf.set("spark.graft.cdf.fileGranular", "false")
-    val full = try canon(FormatOps.changesBetween(spark, dir, afterDelete, None, Seq("k")))
-      finally spark.conf.set("spark.graft.cdf.fileGranular", "true")
+    val full = canon(FormatOps.changesFull(spark, dir, afterDelete, None, Seq("k")))
     assert(fast == full, "restore-shaped history must fall back, not diverge")
   }
 }
