@@ -511,8 +511,7 @@ object FormatOps {
     * (shared-namespace files still footer-verify). */
   def verifyTable(s: SparkSession, dir: String,
       table: Option[String] = None): Seq[(String, Boolean, Int, Long, Option[String])] = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      s.sparkContext.hadoopConfiguration)
+    val conf = graft.sources.GraftDataSource.broadcastConf(s.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(dir)
     // live delete vectors ride along: each file's blob is decoded and
     // bounds-checked against the file's ACTUAL row count in the same
@@ -537,7 +536,7 @@ object FormatOps {
           // the broken artifact, not smear both
           var fileRows = -1L // decoded row count, for the DV bound check
           val fileRow = try {
-            val r = graft.format.GraftFileReader.open(p.getFileSystem(conf.value), p)
+            val r = graft.format.GraftFileReader.open(p.getFileSystem(conf.value.value), p)
             try {
               var chunks = 0
               var rows = 0L
@@ -574,7 +573,7 @@ object FormatOps {
             } catch { case _: Exception => dvPath }
             try {
               val dp = new org.apache.hadoop.fs.Path(dvPath)
-              val dfs = dp.getFileSystem(conf.value)
+              val dfs = dp.getFileSystem(conf.value.value)
               val st = dfs.getFileStatus(dp)
               val bytes = new Array[Byte](st.getLen.toInt)
               val in = dfs.open(dp)

@@ -1286,10 +1286,16 @@ object Generations {
     val cvt = org.apache.spark.sql.catalyst.CatalystTypeConverters
     // the OPTIMIZED plan, not the analyzed one: the analyzer leaves type
     // promotion as Cast(Literal) wrappers (`id < CAST(100 AS BIGINT)`)
-    // that only constant folding collapses into translatable literals
-    val condition = df.filter(cond).queryExecution.optimizedPlan.collectFirst {
+    // that only constant folding collapses into translatable literals.
+    // The conjuncts the graft scan consumed as exact filters left the
+    // plan's `Filter`; they are already source filters
+    val plan = df.filter(cond).queryExecution.optimizedPlan
+    val condition = plan.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }
+    val exact = plan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    }.collect { case g: GraftScan => g.exactFilters.filters }.getOrElse(Nil)
     def conjuncts(e: ce.Expression): Seq[ce.Expression] = e match {
       case ce.And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
@@ -1325,7 +1331,7 @@ object Generations {
       case ce.Or(l, r) => for (lf <- toV2(l); rf <- toV2(r)) yield Or(lf, rf)
       case _ => None
     }
-    condition.map(c => conjuncts(c).flatMap(e => toV2(e).toSeq)
+    Some((condition.toSeq.flatMap(conjuncts).flatMap(e => toV2(e).toSeq) ++ exact)
       .map(graft.format.Stats.FilterPrune)).filter(_.nonEmpty)
   }
 

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
@@ -16,7 +17,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In, IsNull}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.format._
@@ -136,6 +137,17 @@ object GraftDataSource {
     org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
+
+  /** A Hadoop conf for executor-side readers and writers, shipped as ONE
+    * broadcast per scan or write job (as Spark's own file scans do): a
+    * conf carried inside the task closure is re-serialized into every
+    * task and re-parsed by every task's deserializer, which cost a
+    * one-task lookup stage more than its own decode. Spark's cleaner
+    * releases the blocks once the factory holding them is gone. */
+  private[graft] def broadcastConf(conf: Configuration = sessionConf())
+      : Broadcast[SerializableConfiguration] =
+    org.apache.spark.sql.SparkSession.active.sparkContext
+      .broadcast(new SerializableConfiguration(conf))
   def path(options: CaseInsensitiveStringMap): String = paths(options).head
 
   /** `load(p)` arrives as option "path"; `load(p1, p2, …)` as a JSON
@@ -1737,7 +1749,7 @@ class GraftScanBuilder(dirs: Seq[String], fullSchema: StructType, tableOpt: Opti
       n: Int): Boolean = {
     // CONSUMED partition filters drop whole files exactly, so every
     // delivered row satisfies them and the k-th threshold stays sound;
-    // any RESIDUAL filter still declines (rows it would drop poison it)
+    // any data filter, residual or exact, still declines
     if (pushed.length != consumed.length || aggSpecs.nonEmpty ||
       n <= 0 || n > (1 << 16)) return false
     orders match {
@@ -1789,17 +1801,28 @@ class GraftScanBuilder(dirs: Seq[String], fullSchema: StructType, tableOpt: Opti
     * its literal string and drift files with no key as null): no
     * residual re-check, and — the real win — aggregates/top-k still
     * push under a partition predicate, so `count(*) WHERE dt = '…'` is
-    * a footer walk of one partition. Everything else stays residual
-    * (Spark re-applies row-level); all pushed copies drive chunk
-    * skipping against footer min/max stats. */
+    * a footer walk of one partition.
+    *
+    * Comparisons, IN-lists and null tests on top-level integral DATA
+    * columns are consumed too ([[ExactFilters]]): the reader applies
+    * them row by row, so Spark's stage code never embeds the key and a
+    * lookup outputs only its matches. Under `spark.sql.cbo.enabled` they
+    * stay residual, since CBO estimates selectivity from Spark's own
+    * `Filter` node. Everything else stays residual (Spark re-applies
+    * row-level); all pushed copies drive chunk skipping against footer
+    * min/max stats. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters
     consumed = filters.filter(consumablePartFilter)
-    filters.filterNot(consumablePartFilter)
+    exact = if (org.apache.spark.sql.internal.SQLConf.get.cboEnabled) ExactFilters.Empty
+      else ExactFilters.select(filters.toSeq, fullSchema, name => !isPartitionCol(name) &&
+        name != GraftDataSource.FileColName && name != GraftDataSource.PosColName)
+    filters.filterNot(f => consumablePartFilter(f) || exact.filters.contains(f))
   }
   override def pushedFilters(): Array[Filter] = pushed
 
   private var consumed: Array[Filter] = Array.empty
+  private var exact: ExactFilters = ExactFilters.Empty
   private def isPartitionCol(name: String): Boolean =
     fullSchema.fields.find(_.name == name).exists(f =>
       f.metadata.contains(GraftDataSource.PartitionColKey) &&
@@ -1828,15 +1851,15 @@ class GraftScanBuilder(dirs: Seq[String], fullSchema: StructType, tableOpt: Opti
     * GROUP BY pushes when
     * every grouping column is PROVEN partition-only (its value comes
     * from the path on every live file): `GROUP BY lang, count(*)` over
-    * a partitioned corpus reads zero data pages. Declined whenever
-    * filters are present: ours stay residual, and a post-scan filter
-    * can't run on pre-aggregated rows. */
+    * a partitioned corpus reads zero data pages. Declined whenever a
+    * data filter is pushed: a residual one can't run on pre-aggregated
+    * rows, and an exact one drops rows the footer partials still count. */
   override def supportCompletePushDown(aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = false
   override def pushAggregation(aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
-    // residual filters can't run on pre-aggregated rows; CONSUMED
-    // partition filters are fully applied by exact file drops, so
-    // `count(*) WHERE dt = '…'` stays a footer walk of one partition
+    // data filters (residual or exact) can't apply to footer partials;
+    // CONSUMED partition filters are fully applied by exact file drops,
+    // so `count(*) WHERE dt = '…'` stays a footer walk of one partition
     if (pushed.length != consumed.length) return false
     // merge-on-read delete vectors invalidate MOST footer-served
     // aggregates: a bound's attaining row may be deleted (MIN/MAX),
@@ -2028,7 +2051,8 @@ class GraftScanBuilder(dirs: Seq[String], fullSchema: StructType, tableOpt: Opti
   override def build(): Scan =
     new GraftScan(dirs, aggSpecs.map(_ => aggSchema).getOrElse(required), tableOpt, pushed,
       limit, aggSpecs, maxFilesPerTrigger, topN, startingOffsets, fileFilter,
-      consumedFilters = consumed, maxBytesPerTrigger = maxBytesPerTrigger)
+      consumedFilters = consumed, maxBytesPerTrigger = maxBytesPerTrigger,
+      exactFilters = exact)
 }
 
 /** Pushed ORDER BY col [, tiebreaks...] LIMIT k: `desc`/`nullsFirst`
@@ -2057,7 +2081,10 @@ class GraftScan(dirs: Seq[String], required: StructType, tableOpt: Option[String
     // reader's own materialization semantics (default-partition = its
     // literal string; a drift file missing the key = null)
     consumedFilters: Array[Filter] = Array.empty,
-    maxBytesPerTrigger: Option[Long] = None) extends Scan with Batch
+    maxBytesPerTrigger: Option[Long] = None,
+    // data filters the builder CONSUMED: the reader applies them row by
+    // row (they also stay in `planFilters`, which drive every skip layer)
+    val exactFilters: ExactFilters = ExactFilters.Empty) extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics
     with SupportsReportPartitioning with SupportsReportOrdering {
 
@@ -2215,11 +2242,11 @@ class GraftScan(dirs: Seq[String], required: StructType, tableOpt: Option[String
     }
     val onDisk = kept.map(_._2).sum
     // exact only when the manifest covers every kept file AND no pushed
-    // operator rewrites the row shape (aggregate/top-k/limit readers
-    // emit fewer rows than the files hold)
+    // operator rewrites the row shape (aggregate/top-k/limit readers and
+    // consumed data filters emit fewer rows than the files hold)
     val table = tableOpt.getOrElse("data")
     val exactRows: Option[Long] =
-      if (aggSpecs.nonEmpty || topN.isDefined || limit >= 0) None
+      if (aggSpecs.nonEmpty || topN.isDefined || limit >= 0 || exactFilters.nonEmpty) None
       else kept.foldLeft(Option(0L)) { (acc, f) =>
         acc.flatMap(n => manifestMetas.get(f._1.toUri.getPath)
           .map(ms => n + ms.filter(_.name == table).map(_.numRows.toLong).sum))
@@ -2424,6 +2451,7 @@ class GraftScan(dirs: Seq[String], required: StructType, tableOpt: Option[String
     s"graft ${dirs.mkString(",")} table=${tableOpt.getOrElse("<single>")} " +
       s"cols=[${required.fieldNames.mkString(",")}] " +
       s"skipFilters=[${filters.mkString(",")}]" +
+      (if (exactFilters.nonEmpty) s" exactFilters=[${exactFilters.filters.mkString(",")}]" else "") +
       (if (limit >= 0) s" limit=$limit" else "") +
       aggSpecs.map(s => s" pushedAggs=[${s.mkString(",")}]").getOrElse("") +
       topN.map(t => s" pushedTopN=[${t.col} ${if (t.desc) "DESC" else "ASC"} k=${t.k}]").getOrElse("")
@@ -2585,8 +2613,7 @@ class GraftScan(dirs: Seq[String], required: StructType, tableOpt: Option[String
         throw new graft.format.OliveFormatException(
           s"delete vectors appeared on ${dirs.mkString(",")} after aggregate " +
             "pushdown was planned (concurrent merge-on-read DELETE); re-run the query")
-      new GraftAggReaderFactory(specs, required, tableOpt,
-        new SerializableConfiguration(GraftDataSource.sessionConf()),
+      new GraftAggReaderFactory(specs, required, tableOpt, GraftDataSource.broadcastConf(),
         dvDeleted = dvByUri.map { case (k, (_, n)) => k -> n })
     case None =>
       // top-k skipping is only sound when EVERY delivered row survives to
@@ -2596,8 +2623,8 @@ class GraftScan(dirs: Seq[String], required: StructType, tableOpt: Option[String
       // license skipping chunks that hold the true top-k
       val effectiveTopN = if (runtimeFilters.isEmpty) topN else None
       new GraftReaderFactory(required, tableOpt, filters, limit,
-        new SerializableConfiguration(GraftDataSource.sessionConf()), effectiveTopN,
-        dvByUri.map { case (k, (p, _)) => k -> p })
+        GraftDataSource.broadcastConf(), effectiveTopN,
+        dvByUri.map { case (k, (p, _)) => k -> p }, exactFilters)
   }
 
   override def supportedCustomMetrics(): Array[CustomMetric] = Array(
@@ -2702,7 +2729,7 @@ case class GraftBucketedPartition(files: Seq[(String, Map[String, String])],
   * constant path value; a column missing from an old file's schema
   * contributes a null partial (Spark's final Min/Max ignore nulls). */
 class GraftAggReaderFactory(specs: Seq[GraftAggSpec], schema: StructType,
-    tableOpt: Option[String], conf: SerializableConfiguration,
+    tableOpt: Option[String], conf: Broadcast[SerializableConfiguration],
     // live-DV cardinality per data-file URI path: COUNT(*) partials
     // subtract it (live rows = footer rows − recorded deletions); only
     // CountStar/group specs are ever planned alongside a non-empty map
@@ -2740,7 +2767,7 @@ class GraftAggReaderFactory(specs: Seq[GraftAggSpec], schema: StructType,
         if (done) return false
         done = true
         val path = new Path(gp.file)
-        val r = GraftFileReader.open(path.getFileSystem(conf.value), path)
+        val r = GraftFileReader.open(path.getFileSystem(conf.value.value), path)
         try {
           val name = tableOpt.getOrElse {
             val names = r.tableNames
@@ -3130,11 +3157,12 @@ class GraftAggReaderFactory(specs: Seq[GraftAggSpec], schema: StructType,
 
 class GraftReaderFactory(required: StructType, tableOpt: Option[String],
     filters: Array[Filter], limit: Int,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     topN: Option[GraftTopN] = None,
     // merge-on-read delete vectors: data-file URI path -> DV blob path
     // (small: one entry per DV'd file; empty for never-deleted tables)
-    dvMap: Map[String, String] = Map.empty) extends PartitionReaderFactory {
+    dvMap: Map[String, String] = Map.empty,
+    exact: ExactFilters = ExactFilters.Empty) extends PartitionReaderFactory {
   private def dvOf(path: Path): Option[String] = dvMap.get(path.toUri.getPath)
   override def supportColumnarReads(partition: InputPartition): Boolean = true
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -3148,8 +3176,8 @@ class GraftReaderFactory(required: StructType, tableOpt: Option[String],
         .map(new TopNSkipper(_, required))
       new GraftConcatReader(bp.files.map { case (f, pv) => () =>
         val path = new Path(f)
-        new GraftPartitionReader(path.getFileSystem(conf.value), path, required,
-          tableOpt, filters, limit, pv, None, topN, shared, dvOf(path))
+        new GraftPartitionReader(path.getFileSystem(conf.value.value), path, required,
+          tableOpt, filters, limit, pv, None, topN, shared, dvOf(path), exact)
       })
     case pp: GraftPackedPartition =>
       // like the bucketed case: one shared skipper, files drained
@@ -3158,14 +3186,14 @@ class GraftReaderFactory(required: StructType, tableOpt: Option[String],
         .map(new TopNSkipper(_, required))
       new GraftConcatReader(pp.files.map { case (f, pv) => () =>
         val path = new Path(f)
-        new GraftPartitionReader(path.getFileSystem(conf.value), path, required,
-          tableOpt, filters, limit, pv, None, topN, shared, dvOf(path))
+        new GraftPartitionReader(path.getFileSystem(conf.value.value), path, required,
+          tableOpt, filters, limit, pv, None, topN, shared, dvOf(path), exact)
       })
     case _ =>
       val gp = partition.asInstanceOf[GraftInputPartition]
       val path = new Path(gp.file)
-      new GraftPartitionReader(path.getFileSystem(conf.value), path, required, tableOpt,
-        filters, limit, gp.partValues, gp.chunkRange, topN, dvPath = dvOf(path))
+      new GraftPartitionReader(path.getFileSystem(conf.value.value), path, required, tableOpt,
+        filters, limit, gp.partValues, gp.chunkRange, topN, dvPath = dvOf(path), exact = exact)
   }
 }
 
@@ -3375,14 +3403,16 @@ class GraftConcatReader(mk: Seq[() => GraftPartitionReader])
 /** Emits one ColumnarBatch per (chunk, table) — chunk size is the batch
   * size, bounded by the writer's flush thresholds. Chunks whose footer
   * stats contradict a pushed filter are skipped without touching their
-  * pages; a pushed limit stops decoding once satisfied. */
+  * pages; `exact` filters then keep only the matching rows of what is
+  * left; a pushed limit stops decoding once satisfied. */
 class GraftPartitionReader(fs: FileSystem, path: Path, required: StructType,
     tableOpt: Option[String], filters: Array[Filter], limit: Int,
     partValues: Map[String, String] = Map.empty,
     chunkRange: Option[(Int, Int)] = None,
     topN: Option[GraftTopN] = None,
     sharedSkipper: Option[TopNSkipper] = None,
-    dvPath: Option[String] = None)
+    dvPath: Option[String] = None,
+    exact: ExactFilters = ExactFilters.Empty)
     extends PartitionReader[ColumnarBatch] {
   private val reader = GraftFileReader.open(fs, path)
   private var skipped = 0L
@@ -3560,18 +3590,20 @@ class GraftPartitionReader(fs: FileSystem, path: Path, required: StructType,
       val (chunk, table, r0, r1, base) = pending.next()
       // page-level limit: when the remaining limit is inside this range,
       // decode only the pages covering the prefix instead of the range
+      // (counted in delivered rows, so never before the exact filters)
       val remaining = if (limit >= 0) limit - emitted else Long.MaxValue
-      deleted match {
+      if (exact.nonEmpty) current = decodeExact(chunk, table, r0, r1, base, remaining)
+      else deleted match {
         case None =>
-          val rowLimit = if (remaining < r1 - r0) Some(remaining.toInt) else None
-          current = decodeWithPartitions(chunk, table, r0, r1, rowLimit, base, None)
+          val end = if (remaining < r1 - r0) r0 + remaining.toInt else r1
+          current = decodeWithPartitions(chunk, table, r0, end, base, None)
         case Some(dels) =>
           val remap = survivorMap(dels, base, r0, r1, remaining)
           if (remap.length == 0) () // range fully deleted: no page touched
           else if (remap.length == r1 - r0)
-            current = decodeWithPartitions(chunk, table, r0, r1, None, base, None)
+            current = decodeWithPartitions(chunk, table, r0, r1, base, None)
           else
-            current = decodeWithPartitions(chunk, table, r0, r1, None, base, Some(remap))
+            current = decodeWithPartitions(chunk, table, r0, r1, base, Some(remap))
       }
     }
     if (current == null) false
@@ -3603,25 +3635,60 @@ class GraftPartitionReader(fs: FileSystem, path: Path, required: StructType,
     out
   }
 
-  /** Decode rows [r0, r1) (trimmed by `rowLimit`); partition-path columns
-    * become constant vectors from the file's `k=v` values. */
+  /** Rows [r0, r1) under the exact filters: decode the filtered columns
+    * over the range's live span, keep the rows that pass — composed with
+    * the delete-vector survivors, so `_pos` keeps physical slots — and
+    * trim to the limit's remainder. Nothing else is decoded when no row
+    * passes; otherwise the other columns decode over the survivors' span
+    * only ([[decodeWithPartitions]]). Null when no row survives. */
+  private def decodeExact(chunk: Meta.ChunkMeta, table: Meta.TableMeta,
+      r0: Int, r1: Int, base: Long, remaining: Long): ColumnarBatch = {
+    val live = deleted match {
+      case None => Array.range(0, r1 - r0)
+      case Some(dels) => survivorMap(dels, base, r0, r1, Long.MaxValue)
+    }
+    if (live.isEmpty) return null
+    val keyCols = reader.decodeTableRange(chunk, table, exact.schema,
+      r0, r0 + live(live.length - 1) + 1)
+    val passed = exact.survivors(keyCols, live)
+    val kept = if (passed.length > remaining) passed.take(remaining.toInt) else passed
+    // filtered columns the query also reads are served from this decode
+    val reused = if (kept.isEmpty) Map.empty[String, ColumnVector]
+      else exact.schema.fieldNames.zipWithIndex.collect {
+        case (n, i) if required.fieldNames.contains(n) => n -> keyCols.column(i)
+      }.toMap
+    exact.schema.fieldNames.zipWithIndex.foreach { case (n, i) =>
+      if (!reused.contains(n)) keyCols.column(i).close()
+    }
+    if (kept.isEmpty) null
+    else decodeWithPartitions(chunk, table, r0, r1, base, Some(kept), reused)
+  }
+
+  /** Decode rows [r0, end), or under `remap` (survivor ordinals relative
+    * to r0) only the survivors' span; partition-path columns become
+    * constant vectors from the file's `k=v` values. `decoded` holds
+    * columns already decoded from r0 (the exact filters' columns). */
   private def decodeWithPartitions(chunk: Meta.ChunkMeta, table: Meta.TableMeta,
-      r0: Int, r1: Int, rowLimit: Option[Int], base: Long,
-      remap: Option[Array[Int]]): ColumnarBatch = {
-    // under a remap the physical decode spans up to the LAST survivor
-    // (a pushed limit already truncated the map in survivorMap)
-    val end = remap.map(m => r0 + m(m.length - 1) + 1)
-      .getOrElse(rowLimit.map(r0 + _).getOrElse(r1))
-    def wrap(b: ColumnarBatch): ColumnarBatch = remap match {
+      r0: Int, end: Int, base: Long, remap: Option[Array[Int]],
+      decoded: Map[String, ColumnVector] = Map.empty): ColumnarBatch = {
+    // under a remap the physical decode spans the first to the LAST
+    // survivor (a pushed limit already truncated the map); survivors
+    // filling that span need no remap at all
+    val lo = remap.map(m => r0 + m(0)).getOrElse(r0)
+    val hi = remap.map(m => r0 + m(m.length - 1) + 1).getOrElse(end)
+    val spanMap: Option[Array[Int]] = remap.filter(_.length != hi - lo)
+      .map(m => if (m(0) == 0) m else m.map(_ - m(0)))
+    def wrapCol(v: ColumnVector, m: Option[Array[Int]]): ColumnVector = m match {
+      case None => v
+      case Some(mm) => new RemappedColumnVector(v, mm)
+    }
+    def wrap(b: ColumnarBatch): ColumnarBatch = spanMap match {
       case None => b
       case Some(m) =>
-        val vs = Array.tabulate(b.numCols)(i =>
-          new RemappedColumnVector(b.column(i), m):
-            org.apache.spark.sql.vectorized.ColumnVector)
-        new ColumnarBatch(vs, m.length)
+        new ColumnarBatch(Array.tabulate(b.numCols)(i => wrapCol(b.column(i), spanMap)), m.length)
     }
     def decode(req: StructType): ColumnarBatch =
-      reader.decodeTableRange(chunk, table, req, r0, end)
+      reader.decodeTableRange(chunk, table, req, lo, hi)
     // `_file` (metadata column) and partition-path columns both become
     // constant vectors, and `_pos` a generated base+ordinal long vector
     // (every batch is a CONTIGUOUS chunk range, so positions are an
@@ -3634,10 +3701,11 @@ class GraftPartitionReader(fs: FileSystem, path: Path, required: StructType,
           partValues.contains(name))
     def constValue(name: String): String =
       if (name == GraftDataSource.FileColName) path.toString else partValues(name)
-    if (!required.fields.exists(f => isGenCol(f.name)))
+    if (decoded.isEmpty && !required.fields.exists(f => isGenCol(f.name)))
       wrap(decode(required))
     else {
-      val dataReq = StructType(required.fields.filterNot(f => isGenCol(f.name)))
+      val dataReq = StructType(required.fields.filterNot(f =>
+        isGenCol(f.name) || decoded.contains(f.name)))
       val dataBatch = decode(dataReq)
       val n = remap.map(_.length).getOrElse(dataBatch.numRows())
       var dataIdx = 0
@@ -3671,13 +3739,10 @@ class GraftPartitionReader(fs: FileSystem, path: Path, required: StructType,
           var i = 0
           while (i < n) { vec.putByteArray(i, bytes, 0, bytes.length); i += 1 }
           vec: org.apache.spark.sql.vectorized.ColumnVector
-        } else {
+        } else if (decoded.contains(f.name)) wrapCol(decoded(f.name), remap)
+        else {
           val v = dataBatch.column(dataIdx); dataIdx += 1
-          remap match {
-            case Some(m) =>
-              new RemappedColumnVector(v, m): org.apache.spark.sql.vectorized.ColumnVector
-            case None => v
-          }
+          wrapCol(v, spanMap)
         }
       }
       new ColumnarBatch(vectors, n)
@@ -3748,7 +3813,7 @@ class GraftWriteBuilder(dir: String, info: LogicalWriteInfo,
           GraftDataSource.positiveIntOption(options, "pagesize", GraftFileWriter.DefaultPageSize),
           Option(options.get("bias")).getOrElse("balanced"),
           GraftDataSource.positiveIntOption(options, "chunkrows", GraftBatchWrite.DefaultChunkRows),
-          partCols, new SerializableConfiguration(GraftDataSource.sessionConf()), bloomCols,
+          partCols, GraftDataSource.broadcastConf(), bloomCols,
           Option(options.get("tables"))
             .map(GraftDataSource.parseTableSplits(_, info.schema())),
           sketchCols = GraftDataSource.readColStats(GraftDataSource.sessionConf(),
@@ -3779,7 +3844,7 @@ class GraftWriteBuilder(dir: String, info: LogicalWriteInfo,
 
 class GraftStreamingWriterFactory(dir: String, schema: StructType, table: String,
     pageSize: Int, bias: String, chunkRows: Int, partCols: Seq[String],
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     bloomCols: Seq[String] = Seq.empty,
     tableSplits: Option[Seq[(String, Seq[Int])]] = None,
     sketchCols: Seq[String] = Seq.empty) extends StreamingDataWriterFactory {
@@ -3787,14 +3852,14 @@ class GraftStreamingWriterFactory(dir: String, schema: StructType, table: String
     val name = Some(f"epoch-$epochId%08d-part-$partitionId%05d.graft")
     if (partCols.isEmpty)
       new GraftDataWriter(dir, schema, table, pageSize, bias, chunkRows,
-        conf.value, partitionId, taskId, fixedName = name, bloomCols = bloomCols,
+        conf.value.value, partitionId, taskId, fixedName = name, bloomCols = bloomCols,
         tableSplits = tableSplits, sketchCols = sketchCols)
     else
       // streaming ingest straight into the hive layout the scan prunes;
       // names stay deterministic per (epoch, partition) within each k=v
       // dir, so epoch retries overwrite there too
       new GraftPartitionedDataWriter(dir, schema, table, pageSize, bias, chunkRows,
-        partCols, conf.value, partitionId, taskId, fixedName = name,
+        partCols, conf.value.value, partitionId, taskId, fixedName = name,
         bloomCols = bloomCols, sketchCols = sketchCols.filterNot(partCols.contains))
   }
 }
@@ -3922,7 +3987,7 @@ class GraftBatchWrite(dir: String, schema: StructType, truncate: Boolean,
       else GraftDataSource.readColStats(conf, dir, table).toSeq.flatMap(
         _.cols.collect { case (n, c) if c.sketch.isDefined => n })
     new GraftWriterFactory(dataDir, schema, table, pageSize, bias, chunkRows,
-      partCols, new SerializableConfiguration(conf), bloomCols, tableSplits,
+      partCols, GraftDataSource.broadcastConf(conf), bloomCols, tableSplits,
       bucketSpec, sortCol, sketchCols)
   }
   @volatile private var resolvedDataDir: String = dir
@@ -3984,7 +4049,7 @@ class GraftBatchWrite(dir: String, schema: StructType, truncate: Boolean,
 
 class GraftWriterFactory(dir: String, schema: StructType, table: String,
     pageSize: Int, bias: String, chunkRows: Int, partCols: Seq[String],
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     bloomCols: Seq[String] = Seq.empty,
     tableSplits: Option[Seq[(String, Seq[Int])]] = None,
     bucketSpec: Option[(String, Int)] = None,
@@ -3994,14 +4059,14 @@ class GraftWriterFactory(dir: String, schema: StructType, table: String,
     bucketSpec match {
       case Some((col, n)) =>
         new GraftBucketedDataWriter(dir, schema, table, pageSize, bias, chunkRows,
-          col, n, conf.value, partitionId, taskId, bloomCols, sortCol, sketchCols)
+          col, n, conf.value.value, partitionId, taskId, bloomCols, sortCol, sketchCols)
       case None if partCols.isEmpty =>
         new GraftDataWriter(dir, schema, table, pageSize, bias, chunkRows,
-          conf.value, partitionId, taskId, bloomCols = bloomCols,
+          conf.value.value, partitionId, taskId, bloomCols = bloomCols,
           tableSplits = tableSplits, sketchCols = sketchCols)
       case None =>
         new GraftPartitionedDataWriter(dir, schema, table, pageSize, bias, chunkRows,
-          partCols, conf.value, partitionId, taskId, bloomCols = bloomCols,
+          partCols, conf.value.value, partitionId, taskId, bloomCols = bloomCols,
           sketchCols = sketchCols)
     }
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 /** Micro-batch streaming source over a graft directory.
   *
@@ -300,7 +299,7 @@ class GraftMicroBatchStream(dir: String, checkpointLocation: String,
     // view; DVs landing after a file's batch was delivered don't
     // retro-apply — the change feed is the retroactive-delete channel
     new GraftReaderFactory(required, tableOpt, Array.empty[Filter], -1,
-      new SerializableConfiguration(conf),
+      GraftDataSource.broadcastConf(conf),
       dvMap = GraftDataSource.liveDvs(conf, dir, tableOpt)
         .map { case (k, (p, _)) => k -> p.toString })
 

@@ -391,7 +391,8 @@ class StreamingSpec extends SparkSpec {
     val schema = StructType(Seq(StructField("id", LongType)))
     val factory = new graft.sources.GraftStreamingWriterFactory(out, schema, "data",
       1 << 20, "balanced", 1 << 17, Seq.empty,
-      new SerializableConfiguration(new org.apache.hadoop.conf.Configuration()))
+      spark.sparkContext.broadcast(
+        new SerializableConfiguration(new org.apache.hadoop.conf.Configuration())))
     def runAttempt(taskId: Long, rows: Range): Unit = {
       val w = factory.createWriter(partitionId = 0, taskId = taskId, epochId = 7)
       rows.foreach(i => w.write(
